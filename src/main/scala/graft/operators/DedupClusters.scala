@@ -19,13 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
-  /** Iterations the most recent [[components]] call ran (driver-side
-    * debug telemetry for the profiling tool — the loop count is the
-    * whole cost model of this operator, so regressions need it
-    * attributable without log spelunking).
-    */
-  @volatile private[graft] var lastIterations: Int = 0
-
   /** Edge-count ceiling for the single-task union-find fast path (~16 MB
     * of (u,v) longs through one repartition(1) exchange; union-find over
     * 1M edges runs in ~100 ms inside one task). Past it, component
@@ -81,7 +74,8 @@ object DedupClusters {
     // rows through 32-partition shuffles × 3 joins × k iterations makes
     // fixed per-shuffle overhead the dominant cost. The count rode the
     // materialization job above.
-    val nEdges = edgeObs.get("n").asInstanceOf[Long]
+    val nEdges =
+      Observed.metric[Long](edgeObs, "DedupClusters.components", "n")
     // SINGLE-TASK union-find fast path (r19 opt, guide §1.2 "the
     // distributed algorithm"): dup-pair graphs are a sliver of the
     // corpus, and below MaxLocalEdges (16 MB of long pairs) the entire
@@ -122,7 +116,6 @@ object DedupClusters {
           ks.iterator.map(k => (k, find(k)))
         }
         .toDF("doc_id", "cluster_id")
-      lastIterations = 0
       edgesRaw.unpersist()
       return out
     }
@@ -189,12 +182,12 @@ object DedupClusters {
         .localCheckpoint() // eager: the observed metric is final once this returns
       // labels only decrease, so label == prev everywhere is a fixed
       // point forever
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      converged = Observed.metric[Long](obs, "DedupClusters.components",
+        "changed") == 0L
       labels.unpersist() // superseded generation
       labels = next
       i += 1
     }
-    lastIterations = i
     edges.unpersist()
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(

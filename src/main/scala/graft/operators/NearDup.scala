@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
@@ -113,35 +112,23 @@ object NearDup {
       .drop(sigCol)
   }
 
-  /** The ⌈(1−τ)·n⌉+1 rare-shingle prefix of each doc under the canonical
-    * (ascending df, shingle) order defined by `dfreq` — the ONE
-    * prefix-filter implementation every SSJoin-style kernel here routes
-    * through (jaccard self-join, cross-set incremental, containment), so
-    * the prefix bound and tie-break order cannot diverge between them.
-    * The guarantee requires every caller to rank ALL sides of its
-    * candidate join by the SAME dfreq table. `d` needs (doc_id, sh, n);
-    * returns (shingle, doc_id, n).
+  /** The ⌈(1−τ)·n⌉+1 prefix of each doc's sorted token array — the ONE
+    * prefix-filter slice every SSJoin-style kernel here takes (jaccard
+    * self-join, cross-set incremental, containment, and the persisted
+    * jaccard index's writer and probe), so the prefix bound cannot
+    * diverge between them. `ids` must hold each doc's DISTINCT tokens in
+    * ascending order under one token order common to every side of the
+    * candidate join; an order-preserving dictionary
+    * ([[dictFromShinglesOrdered]]) makes that the canonical (df, shingle)
+    * order, so the slice is the doc's p rarest shingles. n is the doc's
+    * shingle count. ⌈(1−τ)n⌉+1 dominates the tight n−⌈τn⌉+1 bound even
+    * under fp noise in the multiply (one spare token per doc, never one
+    * short). `d` needs (doc_id, n, ids); returns (tok, doc_id, n).
     */
-  private def rarePrefix(d: DataFrame, dfreq: DataFrame,
-      tau: Double, frozenOrder: Boolean = false): DataFrame = {
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
-    val exploded = d.select(col("doc_id"), col("n"), explode(col("sh")).as("shingle"))
-    // frozenOrder: `dfreq` is a FROZEN snapshot (a persisted corpus index)
-    // that may not cover every probe-side shingle — unseen shingles take
-    // df = 0, which keeps (df, shingle) a consistent TOTAL order across
-    // both sides (the only thing the prefix lemma needs) and ranks them
-    // rarest, where they harmlessly occupy prefix slots (they cannot
-    // collide with any indexed shingle anyway).
-    val ranked =
-      if (frozenOrder)
-        exploded.join(dfreq, Seq("shingle"), "left_outer")
-          .withColumn("df", coalesce(col("df"), lit(0L)))
-      else exploded.join(dfreq, "shingle")
-    ranked
-      .withColumn("r", row_number().over(wDoc))
-      .filter(col("r") <= ceil(lit(1.0 - tau) * col("n")) + 1)
-      .select(col("shingle"), col("doc_id"), col("n"))
-  }
+  private def tokPrefix(d: DataFrame, tau: Double): DataFrame =
+    d.select(explode(slice(col("ids"), lit(1),
+        (ceil(lit(1.0 - tau) * col("n")) + 1).cast("int"))).as("tok"),
+      col("doc_id"), col("n"))
 
   /** Exact-Jaccard verification over two shingle-array columns: appends
     * `jaccard` (rounded to 4, the registry-wide convention) and keeps only
@@ -270,7 +257,8 @@ object NearDup {
       .observe(obs,
         coalesce(sum(col("m")) - count(lit(1)), lit(0L)).as("dupExtra"))
       .localCheckpoint()
-    val dupExtra = obs.get("dupExtra").asInstanceOf[Long]
+    val dupExtra =
+      Observed.metric[Long](obs, "NearDup.exactSetMembers", "dupExtra")
     val reps0 = d0.drop("ck")
     if (dupExtra == 0)
       SetCollapse(
@@ -422,21 +410,21 @@ object NearDup {
       .localCheckpoint()
 
   /** ORDER-PRESERVING dictionary over a (shingle, df) frame (r20): tok
-    * increases with (df ASC, shingle ASC) — the rarePrefix canonical
-    * order — so a doc's p rarest shingles are exactly the p SMALLEST
-    * tokens of its encoded array, and the self-join kernels derive their
-    * prefixes by `slice(sorted ids, 1, p)` off the verify encode instead
-    * of a second explode + df-join + per-doc ranking window over the
-    * whole corpus (the measured hotspot of the family: 2.7 of
-    * jaccardPairs' ~6.5 CPU-s at sf0.1). Order preservation is
+    * increases with (df ASC, shingle ASC) — the canonical prefix order
+    * — so a doc's p rarest shingles are exactly the p SMALLEST tokens of
+    * its encoded array, and every prefix kernel derives its prefix by
+    * [[tokPrefix]] off the verify encode instead of a second explode +
+    * df-join + per-doc ranking window over the whole corpus (the measured
+    * hotspot of the family: 2.7 of jaccardPairs' ~6.5 CPU-s at sf0.1).
+    * Tokens are ≥ 0, which leaves the negative range to [[unseenTok]]. Order preservation is
     * scale-safe: the global orderBy is a parallel range sort and
     * monotonically_increasing_id is (partition-index << 33 | local row)
     * — ascending across range partitions and within each — never a
     * single-task pass. Pinned like dictFromShingles (the id expression
     * must evaluate exactly once).
     */
-  private[operators] def dictFromShinglesOrdered(dfreq: DataFrame): DataFrame =
-    dfreq.orderBy(col("df"), col("shingle"))
+  private[operators] def dictFromShinglesOrdered(shingleDf: DataFrame): DataFrame =
+    shingleDf.orderBy(col("df"), col("shingle"))
       .select(col("shingle"))
       .withColumn("tok", monotonically_increasing_id())
       .localCheckpoint()
@@ -547,21 +535,25 @@ object NearDup {
     * probe expands its rep-level matches through, and `repDocs`
     * (doc_id, sh) is the string-verify view of exactly the ids `banded`
     * can emit. `docs` remains the FULL live member view (the compaction/
-    * rebuild source — a save from it re-collapses freshly). `dict`/`ids`
-    * are the dictionary-encoded verify halves over reps (see
-    * verifySplit); `unencoded` holds the docs the dictionary does not
-    * cover (appends since the last save — empty for a built-in-memory or
-    * freshly-saved index), which verify over strings. Carries its own
-    * banding
-    * parameters so a stream matched against a loaded artifact cannot
-    * silently band with different parameters than the index was built
-    * with.
+    * rebuild source — a save from it re-collapses freshly). `encoded`
+    * holds the dictionary-encoded verify halves over reps (see
+    * verifySplit) of a persisted index; an in-memory index has none and
+    * the probe encodes its candidates instead. `unencoded` holds the docs
+    * the dictionary does not cover (appends since the last save — empty
+    * for a built-in-memory or freshly-saved index), which verify over
+    * strings. Carries its own banding parameters so a stream matched
+    * against a loaded artifact cannot silently band with different
+    * parameters than the index was built with.
     */
   final case class BandIndex(banded: DataFrame, docs: DataFrame,
-      ids: DataFrame, dict: DataFrame, unencoded: DataFrame,
+      encoded: Option[EncodedReps], unencoded: DataFrame,
       members: DataFrame, repDocs: DataFrame,
-      numHashes: Int, bands: Int, rowsPerBand: Int,
-      lazyEncode: Boolean = false)
+      numHashes: Int, bands: Int, rowsPerBand: Int)
+
+  /** A persisted band index's encoded verify halves: `ids`
+    * (doc_id, n, ids) over the shingle→tok dictionary `dict`.
+    */
+  final case class EncodedReps(ids: DataFrame, dict: DataFrame)
 
   /** Build the banded static index in memory (localCheckpoint-backed) —
     * the per-run path; saveBandIndex/loadBandIndex is the build-once
@@ -588,22 +580,16 @@ object NearDup {
       .localCheckpoint()
     // PROBE-TIME LAZY ENCODE (r20, the r19 verdict's lead): the eager
     // build paid a full-corpus vocabulary distinct + a full-corpus encode
-    // checkpoint here, but the only consumer of dict/ids is
+    // checkpoint here, but the only consumer of the encoded halves is
     // matchAgainstBandIndex's verify stage, which reads no encoding
-    // beyond its surviving candidates' — so the in-memory index defers
-    // encoding entirely and the probe builds a CANDIDATE-RESTRICTED
-    // dictionary + encode per call (see matchAgainstBandIndex). The
-    // streaming matcher (StreamingOps.nearDupMatches) never reads
-    // dict/ids from a built index — it verifies over repDocs strings —
-    // and the persisted artifact (saveBandIndex) keeps its eager encoded
-    // halves, where build cost amortizes over every future probe.
-    val spark = staticDocs.sparkSession
-    import spark.implicits._
-    BandIndex(banded, s0.drop("ck"),
-      Seq.empty[(Long, Int, Seq[Long])].toDF("doc_id", "n", "ids"),
-      Seq.empty[(String, Long)].toDF("shingle", "tok"),
-      s.limit(0), members, s,
-      numHashes, bands, rowsPerBand, lazyEncode = true)
+    // beyond its surviving candidates' — so the in-memory index carries
+    // none and the probe builds a CANDIDATE-RESTRICTED dictionary +
+    // encode per call. The streaming matcher (StreamingOps.nearDupMatches)
+    // verifies over repDocs strings, and the persisted artifact
+    // (saveBandIndex) keeps its eager encoded halves, where build cost
+    // amortizes over every future probe.
+    BandIndex(banded, s0.drop("ck"), None, s.limit(0), members, s,
+      numHashes, bands, rowsPerBand)
   }
 
   /** Persist the banded static index under `path` (`banded`, `docs`,
@@ -668,50 +654,28 @@ object NearDup {
       if (keyed.isEmpty) emptyDocs
       else spark.read.parquet(keyed.map(k => s"$path/appends/$k/docs"): _*),
       spark, path, "doc_id")
-    val (numHashes, bands, rowsPerBand) = (meta.getAs[Int]("numHashes"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("rowsPerBand"))
-    if (new java.io.File(s"$path/members/_SUCCESS").isFile) {
-      // r17 collapsed artifact: the base halves are rep-level, so
-      // tombstones apply at MEMBER level only (a dead member must not
-      // hide its class, a dead rep must not hide live members) — the
-      // banded/ids/rep-docs halves load unfiltered and exclusion happens
-      // on the member table every probe expands through. Keyed appends
-      // stay per-doc (identity members), where the two levels coincide.
-      val baseMembers = Tombstones.exclude(
-        spark.read.parquet(s"$path/members"), spark, path, "doc_id")
-      val members = baseMembers.unionByName(
-        appendDocs.select(col("doc_id").as("rep_id"), col("doc_id")))
-      val repBase = spark.read.parquet(s"$path/docs") // reps, unfiltered
-      // the FULL live member view (compaction/rebuild source + stats)
-      val fullDocs = baseMembers
-        .join(repBase.select(col("doc_id").as("rep_id"), col("sh")),
-          "rep_id")
-        .select(col("doc_id"), col("sh"))
-        .unionByName(appendDocs)
-      BandIndex(half("banded"), fullDocs,
-        spark.read.parquet(s"$path/ids"), spark.read.parquet(s"$path/dict"),
-        appendDocs, members, repBase.unionByName(appendDocs),
-        numHashes, bands, rowsPerBand)
-    } else {
-      // legacy (pre-members) artifact: doc-level exclusion, identity
-      // members — loaded behavior degrades to the r16 path, never breaks
-      val allDocs = Tombstones.exclude(half("docs"), spark, path, "doc_id")
-      val (dict, ids, unencoded) =
-        if (new java.io.File(s"$path/dict/_SUCCESS").isFile)
-          (spark.read.parquet(s"$path/dict"),
-            Tombstones.exclude(spark.read.parquet(s"$path/ids"), spark,
-              path, "doc_id"),
-            appendDocs)
-        else
-          (Seq.empty[(String, Long)].toDF("shingle", "tok"),
-            Seq.empty[(Long, Int, Seq[Long])].toDF("doc_id", "n", "ids"),
-            allDocs)
-      BandIndex(
-        Tombstones.exclude(half("banded"), spark, path, "doc_id"),
-        allDocs, ids, dict, unencoded,
-        allDocs.select(col("doc_id").as("rep_id"), col("doc_id")), allDocs,
-        numHashes, bands, rowsPerBand)
-    }
+    // the base halves are rep-level (r17 collapse), so tombstones apply
+    // at MEMBER level only (a dead member must not hide its class, a dead
+    // rep must not hide live members) — the banded/ids/rep-docs halves
+    // load unfiltered and exclusion happens on the member table every
+    // probe expands through. Keyed appends stay per-doc (identity
+    // members), where the two levels coincide.
+    val baseMembers = Tombstones.exclude(
+      spark.read.parquet(s"$path/members"), spark, path, "doc_id")
+    val members = baseMembers.unionByName(
+      appendDocs.select(col("doc_id").as("rep_id"), col("doc_id")))
+    val repBase = spark.read.parquet(s"$path/docs") // reps, unfiltered
+    // the FULL live member view (compaction/rebuild source + stats)
+    val fullDocs = baseMembers
+      .join(repBase.select(col("doc_id").as("rep_id"), col("sh")), "rep_id")
+      .select(col("doc_id"), col("sh"))
+      .unionByName(appendDocs)
+    BandIndex(half("banded"), fullDocs,
+      Some(EncodedReps(spark.read.parquet(s"$path/ids"),
+        spark.read.parquet(s"$path/dict"))),
+      appendDocs, members, repBase.unionByName(appendDocs),
+      meta.getAs[Int]("numHashes"), meta.getAs[Int]("bands"),
+      meta.getAs[Int]("rowsPerBand"))
   }
 
   /** Keys of committed keyed appends, in stable order. `leaf` is the
@@ -871,30 +835,20 @@ object NearDup {
     val d = sC.reps // pinned (or a view over the pin) inside exactSetMembers
     // pass 1: global document frequency = the canonical shingle order.
     // It feeds only the ORDERED dictionary below (one consumer — no pin).
-    val dfreq = d.select(explode(col("sh")).as("shingle"))
+    val shingleDf = d.select(explode(col("sh")).as("shingle"))
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    // TOK-PREFIX (r20, guide §1.2/§2.3 — the prefix ranking window was
-    // the family's measured hotspot: 2.7 of ~6.5 CPU-s and a 5.4 MB
-    // (doc_id, n, shingle, df) exchange at sf0.1): the dictionary is
-    // assigned in (df, shingle) order, so tok order IS the canonical
-    // rarePrefix order and each doc's p = ⌈(1−τ)n⌉+1 rarest shingles are
-    // the first p elements of its SORTED encoded array — the prefix
-    // derives from the verify encode by slice(ids, 1, p), and the
-    // explode + df-join + per-doc row_number window pass is gone
-    // entirely. The prefix lemma needs only SOME fixed total order
-    // common to all sides; an order-preserving injective token map keeps
-    // exactly the (df, shingle) order, and the candidate equi-join on
-    // tok equals the join on shingle (injectivity), so candidates — and
-    // verified output — are unchanged row-for-row (DedupSpec brute
-    // parity). ⌈(1−τ)n⌉+1 dominates the tight n−⌈τn⌉+1 bound even under
-    // fp noise in the multiply (one spare indexed shingle per doc, never
-    // one short). |ids| = n here: the dictionary covers the corpus's own
-    // vocabulary by construction.
-    val dict = dictFromShinglesOrdered(dfreq)
+    // TOK-PREFIX: the dictionary is assigned in (df, shingle) order, so
+    // tok order IS the canonical prefix order and each doc's
+    // p = ⌈(1−τ)n⌉+1 rarest shingles are the first p elements of its
+    // SORTED encoded array (tokPrefix). The prefix lemma needs only SOME
+    // fixed total order common to all sides, and the candidate equi-join
+    // on tok equals the join on shingle (injectivity), so candidates —
+    // and verified output — match a string-keyed prefix join row-for-row
+    // (DedupSpec brute parity). |ids| = n here: the dictionary covers the
+    // corpus's own vocabulary by construction.
+    val dict = dictFromShinglesOrdered(shingleDf)
     val dIds = encodeDocsSorted(d, dict).localCheckpoint()
-    val prefix = dIds.select(col("doc_id"), col("n"),
-      explode(slice(col("ids"), lit(1),
-        (ceil(lit(1.0 - tau) * col("n")) + 1).cast("int"))).as("tok"))
+    val prefix = tokPrefix(dIds, tau)
     val a = prefix.select(col("tok"), col("doc_id").as("id_a"), col("n").as("n_a"))
     val b = prefix.select(col("tok").as("tok_b"), col("doc_id").as("id_b"),
       col("n").as("n_b"))
@@ -974,29 +928,19 @@ object NearDup {
     val c = cC.reps
     // union df = the one canonical order common to both sides; feeds
     // only the ORDERED dictionary (no pin — dictFromShinglesOrdered pins)
-    val dfreq = b.select(explode(col("sh")).as("shingle"))
+    val shingleDf = b.select(explode(col("sh")).as("shingle"))
       .union(c.select(explode(col("sh")).as("shingle")))
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    // TOK-PREFIX (r20 — see jaccardPairs): the union dictionary is
-    // assigned in (df, shingle) order, both sides encode against it
-    // (full coverage — |ids| = n on both sides, the string branch is
-    // gone), and each side's rare prefix is slice(sorted ids, 1, p) off
-    // its encode — the two explode + df-join + per-doc ranking window
-    // passes (the family's measured hotspot) disappear and the candidate
-    // join runs on longs. This supersedes the r19 candidate-restricted
-    // encode here: the encode is now the PREFIX SOURCE (paid before
-    // candidates exist), but it replaces the strictly more expensive
-    // rarePrefix passes over the same exploded rows, and verify reads
-    // the same pinned encode. Encodes pinned: each feeds its prefix
-    // slice AND a verify re-attach join.
-    val dict = dictFromShinglesOrdered(dfreq)
+    // TOK-PREFIX (see jaccardPairs): the union dictionary is assigned in
+    // (df, shingle) order, both sides encode against it (full coverage —
+    // |ids| = n on both sides), and each side's prefix is its tokPrefix;
+    // the candidate join runs on longs. Encodes pinned: each feeds its
+    // prefix slice AND a verify re-attach join.
+    val dict = dictFromShinglesOrdered(shingleDf)
     val bIds = encodeDocsSorted(b, dict).localCheckpoint()
     val cIds = encodeDocsSorted(c, dict).localCheckpoint()
-    def prefixOf(ids: DataFrame) = ids.select(col("doc_id"), col("n"),
-      explode(slice(col("ids"), lit(1),
-        (ceil(lit(1.0 - tau) * col("n")) + 1).cast("int"))).as("tok"))
-    val cand = prefixOf(bIds)
-      .join(prefixOf(cIds).select(col("tok").as("tok_c"),
+    val cand = tokPrefix(bIds, tau)
+      .join(tokPrefix(cIds, tau).select(col("tok").as("tok_c"),
           col("doc_id").as("matched_id"), col("n").as("n_c")),
         col("tok") === col("tok_c") &&
           col("n_c") >= lit(tau) * col("n") - lit(1e-9) &&
@@ -1014,31 +958,75 @@ object NearDup {
       bC.trivial, cC.trivial)
   }
 
+  /** Layout tag of the persisted jaccard artifact, recorded in its
+    * `meta`. The probe and the appender read only this layout; an
+    * artifact without it (the older string-prefix layout, which kept a
+    * document-frequency table) migrates through [[compactJaccardIndex]],
+    * whose source reads only the layout-independent `docs`, `members`
+    * and `docs_appends`.
+    */
+  private val JaccardLayout = "tok-prefix"
+
+  /** Token of a shingle outside a frozen dictionary: a pure function of
+    * the shingle in the reserved range [Long.MinValue, −1]. Dictionary
+    * tokens are ≥ 0, so an unseen shingle ranks rarest (like df 0) and
+    * never equals a dictionary token, and an appended doc and a later
+    * probe that share an unseen shingle get the same token and still
+    * collide. Two unseen shingles may share a token; that can only add
+    * candidates, never lose one: for any token map f,
+    * |f(x) \ f(y)| ≤ |x \ y|, so the ⌈(1−τ)n⌉+1 prefix of the distinct
+    * tokens (n the shingle count) still covers. Verification never reads
+    * these tokens (see verifySplit).
+    */
+  private def unseenTok(shingle: Column): Column =
+    lit(-1L) - xxhash64(shingle).bitwiseAND(lit(Long.MaxValue))
+
+  /** Encode (doc_id, sh) docs against a FROZEN dictionary for the
+    * persisted index's prefix: (doc_id, n, ids) with n = |sh| and ids the
+    * doc's distinct tokens sorted ascending — dictionary tokens for known
+    * shingles, [[unseenTok]] for the rest — the [[tokPrefix]] input.
+    */
+  private def encodeFrozen(d: DataFrame, dict: DataFrame): DataFrame =
+    d.select(col("doc_id"), size(col("sh")).as("n"),
+        explode(col("sh")).as("shingle"))
+      .join(dict, Seq("shingle"), "left_outer")
+      .groupBy(col("doc_id"))
+      .agg(first(col("n")).as("n"), sort_array(collect_set(
+        coalesce(col("tok"), unseenTok(col("shingle"))))).as("ids"))
+
   /** Build-once probe-many artifact for the incremental near-dup (the
     * standing-daily-pipeline shape the jaccardMatchesAgainst scaladoc
     * specifies): freezes ONE canonical shingle order — the corpus document
-    * frequencies — and persists under `path`:
-    *   - `dfreq`  (shingle, df): the frozen canonical order,
-    *   - `prefix` (shingle, doc_id, n): the corpus rare-shingle inverted
-    *     index under that order — the ONLY thing a daily probe joins,
-    *   - `docs`   (doc_id, sh, n): shingle arrays for exact verification
-    *     re-attach of candidate survivors,
+    * frequencies, as the token order of an order-preserving dictionary —
+    * and persists under `path`:
+    *   - `dict`   (shingle, tok): the ordered dictionary over the corpus
+    *     vocabulary; it gives both the frozen prefix order and the
+    *     injective verify encode,
+    *   - `prefix` (tok, doc_id, n): the corpus token-prefix inverted index
+    *     ([[tokPrefix]] at the build threshold) — the ONLY thing a daily
+    *     probe joins; appended docs add their rows here,
+    *   - `ids`    (doc_id, n, ids): the encoded verify half of the base
+    *     corpus (sorted tokens),
+    *   - `docs`   (doc_id, sh, n): shingle arrays — the compaction source,
     *   - `members` (rep_id, doc_id): the exact-set class map (r17 — the
     *     corpus half of the §jaccard-collapse, precomputed ONCE here:
-    *     dfreq/prefix/docs/ids hold one REPRESENTATIVE per identical
+    *     dict/prefix/docs/ids hold one REPRESENTATIVE per identical
     *     shingle-set class, so a 10⁶-member identical class costs the
     *     probe ONE candidate row and one verify, and its true matches
     *     expand by a linear 24 B/row member join),
-    *   - `meta`   (threshold), written LAST (ArtifactPaths.exists commit
-    *     marker).
-    * The prefix guarantee needs only a fixed common total order, so
-    * probing RANKS THE BATCH BY THIS FROZEN ORDER too
-    * (rarePrefix(frozenOrder = true)) — correctness is exact for any
-    * batch, forever. STALENESS is a selectivity concern, not a
-    * correctness one: as true document frequencies drift from the frozen
-    * snapshot, "rare" prefixes slowly stop being rare and candidate
-    * volume grows toward the unfiltered join — rebuild on a cadence (or
-    * when candidate/verified ratios degrade), like any inverted index.
+    *   - `docs_appends` (doc_id, sh): docs appended after the save
+    *     ([[appendToJaccardIndex]]), verified over strings,
+    *   - `meta`   (threshold, layout), written LAST (ArtifactPaths.exists
+    *     commit marker).
+    * The prefix guarantee needs only a fixed common total order, so the
+    * probe and the appender map shingles through this FROZEN dictionary
+    * too (unseen shingles take [[unseenTok]]) and slice with the same
+    * [[tokPrefix]] — correctness is exact for any batch, forever.
+    * STALENESS is a selectivity concern, not a correctness one: as true
+    * document frequencies drift from the frozen snapshot, "rare"
+    * prefixes slowly stop being rare and candidate volume grows toward
+    * the unfiltered join — rebuild on a cadence (or when
+    * candidate/verified ratios degrade), like any inverted index.
     */
   def saveJaccardIndex(corpus: DataFrame, path: String,
       threshold: Double = DefaultThreshold): Unit = {
@@ -1054,25 +1042,37 @@ object NearDup {
     // c0 stays unpinned — exactSetMembers is its only consumer and pins
     // internally (r18 task 3)
     val cC = exactSetMembers(c0)
-    val members = cC.members
     val c = cC.reps // pinned (or a view over the pin) inside exactSetMembers
-    val dfreq = c.select(explode(col("sh")).as("shingle"))
-      .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .localCheckpoint() // feeds the dfreq write, the prefix pass + dict
-    dfreq.write.mode("overwrite").parquet(s"$path/dfreq")
-    rarePrefix(c, dfreq, tau).write.mode("overwrite").parquet(s"$path/prefix")
-    c.write.mode("overwrite").parquet(s"$path/docs")
-    members.write.mode("overwrite").parquet(s"$path/members")
-    clearJaccardAppends(path) // rebuild folds appended docs into the base
-    // dictionary-encoded verify halves (verifySplit): the base corpus
-    // verifies over longs; docs appended later (appendToJaccardIndex)
-    // fall outside this frozen dictionary and verify over strings until
-    // the next rebuild folds them in
-    val dict = dictFromShingles(dfreq)
+    val dict = dictFromShinglesOrdered(
+      c.select(explode(col("sh")).as("shingle"))
+        .groupBy(col("shingle")).agg(count(lit(1)).as("df")))
+    val ids = encodeDocsSorted(c, dict)
+      .localCheckpoint() // feeds the prefix write AND the ids write
     dict.write.mode("overwrite").parquet(s"$path/dict")
-    encodeDocs(c, dict).write.mode("overwrite").parquet(s"$path/ids")
-    Seq(Tuple1(threshold)).toDF("threshold")
+    tokPrefix(ids, tau).write.mode("overwrite").parquet(s"$path/prefix")
+    ids.write.mode("overwrite").parquet(s"$path/ids")
+    c.write.mode("overwrite").parquet(s"$path/docs")
+    cC.members.write.mode("overwrite").parquet(s"$path/members")
+    clearJaccardAppends(path) // rebuild folds appended docs into the base
+    Seq((threshold, JaccardLayout)).toDF("threshold", "layout")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  /** Build threshold of a persisted jaccard index, after checking that
+    * the artifact has the layout this code reads.
+    */
+  private def jaccardThreshold(spark: org.apache.spark.sql.SparkSession,
+      path: String): Double = {
+    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val layout =
+      if (meta.schema.fieldNames.contains("layout"))
+        meta.getAs[String]("layout")
+      else "string-prefix"
+    if (layout != JaccardLayout) throw new IllegalStateException(
+      s"jaccard index at $path has artifact layout '$layout', not " +
+        s"'$JaccardLayout'; migrate it with `IndexMain compact-jaccard " +
+        "<sfDir> <indexDir> dest=<dir>` (NearDup.compactJaccardIndex)")
+    meta.getAs[Double]("threshold")
   }
 
   /** Rebuild-time compaction of non-keyed jaccard appends: a fresh save's
@@ -1087,16 +1087,46 @@ object NearDup {
     rm(new java.io.File(s"$path/docs_appends"))
   }
 
+  /** Incremental index maintenance: append `newDocs` (doc_id, sh) to a
+    * persisted jaccard corpus index (saveJaccardIndex) WITHOUT
+    * recomputing the frozen shingle order. The dictionary stays the
+    * build-time snapshot: the prefix lemma needs only ONE fixed total
+    * order common to every side, so appended docs map their shingles
+    * through it exactly as a probe batch does (unseen shingles take
+    * [[unseenTok]]) and their [[tokPrefix]] rows are lossless for every
+    * future probe at ≥ the build threshold. Drifted true dfs cost
+    * candidate SELECTIVITY (rebuild on a cadence, like any inverted
+    * index), never pairs — NearDupIndexSpec pins appended == rebuilt
+    * matches exactly. Appends land via Spark's parquet commit protocol
+    * (task files stage under _temporary, ignored by readers), so a
+    * crashed append leaves the artifact readable. Caller owns doc_id
+    * uniqueness vs the already-indexed corpus.
+    */
+  def appendToJaccardIndex(newDocs: DataFrame,
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val tauBuild = jaccardThreshold(spark, path) - 0.0001
+    val c = newDocs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh"))
+      .localCheckpoint() // feeds both the prefix pass and the docs append
+    tokPrefix(encodeFrozen(c, spark.read.parquet(s"$path/dict")), tauBuild)
+      .write.mode("append").parquet(s"$path/prefix")
+    // appended docs land OUTSIDE the base docs dir: the build-time
+    // dictionary does not cover all their shingles, so the probe verifies
+    // them over strings (verifySplit's unencoded branch) — keeping them
+    // separable is what lets the encoded base stay on the long-array path
+    c.write.mode("append").parquet(s"$path/docs_appends")
+  }
+
   /** Probe mode of jaccardMatchesAgainst: match `batch` against a LOADED
     * corpus index (saveJaccardIndex) instead of recomputing the union df
-    * and corpus prefix per call. The batch side is ranked by the frozen
-    * dfreq (unseen shingles → df 0; see rarePrefix), prefix lengths
-    * mirror the BUILD threshold (τ_build ≤ τ_probe keeps prefixes at
-    * least as long as τ_probe needs, so the collision guarantee holds),
-    * and length pruning + exact verification run at the PROBE threshold.
-    * Probing below the build threshold is rejected: the persisted corpus
-    * prefixes would be too short for the wider filter and pairs could be
-    * silently lost.
+    * and corpus prefix per call. The batch side maps its shingles through
+    * the frozen dictionary (see encodeFrozen), prefix lengths mirror the
+    * BUILD threshold (τ_build ≤ τ_probe keeps prefixes at least as long
+    * as τ_probe needs, so the collision guarantee holds), and length
+    * pruning + exact verification run at the PROBE threshold. Probing
+    * below the build threshold is rejected: the persisted corpus prefixes
+    * would be too short for the wider filter and pairs could be silently
+    * lost.
     *
     * Output is identical to jaccardMatchesAgainst(batch, corpus) — both
     * are lossless candidate filters in front of the same exact
@@ -1120,6 +1150,22 @@ object NearDup {
       cIds: DataFrame, dict: DataFrame, unencoded: DataFrame,
       bMembers: DataFrame, cMembers: DataFrame, bTrivial: Boolean)
 
+  /** Live appended docs of a persisted jaccard index (tombstones
+    * applied). Appends are per-doc (un-collapsed: each appended doc is
+    * its own member), so member-level and doc-level exclusion coincide
+    * for them.
+    */
+  private def jaccardAppends(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    import spark.implicits._
+    Tombstones.exclude(
+      if (new java.io.File(s"$path/docs_appends").isDirectory)
+        spark.read.parquet(s"$path/docs_appends")
+          .select(col("doc_id"), col("sh"))
+      else Seq.empty[(Long, Seq[String])].toDF("doc_id", "sh"),
+      spark, path, "doc_id")
+  }
+
   /** The candidate half of the loaded probe — shared by the matcher and
     * the selectivity report so the two can never measure different
     * kernels.
@@ -1127,67 +1173,33 @@ object NearDup {
   private def loadedProbeCandidates(batch: DataFrame,
       spark: org.apache.spark.sql.SparkSession, path: String,
       threshold: Double): LoadedJaccard = {
-    val builtThreshold =
-      spark.read.parquet(s"$path/meta").collect()(0).getDouble(0)
+    val builtThreshold = jaccardThreshold(spark, path)
     require(threshold >= builtThreshold,
       s"probe threshold $threshold below build threshold $builtThreshold: " +
         "the persisted corpus prefixes are too short for the wider filter " +
         "(rebuild the index at the lower threshold)")
     val tauBuild = builtThreshold - 0.0001
     val tau = threshold - 0.0001
-    val dfreq = spark.read.parquet(s"$path/dfreq")
-    // r17 collapsed artifact (members dir present): prefix/docs/ids hold
-    // one REP per exact-set class, so tombstones apply at MEMBER level —
-    // a dead member must not hide its class's live members, and a dead
-    // rep must not hide them either. The rep-level halves therefore load
-    // UNFILTERED and exclusion happens on the member table the expansion
-    // joins (a class whose every member died becomes a phantom rep:
-    // candidates verify, then expand to zero rows — bounded waste that
-    // the next rebuild compacts away). A pre-members artifact keeps the
-    // r16 doc-level exclusion.
-    val collapsed = new java.io.File(s"$path/members/_SUCCESS").isFile
-    def liveAtDocLevel(df: DataFrame): DataFrame =
-      if (collapsed) df else Tombstones.exclude(df, spark, path, "doc_id")
-    // dfreq deliberately keeps the FULL frozen order — it is an ordering,
-    // not a membership list, and thinning it would change prefix ranks
-    // for no correctness gain.
-    val cPrefix = liveAtDocLevel(spark.read.parquet(s"$path/prefix"))
-      .select(col("shingle").as("sh_c"), col("doc_id").as("matched_id"),
+    // prefix/docs/ids hold one REP per exact-set class (r17), so
+    // tombstones apply at MEMBER level — a dead member must not hide its
+    // class's live members, and a dead rep must not hide them either. The
+    // rep-level halves therefore load UNFILTERED and exclusion happens on
+    // the member table the expansion joins (a class whose every member
+    // died becomes a phantom rep: candidates verify, then expand to zero
+    // rows — bounded waste that the next rebuild compacts away). The
+    // dictionary keeps the FULL frozen order — it is an ordering, not a
+    // membership list.
+    val dict = spark.read.parquet(s"$path/dict")
+    val cPrefix = spark.read.parquet(s"$path/prefix")
+      .select(col("tok").as("tok_c"), col("doc_id").as("matched_id"),
         col("n").as("n_c"))
-    import spark.implicits._
-    val emptyDocs = Seq.empty[(Long, Seq[String])].toDF("doc_id", "sh")
-    val baseDocs = liveAtDocLevel(spark.read.parquet(s"$path/docs"))
-    // post-save appends (appendToJaccardIndex) live under docs_appends —
-    // outside the frozen build dictionary, they verify over strings.
-    // Appends are per-doc (un-collapsed: each appended doc is its own
-    // member), so member-level and doc-level exclusion coincide for them.
-    val appendedDocs = Tombstones.exclude(
-      if (new java.io.File(s"$path/docs_appends").isDirectory)
-        spark.read.parquet(s"$path/docs_appends")
-      else emptyDocs,
-      spark, path, "doc_id")
+    val appendedDocs = jaccardAppends(spark, path)
     // the corpus member map: persisted classes (member-level tombstone
-    // exclusion) plus identity rows for per-doc appends; a legacy
-    // artifact gets identity members over its already-excluded docs
-    val cMembers =
-      (if (collapsed)
-        Tombstones.exclude(spark.read.parquet(s"$path/members"), spark,
-          path, "doc_id")
-      else baseDocs.select(col("doc_id").as("rep_id"), col("doc_id")))
-        .unionByName(
-          appendedDocs.select(col("doc_id").as("rep_id"), col("doc_id")))
-    // pre-dictionary artifact (no dict dir): everything over strings —
-    // loaded behavior degrades to the r14 path, never breaks
-    val (dict, cIds, unencoded) =
-      if (new java.io.File(s"$path/dict/_SUCCESS").isFile)
-        (spark.read.parquet(s"$path/dict"),
-          liveAtDocLevel(spark.read.parquet(s"$path/ids")),
-          appendedDocs)
-      else
-        (Seq.empty[(String, Long)].toDF("shingle", "tok"),
-          Seq.empty[(Long, Int, Seq[Long])].toDF("doc_id", "n", "ids"),
-          baseDocs.select(col("doc_id"), col("sh"))
-            .unionByName(appendedDocs))
+    // exclusion) plus identity rows for per-doc appends
+    val cMembers = Tombstones.exclude(spark.read.parquet(s"$path/members"),
+        spark, path, "doc_id")
+      .unionByName(
+        appendedDocs.select(col("doc_id").as("rep_id"), col("doc_id")))
     // batch-side collapse, per run (the batch is this run's input);
     // unpinned — exactSetMembers pins internally (r18 task 3)
     val b0 = batch.filter(size(col("sh")) > 0)
@@ -1195,13 +1207,13 @@ object NearDup {
         setClassKey(col("sh")).as("ck"))
     val bC = exactSetMembers(b0)
     val b = bC.reps // pinned (or a view over the pin) inside exactSetMembers
-    val cand = rarePrefix(b, dfreq, tauBuild, frozenOrder = true)
-      .join(cPrefix, col("shingle") === col("sh_c") &&
+    val cand = tokPrefix(encodeFrozen(b, dict), tauBuild)
+      .join(cPrefix, col("tok") === col("tok_c") &&
         col("n_c") >= lit(tau) * col("n") - lit(1e-9) &&
         col("n") >= lit(tau) * col("n_c") - lit(1e-9))
       .select(col("doc_id"), col("matched_id")).distinct()
-    LoadedJaccard(cand, b, cIds, dict, unencoded, bC.members, cMembers,
-      bC.trivial)
+    LoadedJaccard(cand, b, spark.read.parquet(s"$path/ids"), dict,
+      appendedDocs, bC.members, cMembers, bC.trivial)
   }
 
   private def verifiedLoadedMatches(l: LoadedJaccard,
@@ -1213,32 +1225,30 @@ object NearDup {
 
   /** The FULL live docs view of a persisted jaccard index — every live
     * member (class-collapsed base expanded through the member table,
-    * plus per-doc appends), tombstones applied. The compaction source
-    * (IndexMain compact-jaccard): a rebuild from this view re-collapses
-    * freshly and loses nothing.
+    * plus per-doc appends), tombstones applied. Reads only `docs`,
+    * `members` and `docs_appends`, which every artifact layout shares,
+    * so it is the compaction and migration source.
     */
   def loadJaccardDocs(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    import spark.implicits._
-    val emptyDocs = Seq.empty[(Long, Seq[String])].toDF("doc_id", "sh")
-    val appendedDocs = Tombstones.exclude(
-      if (new java.io.File(s"$path/docs_appends").isDirectory)
-        spark.read.parquet(s"$path/docs_appends")
-          .select(col("doc_id"), col("sh"))
-      else emptyDocs,
-      spark, path, "doc_id")
-    val base =
-      if (new java.io.File(s"$path/members/_SUCCESS").isFile)
-        Tombstones.exclude(spark.read.parquet(s"$path/members"), spark,
-            path, "doc_id")
-          .join(spark.read.parquet(s"$path/docs")
-            .select(col("doc_id").as("rep_id"), col("sh")), "rep_id")
-          .select(col("doc_id"), col("sh"))
-      else
-        Tombstones.exclude(spark.read.parquet(s"$path/docs"), spark, path,
-          "doc_id").select(col("doc_id"), col("sh"))
-    base.unionByName(appendedDocs)
-  }
+      path: String): DataFrame =
+    Tombstones.exclude(spark.read.parquet(s"$path/members"), spark, path,
+        "doc_id")
+      .join(spark.read.parquet(s"$path/docs")
+        .select(col("doc_id").as("rep_id"), col("sh")), "rep_id")
+      .select(col("doc_id"), col("sh"))
+      .unionByName(jaccardAppends(spark, path))
+
+  /** Compaction of a persisted jaccard index (IndexMain compact-jaccard):
+    * a fresh save of its live docs into `dest` at the source's build
+    * threshold — tombstones dropped, appends folded in, the frozen order
+    * refreshed from the live corpus. The source may have any artifact
+    * layout, so this is also the migration path to the current one; the
+    * source stays untouched and readable throughout.
+    */
+  def compactJaccardIndex(spark: org.apache.spark.sql.SparkSession,
+      src: String, dest: String): Unit =
+    saveJaccardIndex(loadJaccardDocs(spark, src), dest,
+      spark.read.parquet(s"$src/meta").collect()(0).getAs[Double]("threshold"))
 
   /** Probe-selectivity report for a persisted jaccard index — the
     * operational signal the saveJaccardIndex staleness contract says to
@@ -1274,14 +1284,12 @@ object NearDup {
     * candidate + verify work, then expands to zero rows. Bounded waste,
     * but invisible until now; check-jaccard/check-band trip past a share
     * threshold and compact-* clears it (the fresh save re-collapses from
-    * live members only). Returns (phantomReps, totalReps); (0, 0) for a
-    * pre-members artifact (doc-level exclusion — no phantoms possible).
-    * Works for both the jaccard and band kinds: both persist `members`
-    * (rep_id, doc_id) with doc_id-keyed tombstones.
+    * live members only). Returns (phantomReps, totalReps). Works for both
+    * the jaccard and band kinds: both persist `members` (rep_id, doc_id)
+    * with doc_id-keyed tombstones.
     */
   def phantomRepStats(spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Long) = {
-    if (!new java.io.File(s"$path/members/_SUCCESS").isFile) return (0L, 0L)
     // Appended docs are identity members (rep_id = doc_id) in the live
     // member assembly of both loaders, and their banded/docs rows are
     // just as dead once tombstoned — r18 read only the base member table,
@@ -1333,7 +1341,7 @@ object NearDup {
         Seq("jaccard"), l.bTrivial).count(),
       indexedDocs = l.cMembers.count(),
       prefixRows = spark.read.parquet(s"$path/prefix").count(),
-      vocab = spark.read.parquet(s"$path/dfreq").count(),
+      vocab = spark.read.parquet(s"$path/dict").count(),
       phantomReps = phantom,
       indexedReps = totalReps)
   }
@@ -1365,10 +1373,12 @@ object NearDup {
       .join(index.banded.select(col("bandKey"),
         col("doc_id").as("matched_id")), "bandKey")
       .select(col("doc_id"), col("matched_id")).distinct()
-    val repMatches =
-      if (index.lazyEncode) {
+    val repMatches = index.encoded match {
+      case Some(e) =>
+        verifySplit(cand, b, e.ids, e.dict, index.unencoded, threshold)
+      case None =>
         // PROBE-TIME candidate-restricted encode (r20): the in-memory
-        // index (buildBandIndex) carries no eager dict/ids — build both
+        // index (buildBandIndex) carries no encoded halves — build both
         // here over exactly the docs the verify joins will read. The
         // dictionary covers EVERY shingle of every candidate CORPUS doc
         // by construction, so a batch shingle outside it cannot appear
@@ -1393,45 +1403,9 @@ object NearDup {
           cv.select(explode(col("sh")).as("shingle")).distinct())
         verifySplit(candP, bv, encodeDocs(cv, dict), dict,
           index.unencoded, threshold)
-      } else
-        verifySplit(cand, b, index.ids, index.dict, index.unencoded,
-          threshold)
+    }
     expandCrossMatches(repMatches,
       bC.members, index.members, Seq("jaccard"), bC.trivial)
-  }
-
-  /** Incremental index maintenance: append `newDocs` (doc_id, sh) to a
-    * persisted jaccard corpus index (saveJaccardIndex) WITHOUT
-    * recomputing the frozen shingle order. `dfreq` stays the build-time
-    * snapshot: the prefix lemma needs only ONE fixed total order common
-    * to every side, so appended docs rank their shingles by the frozen
-    * order exactly as a probe batch does (rarePrefix(frozenOrder) —
-    * unseen shingles take df 0) and their prefixes are lossless for
-    * every future probe at ≥ the build threshold. Drifted true dfs cost
-    * candidate SELECTIVITY (rebuild on a cadence, like any inverted
-    * index), never pairs — NearDupIndexSpec pins appended == rebuilt
-    * matches exactly. Appends land via Spark's parquet commit protocol
-    * (task files stage under _temporary, ignored by readers), so a
-    * crashed append leaves the artifact readable. Caller owns doc_id
-    * uniqueness vs the already-indexed corpus.
-    */
-  def appendToJaccardIndex(newDocs: DataFrame,
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val builtThreshold =
-      spark.read.parquet(s"$path/meta").collect()(0).getDouble(0)
-    val tauBuild = builtThreshold - 0.0001
-    val dfreq = spark.read.parquet(s"$path/dfreq")
-    val c = newDocs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
-      .localCheckpoint() // feeds both the prefix pass and the docs append
-    rarePrefix(c, dfreq, tauBuild, frozenOrder = true)
-      .write.mode("append").parquet(s"$path/prefix")
-    // appended docs land OUTSIDE the base docs dir: the build-time
-    // dictionary does not cover their shingles, so the probe verifies
-    // them over strings (verifySplit's unencoded branch) — keeping them
-    // separable is what lets the encoded base stay on the long-array path
-    c.select(col("doc_id"), col("sh"))
-      .write.mode("append").parquet(s"$path/docs_appends")
   }
 
   /** Incremental maintenance for the persisted band index: band `newDocs`
@@ -1542,18 +1516,15 @@ object NearDup {
     val sC = exactSetMembers(d0)
     val d = sC.reps // pinned (or a view over the pin) inside exactSetMembers
     // pass 1: document frequency — feeds only the ORDERED dictionary.
-    val dfreq = d.select(explode(col("sh")).as("shingle"))
+    val shingleDf = d.select(explode(col("sh")).as("shingle"))
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    // TOK-PREFIX (r20 — see jaccardPairs): the ordered dictionary makes
-    // each doc's A-side prefix the first p elements of its sorted
-    // encoded array, and the FULL inverted-index side is the explode of
-    // the same encode — the rarePrefix window pass AND the separate
-    // string inverted index are gone; the candidate join runs on longs.
-    val dict = dictFromShinglesOrdered(dfreq)
+    // TOK-PREFIX (see jaccardPairs): the ordered dictionary makes each
+    // doc's A-side prefix its tokPrefix, and the FULL inverted-index side
+    // is the explode of the same encode; the candidate join runs on longs.
+    val dict = dictFromShinglesOrdered(shingleDf)
     val dIds = encodeDocsSorted(d, dict).localCheckpoint()
-    val prefix = dIds.select(col("doc_id").as("id_a"), col("n").as("n_a"),
-      explode(slice(col("ids"), lit(1),
-        (ceil(lit(1.0 - tau) * col("n")) + 1).cast("int"))).as("tok"))
+    val prefix = tokPrefix(dIds, tau).select(col("doc_id").as("id_a"),
+      col("n").as("n_a"), col("tok"))
     val full = dIds.select(col("doc_id").as("id_b"), col("n").as("n_b"),
       explode(col("ids")).as("tok_b"))
     // DIRECTION pushed into the candidate join (r20 — the r19 shape
@@ -1645,17 +1616,17 @@ object NearDup {
   val DefaultSpanTokens = 50
 
   def tokenSpanPairs(docs: DataFrame, spanTokens: Int = DefaultSpanTokens,
-      maxDf: Int = 20): DataFrame = {
+      maxDf: Int = 20, source: Column = col("text")): DataFrame = {
     require(spanTokens > 0 && maxDf >= 2,
       s"bad span params: spanTokens=$spanTokens maxDf=$maxDf")
     // one-pass native window keys (r20): bit-identical 128-bit keys to
     // the explode(wordShingles) → double-xxhash pipeline, without a
-    // window string per position (graft.plans.SpanKeys). Accepts text or
-    // a pre-tokenized array (the spanMaximalPairs ladder passes toks).
-    val winSrc = if (docs.columns.contains("toks")) col("toks") else col("text")
+    // window string per position (graft.plans.SpanKeys). `source` is the
+    // text or a pre-tokenized array (the spanMaximalPairs ladder passes
+    // its toks).
     val wins = docs
       .select(col("doc_id"),
-        explode(graft.functions.TextFunctions.spanKeys(winSrc, spanTokens))
+        explode(graft.functions.TextFunctions.spanKeys(source, spanTokens))
           .as("wh"))
     val shared = wins.groupBy(col("wh")).agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2 && col("nd") <= maxDf)
@@ -1756,7 +1727,7 @@ object NearDup {
     val rungs = (0 until levels).map { l =>
       val w = baseTokens << l
       tokenSpanPairs(toksDf.filter(size(col("toks")) >= w), spanTokens = w,
-          maxDf = maxDf)
+          maxDf = maxDf, source = col("toks"))
         .select(col("id_a"), col("id_b"), lit(w).as("w"), col("n_shared"))
     }
     rungs.reduce(_.unionAll(_))

@@ -527,10 +527,11 @@ case class SpanKeys(child: Expression, k: Int)
           .split("\\s+").withFilter(_.nonEmpty)
           .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       case _ =>
+        // null elements are skipped, as MinHashSig does (and as
+        // concat_ws would when joining the tokens back into text)
         val arr = input.asInstanceOf[ArrayData]
-        Array.tabulate(arr.numElements()) { i =>
-          arr.getUTF8String(i).getBytes
-        }
+        (0 until arr.numElements()).filterNot(arr.isNullAt)
+          .map(i => arr.getUTF8String(i).getBytes).toArray
     }
     if (toks.isEmpty) return new GenericArrayData(Array.empty[Any])
     val w = math.min(k, toks.length)

@@ -748,7 +748,7 @@ object TextQueries extends QueryModule {
            ORDER BY doc_id, matched_id"""))
 
   // Loaded-index twin of q_dedup_jaccard_incremental (VERDICT r6 #2):
-  // the corpus rare-prefix inverted index + frozen canonical order are
+  // the corpus token-prefix inverted index + frozen canonical order are
   // built ONCE into a fingerprint-keyed artifact
   // (NearDup.saveJaccardIndex), and the daily batch probes the LOADED
   // index (jaccardMatchesAgainstLoaded) — no per-call union-df recompute,
@@ -763,7 +763,7 @@ object TextQueries extends QueryModule {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
       val path = ArtifactPaths.keyed("jacidx", s"$d/documents.parquet",
-        "tau=0.8,shingle=3,corpus=mod10ne0,v=2")
+        "tau=0.8,shingle=3,corpus=mod10ne0,v=3")
       if (!ArtifactPaths.exists(path))
         NearDup.saveJaccardIndex(docs.filter(col("doc_id") % 10 =!= 0), path)
       NearDup.jaccardMatchesAgainstLoaded(
@@ -790,7 +790,7 @@ object TextQueries extends QueryModule {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
       val path = ArtifactPaths.keyed("jacidx", s"$d/documents.parquet",
-        "tau=0.8,shingle=3,corpus=mod10ne0,deleted=mod10eq2,v=2")
+        "tau=0.8,shingle=3,corpus=mod10ne0,deleted=mod10eq2,v=3")
       // two-phase build (save, then delete): commit on a marker written
       // after BOTH phases, same posture as the appended twin — a crash
       // between save and delete must not leave a complete-LOOKING index
@@ -835,7 +835,7 @@ object TextQueries extends QueryModule {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
       val path = ArtifactPaths.keyed("jacidx", s"$d/documents.parquet",
-        "tau=0.8,shingle=3,corpus=mod10gt1,appended=mod10eq1,v=2")
+        "tau=0.8,shingle=3,corpus=mod10gt1,appended=mod10eq1,v=3")
       // two-phase build → the save's own meta marker is not enough: a
       // crash between save and append would leave a complete-LOOKING
       // index missing day-1. The build commits on a marker written after

@@ -32,7 +32,9 @@ import graft.operators.{ArtifactPaths, BloomGate, BpeTrainer, IvfIndex, NearDup,
   *     kinds rewrite codes/cells under the frozen codebooks/centroids/
   *     grid; jaccard/band re-derive from the live docs half — for
   *     jaccard that also REFRESHES the frozen df order from the live
-  *     corpus, resetting accumulated drift (the check-jaccard remedy).)
+  *     corpus, resetting accumulated drift (the check-jaccard remedy),
+  *     and rewrites a jaccard artifact of an older layout, which the
+  *     probe rejects, into the current one.)
   *   build-bloom | append-bloom | query-bloom | delete-bloom |
   *     compact-bloom   (the seventh index kind: exact-dedup Bloom gate —
   *     persisted filter + corpus keys. Bloom admits no deletes, so
@@ -474,12 +476,7 @@ object IndexMain {
             val (grid, codes) = Sq8Index.load(spark, dir)
             Sq8Index.save(dest, grid, codes)
           case "compact-jaccard" =>
-            val thr = spark.read.parquet(s"$dir/meta").collect()(0).getDouble(0)
-            // the FULL live member view (class-collapsed base expanded
-            // through the member table, plus appends, tombstones applied)
-            // — the rebuild re-collapses freshly and loses nothing
-            NearDup.saveJaccardIndex(NearDup.loadJaccardDocs(spark, dir),
-              dest, thr)
+            NearDup.compactJaccardIndex(spark, dir, dest)
           case "compact-band" =>
             val idx = NearDup.loadBandIndex(spark, dir)
             NearDup.saveBandIndex(idx.docs, dest, idx.numHashes, idx.bands,

@@ -119,4 +119,18 @@ class CensusBoundSpec extends SparkSpec {
     Tombstones.deleteIds(dir, Seq(300L).toDF("doc_id"))
     NearDup.phantomRepStats(spark, dir) shouldBe ((1L, 3L))
   }
+
+  test("an observation whose plan never ran fails with the operator's " +
+      "name instead of blocking") {
+    val sp = spark; import sp.implicits._
+    val obs = org.apache.spark.sql.Observation("neverRan")
+    Seq(1L, 2L).toDF("x").observe(obs, count(lit(1)).as("n")) // no action
+    val e = intercept[IllegalStateException](Observed.metric[Long](obs,
+      "CensusBoundSpec", "n", scala.concurrent.duration.Duration(200, "ms")))
+    e.getMessage should (include("CensusBoundSpec") and include("neverRan"))
+    // the same read after an action returns the metric
+    val ran = org.apache.spark.sql.Observation("ran")
+    Seq(1L, 2L).toDF("x").observe(ran, count(lit(1)).as("n")).collect()
+    Observed.metric[Long](ran, "CensusBoundSpec", "n") shouldBe 2L
+  }
 }

@@ -331,4 +331,66 @@ class NearDupIndexSpec extends SparkSpec {
     // the planted base and appended pairs both surfaced (jaccard 19/21)
     loaded.map(m => (m._1, m._2)) should contain allOf ((1L, 101L), (2L, 201L))
   }
+
+  test("token prefix: probe shingles absent from the build and appended " +
+      "shingles a later probe shares == recompute == rebuilt index") {
+    def words(p: String, from: Int, to: Int) = (from to to).map(i => s"$p$i")
+    val day0 = docsDf(
+      (101L, words("b", 1, 30).mkString(" ")),
+      (102L, words("c", 1, 30).mkString(" ")))
+    // appended: one doc of entirely unseen vocabulary, one half unseen
+    val day1 = docsDf(
+      (201L, words("z", 1, 30).mkString(" ")),
+      (202L, (words("b", 1, 15) ++ words("y", 1, 15)).mkString(" ")))
+    val batch = docsDf(
+      (1L, (words("b", 1, 29) :+ "fresh1").mkString(" ")), // vs base
+      (2L, (words("z", 1, 29) :+ "fresh2").mkString(" ")), // vs unseen append
+      (3L, (words("b", 1, 15) ++ words("y", 1, 14) :+ "fresh3")
+        .mkString(" ")), // vs the mixed append
+      (4L, words("q", 1, 30).mkString(" "))) // unseen everywhere
+    val dir = tmpDir("graft_jacidx_unseen").toString
+    NearDup.saveJaccardIndex(day0, dir)
+    NearDup.appendToJaccardIndex(day1, spark, dir)
+    val loaded = matches(NearDup.jaccardMatchesAgainstLoaded(batch, spark, dir))
+    loaded shouldBe matches(
+      NearDup.jaccardMatchesAgainst(batch, day0.unionByName(day1)))
+    val rebuilt = tmpDir("graft_jacidx_unseen_rebuilt").toString
+    NearDup.saveJaccardIndex(day0.unionByName(day1), rebuilt)
+    loaded shouldBe matches(
+      NearDup.jaccardMatchesAgainstLoaded(batch, spark, rebuilt))
+    loaded.map(m => (m._1, m._2)) shouldBe Set((1L, 101L), (2L, 201L), (3L, 202L))
+  }
+
+  test("an artifact without the layout marker is rejected with the " +
+      "compaction command, and compact-jaccard migrates it") {
+    val sp = spark; import sp.implicits._
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id"),
+        graft.functions.TextFunctions.wordShingles(col("text"), 3).as("sh"))
+    val day0 = docs.filter(col("doc_id") % 10 > 1)
+    val day1 = docs.filter(col("doc_id") % 10 === 1)
+    val batch = docs.filter(col("doc_id") % 10 === 0)
+    val dir = tmpDir("graft_jacidx_unmarked").toString
+    NearDup.saveJaccardIndex(day0, dir)
+    NearDup.appendToJaccardIndex(day1, spark, dir)
+    val dead = docs.filter(col("doc_id") % 20 === 2).select(col("doc_id"))
+    Tombstones.deleteIds(dir, dead)
+    // the meta of the string-prefix layout: the threshold alone
+    Seq(Tuple1(NearDup.DefaultThreshold)).toDF("threshold")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    val e = intercept[IllegalStateException](
+      NearDup.jaccardMatchesAgainstLoaded(batch, spark, dir))
+    e.getMessage should include("IndexMain compact-jaccard")
+    intercept[IllegalStateException](
+      NearDup.appendToJaccardIndex(day1, spark, dir))
+    val dest = tmpDir("graft_jacidx_migrated").toString
+    NearDup.compactJaccardIndex(spark, dir, dest)
+    val fresh = tmpDir("graft_jacidx_fresh").toString
+    NearDup.saveJaccardIndex(
+      day0.unionByName(day1).join(dead, Seq("doc_id"), "left_anti"), fresh)
+    val migrated = matches(NearDup.jaccardMatchesAgainstLoaded(batch, spark, dest))
+    migrated shouldBe matches(
+      NearDup.jaccardMatchesAgainstLoaded(batch, spark, fresh))
+    migrated should not be empty
+  }
 }

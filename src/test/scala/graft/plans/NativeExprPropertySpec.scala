@@ -283,6 +283,16 @@ class NativeExprPropertySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getStruct(1).getLong(0),
           r.getStruct(1).getLong(1))).toSet
       fromToks shouldBe legacy
+      // the same tokens with a null element after each one: nulls are
+      // skipped, never an NPE
+      val withNulls = df.select(col("doc_id"),
+          explode(spanKeys(flatten(transform(
+            filter(split(col("text"), "\\s+"),
+              t => org.apache.spark.sql.functions.length(t) > lit(0)),
+            t => array(t, lit(null).cast("string")))), k)).as("wh"))
+        .collect().map(r => (r.getLong(0), r.getStruct(1).getLong(0),
+          r.getStruct(1).getLong(1))).toSet
+      withNulls shouldBe legacy
     }
   }
 

@@ -309,6 +309,22 @@ class DedupSpec extends SparkSpec {
     NearDup.tokenSpanPairs(docsDf(boiler: _*)).count() shouldBe 15L
   }
 
+  test("token spans read the text column even when the frame also " +
+      "carries an unrelated `toks` column") {
+    import graft.operators.NearDup
+    val run = (1 to 50).map(i => s"shared$i").mkString(" ")
+    val docs = docsDf((1L, s"intro $run outro"), (2L, s"lead-in $run tail"),
+      (3L, (1 to 60).map(i => s"noise$i").mkString(" ")))
+    // the same 60 tokens on every row: read as the window source, they
+    // would pair all three docs
+    val withToks = docs.withColumn("toks",
+      split(lit((1 to 60).map(i => s"t$i").mkString(" ")), " "))
+    def pairs(df: org.apache.spark.sql.DataFrame) = NearDup.tokenSpanPairs(df)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    pairs(withToks) shouldBe pairs(docs)
+    pairs(docs).map(p => (p._1, p._2)) shouldBe Set((1L, 2L))
+  }
+
   test("minhash band-key df cap: a sub-threshold boilerplate clique is " +
       "trimmed (bounded candidates, budget reported); true near-dup " +
       "pairs survive through their own uncrowded keys (r18 skew-gate " +
