@@ -151,7 +151,8 @@ object PipelineMain {
       enriched.select(col("doc_id"), col("n_bpeish").as("n_tokens")),
       budget = 512, numPartitions = 8).toDF()
     packs.write.mode("overwrite").parquet(s"$outDir/packs")
-    val nPacks = spark.read.parquet(s"$outDir/packs")
+    // read-backs take the written frame's schema: no inference job
+    val nPacks = spark.read.schema(packs.schema).parquet(s"$outDir/packs")
       .select(countDistinct(col("pack_id"))).head().getLong(0)
 
     // 5.5 balanced shard manifest: docs ranked by token count descending
@@ -181,7 +182,11 @@ object PipelineMain {
 
     // 6. partitioned write
     enriched.write.mode("overwrite").partitionBy("lang").parquet(s"$outDir/docs")
-    val written = spark.read.parquet(s"$outDir/docs").count()
+    // a partitioned read puts the partition column last
+    val docsSchema = org.apache.spark.sql.types.StructType(
+      enriched.schema.filterNot(_.name == "lang") :+ enriched.schema("lang"))
+    val written = spark.read.schema(docsSchema).parquet(s"$outDir/docs")
+      .count()
     val meanNll = enriched.agg(round(avg(col("lm_nll")), 4)).head().getDouble(0)
     afterExact.unpersist(); afterNear.unpersist(); train.unpersist()
     enriched.unpersist()

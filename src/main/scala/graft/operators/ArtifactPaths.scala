@@ -1,12 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.SparkSession
+
 /** Deterministic artifact directories for build-once / load-many index
   * artifacts (PQ/IVF codebooks + codes, near-dup prefix and band indexes).
   *
   * The registry's loaded-index queries must derive their artifact location
   * from the query inputs alone, so directories are keyed on the SOURCE
-  * file identity (path | size | mtime — the same staleness key as the
-  * streaming replay stager, streaming/StreamMain.scala) plus the build
+  * identity (`Tables.sourceIdentity`: path | size | mtime of each file —
+  * the same staleness key as `Tables`' relation cache and the streaming
+  * replay stager, streaming/StreamMain.scala) plus the build
   * parameter string: a regenerated fixture or a changed parameter set
   * lands in a fresh directory instead of silently serving a stale index.
   * At production scale the path would be an explicit warehouse location
@@ -17,17 +20,10 @@ package graft.operators
 object ArtifactPaths {
 
   /** `<tmpdir>/graft_<kind>_<md5-16>` keyed on source identity + params. */
-  def keyed(kind: String, sourcePath: String, params: String): String = {
-    val f = new java.io.File(sourcePath)
-    val id =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName)
-          .map(c => s"${c.getName}|${c.length}|${c.lastModified}")
-          .mkString(",")
-      else s"${f.length}|${f.lastModified}"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${f.getAbsolutePath}|$id|$params".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
+  def keyed(spark: SparkSession, kind: String, sourcePath: String,
+      params: String): String = {
+    val key = graft.Tables.md5Hex(
+      s"${graft.Tables.sourceIdentity(spark, sourcePath)}|$params").take(16)
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_${kind}_$key").toString
   }

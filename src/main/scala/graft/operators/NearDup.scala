@@ -507,13 +507,18 @@ object NearDup {
     * index, fresh save) folds the string branch away entirely
     * (PropagateEmptyRelation). Batch shingles outside the dictionary can
     * only intersect unencoded docs, and those pairs ride the string
-    * branch — no pair is lost.
+    * branch — no pair is lost. `batchIds` (doc_id, n, ids) is the batch
+    * encoded against the corpus dictionary: [[encodeDocs]], or the
+    * loaded probe's [[encodeFrozen]], whose unseen-shingle tokens are
+    * negative and so intersect no dictionary token (all ≥ 0).
     */
   private def verifySplit(cand: DataFrame, batchDocs: DataFrame,
-      corpusIds: DataFrame, dict: DataFrame, unencoded: DataFrame,
+      batchIds: DataFrame, corpusIds: DataFrame, unencoded: DataFrame,
       threshold: Double): DataFrame = {
-    val bIds = encodeDocs(batchDocs, dict)
-      .select(col("doc_id"), col("ids").as("ids_a"), col("n").as("n_a"))
+    // (doc_id, n, ids): the encode's own column order, so that the loaded
+    // probe's prefix and this join plan one exchange, which AQE runs once
+    val bIds = batchIds
+      .select(col("doc_id"), col("n").as("n_a"), col("ids").as("ids_a"))
     val cIds = corpusIds.select(col("doc_id").as("matched_id"),
       col("ids").as("ids_b"), col("n").as("n_b"))
     val fast = verifyJaccardIds(
@@ -975,8 +980,9 @@ object NearDup {
     * collide. Two unseen shingles may share a token; that can only add
     * candidates, never lose one: for any token map f,
     * |f(x) \ f(y)| ≤ |x \ y|, so the ⌈(1−τ)n⌉+1 prefix of the distinct
-    * tokens (n the shingle count) still covers. Verification never reads
-    * these tokens (see verifySplit).
+    * tokens (n the shingle count) still covers. In verification these
+    * tokens meet only dictionary tokens (all ≥ 0), so they add nothing to
+    * an intersection (see verifySplit).
     */
   private def unseenTok(shingle: Column): Column =
     lit(-1L) - xxhash64(shingle).bitwiseAND(lit(Long.MaxValue))
@@ -984,7 +990,8 @@ object NearDup {
   /** Encode (doc_id, sh) docs against a FROZEN dictionary for the
     * persisted index's prefix: (doc_id, n, ids) with n = |sh| and ids the
     * doc's distinct tokens sorted ascending — dictionary tokens for known
-    * shingles, [[unseenTok]] for the rest — the [[tokPrefix]] input.
+    * shingles, [[unseenTok]] for the rest — the [[tokPrefix]] input and
+    * the batch half of the loaded probe's verification.
     */
   private def encodeFrozen(d: DataFrame, dict: DataFrame): DataFrame =
     d.select(col("doc_id"), size(col("sh")).as("n"),
@@ -1141,13 +1148,14 @@ object NearDup {
   }
 
   /** The loaded probe's working set: REP-level candidate id pairs, the
-    * checkpointed batch reps, the corpus verify halves (encoded base +
-    * unencoded appends), and the two member maps the post-verify
+    * checkpointed batch reps and their frozen encode (the one encode the
+    * prefix and verification share), the corpus verify halves (encoded
+    * base + unencoded appends), and the two member maps the post-verify
     * expansion joins (batch classes collapsed per run, corpus classes
     * collapsed once at save time — r17).
     */
   private final case class LoadedJaccard(cand: DataFrame, b: DataFrame,
-      cIds: DataFrame, dict: DataFrame, unencoded: DataFrame,
+      bIds: DataFrame, cIds: DataFrame, unencoded: DataFrame,
       bMembers: DataFrame, cMembers: DataFrame, bTrivial: Boolean)
 
   /** Live appended docs of a persisted jaccard index (tombstones
@@ -1207,20 +1215,21 @@ object NearDup {
         setClassKey(col("sh")).as("ck"))
     val bC = exactSetMembers(b0)
     val b = bC.reps // pinned (or a view over the pin) inside exactSetMembers
-    val cand = tokPrefix(encodeFrozen(b, dict), tauBuild)
+    val bIds = encodeFrozen(b, dict)
+    val cand = tokPrefix(bIds, tauBuild)
       .join(cPrefix, col("tok") === col("tok_c") &&
         col("n_c") >= lit(tau) * col("n") - lit(1e-9) &&
         col("n") >= lit(tau) * col("n_c") - lit(1e-9))
       .select(col("doc_id"), col("matched_id")).distinct()
-    LoadedJaccard(cand, b, spark.read.parquet(s"$path/ids"), dict,
+    LoadedJaccard(cand, b, bIds, spark.read.parquet(s"$path/ids"),
       appendedDocs, bC.members, cMembers, bC.trivial)
   }
 
   private def verifiedLoadedMatches(l: LoadedJaccard,
       threshold: Double): DataFrame =
     expandCrossMatches(
-      verifySplit(l.cand, l.b.select(col("doc_id"), col("sh")), l.cIds,
-        l.dict, l.unencoded, threshold),
+      verifySplit(l.cand, l.b.select(col("doc_id"), col("sh")), l.bIds,
+        l.cIds, l.unencoded, threshold),
       l.bMembers, l.cMembers, Seq("jaccard"), l.bTrivial)
 
   /** The FULL live docs view of a persisted jaccard index — every live
@@ -1329,7 +1338,7 @@ object NearDup {
     val l0 = loadedProbeCandidates(batch, spark, path, threshold)
     val l = l0.copy(cand = l0.cand.localCheckpoint()) // counted AND verified
     val repVerified = verifySplit(l.cand,
-        l.b.select(col("doc_id"), col("sh")), l.cIds, l.dict, l.unencoded,
+        l.b.select(col("doc_id"), col("sh")), l.bIds, l.cIds, l.unencoded,
         threshold)
       .localCheckpoint() // counted AND expanded
     val (phantom, totalReps) = phantomRepStats(spark, path)
@@ -1375,7 +1384,8 @@ object NearDup {
       .select(col("doc_id"), col("matched_id")).distinct()
     val repMatches = index.encoded match {
       case Some(e) =>
-        verifySplit(cand, b, e.ids, e.dict, index.unencoded, threshold)
+        verifySplit(cand, b, encodeDocs(b, e.dict), e.ids, index.unencoded,
+          threshold)
       case None =>
         // PROBE-TIME candidate-restricted encode (r20): the in-memory
         // index (buildBandIndex) carries no encoded halves — build both
@@ -1401,7 +1411,7 @@ object NearDup {
           Seq("doc_id"), "left_semi")
         val dict = dictFromShingles(
           cv.select(explode(col("sh")).as("shingle")).distinct())
-        verifySplit(candP, bv, encodeDocs(cv, dict), dict,
+        verifySplit(candP, bv, encodeDocs(bv, dict), encodeDocs(cv, dict),
           index.unencoded, threshold)
     }
     expandCrossMatches(repMatches,

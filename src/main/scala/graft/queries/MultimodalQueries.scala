@@ -74,7 +74,7 @@ object MultimodalQueries extends QueryModule {
     "q_dedup_image_phash_loaded",
     (s, d) => {
       import graft.operators.ArtifactPaths
-      val path = ArtifactPaths.keyed("phash", s"$d/documents.parquet",
+      val path = ArtifactPaths.keyed(s, "phash", s"$d/documents.parquet",
         "corpus=mod40eq0,v=1")
       val pics = Multimodal.pictureTable(s, d)
       if (!ArtifactPaths.exists(path))

@@ -151,7 +151,7 @@ object PipelineDeep extends QueryModule {
       def tokenSets(df: org.apache.spark.sql.DataFrame) =
         df.select(col("doc_id"),
           graft.functions.TextFunctions.wordShingles(col("text"), 1).as("sh"))
-      val path = ArtifactPaths.keyed("decontamband", s"$d/documents.parquet",
+      val path = ArtifactPaths.keyed(s, "decontamband", s"$d/documents.parquet",
         "tok=1,train=mod50ne0,v=2")
       if (!ArtifactPaths.exists(path))
         NearDup.saveBandIndex(

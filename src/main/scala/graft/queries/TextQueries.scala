@@ -762,7 +762,7 @@ object TextQueries extends QueryModule {
       import graft.operators.{ArtifactPaths, NearDup}
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
-      val path = ArtifactPaths.keyed("jacidx", s"$d/documents.parquet",
+      val path = ArtifactPaths.keyed(s, "jacidx", s"$d/documents.parquet",
         "tau=0.8,shingle=3,corpus=mod10ne0,v=3")
       if (!ArtifactPaths.exists(path))
         NearDup.saveJaccardIndex(docs.filter(col("doc_id") % 10 =!= 0), path)
@@ -789,7 +789,7 @@ object TextQueries extends QueryModule {
       import graft.operators.{ArtifactPaths, NearDup, Tombstones}
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
-      val path = ArtifactPaths.keyed("jacidx", s"$d/documents.parquet",
+      val path = ArtifactPaths.keyed(s, "jacidx", s"$d/documents.parquet",
         "tau=0.8,shingle=3,corpus=mod10ne0,deleted=mod10eq2,v=3")
       // two-phase build (save, then delete): commit on a marker written
       // after BOTH phases, same posture as the appended twin — a crash
@@ -834,7 +834,7 @@ object TextQueries extends QueryModule {
       import graft.operators.{ArtifactPaths, NearDup}
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
-      val path = ArtifactPaths.keyed("jacidx", s"$d/documents.parquet",
+      val path = ArtifactPaths.keyed(s, "jacidx", s"$d/documents.parquet",
         "tau=0.8,shingle=3,corpus=mod10gt1,appended=mod10eq1,v=3")
       // two-phase build → the save's own meta marker is not enough: a
       // crash between save and append would leave a complete-LOOKING
@@ -1402,7 +1402,7 @@ object TextQueries extends QueryModule {
     (s, d) => {
       import graft.operators.{ArtifactPaths, BloomGate}
       val docs = Tables.documents(s, d)
-      val path = ArtifactPaths.keyed("bloom", s"$d/documents.parquet",
+      val path = ArtifactPaths.keyed(s, "bloom", s"$d/documents.parquet",
         "fpp=0.01,corpus=mod10ne0,v=1")
       if (!ArtifactPaths.exists(path))
         BloomGate.save(path, docs.filter(col("doc_id") % 10 =!= 0),

@@ -313,7 +313,7 @@ object VectorQueries extends QueryModule {
       import graft.operators.{ArtifactPaths, Sq8Index}
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("n2"))
-      val path = ArtifactPaths.keyed("sq8", s"$d/embeddings.parquet",
+      val path = ArtifactPaths.keyed(s, "sq8", s"$d/embeddings.parquet",
         "dim=64,v=1")
       if (!ArtifactPaths.exists(path)) {
         val grid = Sq8Index.train(e)
@@ -411,7 +411,7 @@ object VectorQueries extends QueryModule {
     (s, d) => {
       import graft.operators.{ArtifactPaths, PqIndex}
       val e = embWithNorm(s, d)
-      val path = ArtifactPaths.keyed("pq", s"$d/embeddings.parquet",
+      val path = ArtifactPaths.keyed(s, "pq", s"$d/embeddings.parquet",
         "dim=64,m=8,k=16,v=1")
       if (!ArtifactPaths.exists(path)) {
         val books = PqIndex.train(s, e, dim = 64, m = 8, k = 16)
@@ -427,7 +427,7 @@ object VectorQueries extends QueryModule {
     (s, d) => {
       import graft.operators.{ArtifactPaths, IvfIndex}
       val e = embWithNorm(s, d)
-      val path = ArtifactPaths.keyed("ivf", s"$d/embeddings.parquet",
+      val path = ArtifactPaths.keyed(s, "ivf", s"$d/embeddings.parquet",
         "dim=64,k=16,v=1")
       if (!ArtifactPaths.exists(path)) {
         val cents = IvfIndex.centroids(s, e, 16)
@@ -442,7 +442,7 @@ object VectorQueries extends QueryModule {
     (s, d) => {
       import graft.operators.{ArtifactPaths, IvfIndex, PqIndex}
       val e = embWithNorm(s, d)
-      val path = ArtifactPaths.keyed("ivfpq", s"$d/embeddings.parquet",
+      val path = ArtifactPaths.keyed(s, "ivfpq", s"$d/embeddings.parquet",
         "dim=64,m=8,k=16,cells=16,v=1")
       if (!ArtifactPaths.exists(path)) {
         val cents = IvfIndex.centroids(s, e, 16)
@@ -588,7 +588,7 @@ object VectorQueries extends QueryModule {
         .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("n2"))
       val base = e.filter(col("vec_id") % 10 =!= 0)
       val k = SemDedup.cellsFor(base.count())
-      val path = ArtifactPaths.keyed("semdedup", s"$d/embeddings.parquet",
+      val path = ArtifactPaths.keyed(s, "semdedup", s"$d/embeddings.parquet",
         s"k=$k,p=3,corpus=mod10ne0,v=1")
       if (!ArtifactPaths.exists(path)) SemDedup.save(path, base, k)
       SemDedup.probeBatch(s, path, e.filter(col("vec_id") % 10 === 0),

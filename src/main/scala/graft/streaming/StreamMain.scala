@@ -150,12 +150,11 @@ object StreamMain {
     val srcDir = {
       val f = new java.io.File(eventsDir)
       if (f.isFile) {
-        // key on (path, size, mtime) so a REGENERATED fixture at the same
-        // path stages fresh instead of silently replaying stale data
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"${f.getAbsolutePath}|${f.length}|${f.lastModified}"
-            .getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
+        // key on the source identity (path, size, mtime) so a REGENERATED
+        // fixture at the same path stages fresh instead of silently
+        // replaying stale data
+        val key = graft.Tables.md5Hex(
+          graft.Tables.sourceIdentity(spark, eventsDir)).take(16)
         val d = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"), s"graft_stream_src_$key")
         java.nio.file.Files.createDirectories(d)

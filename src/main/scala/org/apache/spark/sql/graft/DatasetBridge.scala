@@ -1,10 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QualifiedTableName
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.classic
 
-/** Bridge into Spark's private[sql] internal-row DataFrame constructor,
-  * for the one pattern the public API cannot express safely: running
-  * SEVERAL passes over ONE physical shuffle.
+/** Bridge into Spark's private[sql] DataFrame constructors, for the two
+  * patterns the public API cannot express: a relation resolved once and
+  * reused by later reads ([[cachedRelation]]), and SEVERAL passes over ONE
+  * physical shuffle ([[pinShuffle]]).
   *
   * [[pinShuffle]] freezes a DataFrame's physical plan into a single RDD
   * instance and re-wraps it as a DataFrame (LogicalRDD). Every job that
@@ -29,9 +33,26 @@ import org.apache.spark.sql.DataFrame
   * frame's own tail sort does) or be order-insensitive.
   */
 object DatasetBridge {
+  /** A new DataFrame over the relation the session catalog caches under
+    * `key`, resolving it with `resolve` on a miss. The cache is the one
+    * Spark keeps for datasource tables: per session, bounded by
+    * `spark.sql.filesourceTableRelationCacheSize`, dropped with the session.
+    * It holds the analyzed relation (schema and file index), never rows.
+    * Each call takes `newInstance()` of it, so two reads of one source
+    * carry distinct attribute ids and can be joined with each other.
+    */
+  def cachedRelation(spark: SparkSession, key: String,
+      resolve: => DataFrame): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val plan = s.sessionState.catalog.getCachedPlan(
+      QualifiedTableName("graft", "sources", key),
+      () => resolve.queryExecution.analyzed)
+    classic.Dataset.ofRows(s,
+      plan.asInstanceOf[MultiInstanceRelation].newInstance())
+  }
+
   def pinShuffle(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
   }
 }
