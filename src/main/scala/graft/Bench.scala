@@ -54,6 +54,17 @@ object Bench {
     sb.toString
   }
 
+  /** Path of the per-query artifact: `bench_full.json` for the full
+    * registry, `bench_subset.json` for a query subset, so a quick subset
+    * run never replaces the committed full-registry record.
+    * SPARK_GRAFT_BENCH_FULL overrides either (heavy/scale legs write
+    * their own artifact).
+    */
+  private[graft] def fullArtifactName(subset: Boolean,
+      env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_BENCH_FULL",
+      if (subset) "bench_subset.json" else "bench_full.json")
+
   /** Per-query anchors (cpu seconds + shuffle-read bytes) for in-run
     * adjudication — a flat TSV (`name cpu_sec shr_b`, regenerated from
     * the committed bench artifact, see BASELINE.md §protocol) so the
@@ -447,13 +458,7 @@ object Bench {
         s""""queries":{$meds},"cpu":{$cpu},""" +
         s""""task_metrics":{$metrics},"raw_bytes":{$rawBytes},"raw":{$raw}}"""
     }
-    // SPARK_GRAFT_BENCH_FULL overrides the full-artifact path (r20,
-    // additions-only, off the timed region): heavy/scale legs write
-    // their own artifact instead of clobbering the registry's
-    // bench_full.json — the r19 sf10 leg overwrote it and needed a
-    // restore commit.
-    val fullName = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      "bench_full.json")
+    val fullName = fullArtifactName(subset.nonEmpty, sys.env)
     val fullPath = java.nio.file.Paths.get(fullName).toAbsolutePath
     java.nio.file.Files.write(fullPath,
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))

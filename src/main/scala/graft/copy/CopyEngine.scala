@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -74,7 +74,7 @@ final class CopyEngine(
   private def copyFile(conf: Configuration, src: Path, destPath: String,
       bw: Option[Int]): CopyResult = {
     val dst = new Path(destPath)
-    val dstFs = dst.getFileSystem(conf)
+    val dstFs = raw(dst.getFileSystem(conf))
     val parent = dst.getParent
     if (parent != null && !dstFs.exists(parent) && !dstFs.mkdirs(parent))
       throw new IOException(s"Failed to create parent directory: $parent")
@@ -86,7 +86,7 @@ final class CopyEngine(
   private def copyDirectory(conf: Configuration, fs: FileSystem, src0: Path,
       destPath: String, bw: Option[Int]): CopyResult = {
     import spark.implicits._
-    val dstFs = new Path(destPath).getFileSystem(conf)
+    val dstFs = raw(new Path(destPath).getFileSystem(conf))
     // Qualify the root: listings come back fully qualified, so a relative
     // source path would never prefix-match and relPaths would silently
     // nest the dest under the source's absolute path.
@@ -106,12 +106,13 @@ final class CopyEngine(
     val (dirs, files) = metas.partition(_.isDir)
 
     // Mirror the directory skeleton (incl. empty dirs) before data flows.
+    // mkdirs is true for a directory that already exists.
     val destRoot = new Path(destPath)
-    if (!dstFs.exists(destRoot) && !dstFs.mkdirs(destRoot))
+    if (!dstFs.mkdirs(destRoot))
       throw new IOException(s"Failed to create directory: $destPath")
     dirs.foreach { d =>
       val p = new Path(destRoot, d.relPath)
-      if (!dstFs.exists(p) && !dstFs.mkdirs(p))
+      if (!dstFs.mkdirs(p))
         throw new IOException(s"Failed to create directory: $p")
     }
 
@@ -265,10 +266,15 @@ object CopyEngine {
   /** Unwrap ChecksumFileSystem (e.g. LocalFileSystem's .crc sidecars): the
     * engine does its own end-to-end MD5, and the reference writes raw bytes
     * (java.io) — sidecar CRCs would both double the hashing work and fire
-    * before our verify on tampered files.
+    * before our verify on tampered files. A plain RawLocalFileSystem is
+    * swapped for PosixLocalFileSystem, which sets the permission of every
+    * created file and directory without forking `chmod`. Every destination
+    * call of the engine goes through here.
     */
-  private def raw(fs: FileSystem): FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+  private[copy] def raw(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => raw(c.getRawFileSystem)
+    case r: RawLocalFileSystem if r.getClass == classOf[RawLocalFileSystem] =>
+      PosixLocalFileSystem.get(r.getConf)
     case f => f
   }
 

@@ -1,5 +1,7 @@
 package graft.copy
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Structured (format-aware) copy: the raw byte-copy engine's sibling for
@@ -91,41 +93,35 @@ object StructuredCopy {
     require(targetFileBytes > 0,
       s"targetFileBytes must be positive, got $targetFileBytes")
     val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcPath)
-    val fs = src.getFileSystem(conf)
-    // Hidden-ness applies to every path COMPONENT, not just the leaf:
-    // a streaming sink's _spark_metadata/ holds files named "0", "1",
-    // "19.compact" whose leaf names look like data — counting them
-    // inflates bytesBefore (and thus the output file count) with
-    // metadata the parquet read never includes.
-    def visible(p: org.apache.hadoop.fs.Path): Boolean = {
-      val rel = p.toUri.getPath.stripPrefix(
-        fs.makeQualified(src).toUri.getPath).stripPrefix("/")
-      rel.split("/").forall(seg =>
-        !seg.startsWith("_") && !seg.startsWith("."))
-    }
-    var files = 0
-    var bytes = 0L
-    val it = fs.listFiles(src, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (visible(f.getPath)) { files += 1; bytes += f.getLen }
-    }
+    val (files, bytes) = visibleFiles(conf, srcPath)
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val res = run(spark, Spec(srcPath, format, dstPath, format,
       transform = _.repartition(nOut)))
     // report files ACTUALLY written — empty partitions and writer-side
     // file splits make the planned nOut a lie at the edges
-    val dst = new org.apache.hadoop.fs.Path(dstPath)
-    val dfs = dst.getFileSystem(conf)
-    var written = 0
-    val it2 = dfs.listFiles(dst, true)
-    while (it2.hasNext) {
-      val f = it2.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) written += 1
-    }
+    val (written, _) = visibleFiles(conf, dstPath)
     CompactResult(files, bytes, written, res.digestMatch)
+  }
+
+  /** Count and total length of the files under `path`, skipping any whose
+    * path below it has a hidden component. Hidden-ness applies to every
+    * path COMPONENT, not just the leaf: a streaming sink's _spark_metadata/
+    * holds files named "0", "1", "19.compact" whose leaf names look like
+    * data — counting them inflates bytesBefore (and thus the output file
+    * count) with metadata the parquet read never includes. Walks
+    * listStatus (CopyEngine.walk), not listFiles: each LocatedFileStatus
+    * loads its file's permission, which on a local filesystem without
+    * libhadoop forks an `ls -ld` per file.
+    */
+  private def visibleFiles(conf: Configuration, path: String): (Int, Long) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val root = fs.makeQualified(p)
+    val visible = CopyEngine.walk(fs, root, root.toUri.getPath).filter { m =>
+      !m.isDir && m.relPath.split("/").forall(seg =>
+        !seg.startsWith("_") && !seg.startsWith("."))
+    }
+    (visible.size, visible.map(_.length).sum)
   }
 
   /** Surgical partition backfill — how late or corrected data lands in a

@@ -7,6 +7,7 @@ import org.scalatest.matchers.should.Matchers
   * bytes an error message carries — backslash, quote, and EVERY control
   * char below 0x20 must be escaped (the old chain missed control chars,
   * so an ANSI escape or NUL in an exception corrupted the JSON line).
+  * A query-subset run must not overwrite the full-registry artifact.
   */
 class BenchJsonSpec extends AnyFunSuite with Matchers {
 
@@ -27,5 +28,13 @@ class BenchJsonSpec extends AnyFunSuite with Matchers {
     val printable = (0x20 to 0x7e).map(_.toChar).mkString
       .filterNot(c => c == '"' || c == '\\')
     Bench.jsonEscape(printable) shouldBe printable
+  }
+
+  test("a query subset writes bench_subset.json, never the full-registry artifact") {
+    Bench.fullArtifactName(subset = false, Map.empty) shouldBe "bench_full.json"
+    Bench.fullArtifactName(subset = true, Map.empty) shouldBe "bench_subset.json"
+    val env = Map("SPARK_GRAFT_BENCH_FULL" -> "heavy.json")
+    Bench.fullArtifactName(subset = false, env) shouldBe "heavy.json"
+    Bench.fullArtifactName(subset = true, env) shouldBe "heavy.json"
   }
 }

@@ -3,6 +3,7 @@ package graft.copy
 import java.io.IOException
 import java.nio.file.{Files, Path => JPath}
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.permission.FsPermission
 import graft.SparkSpec
 
 /** Ports the reference copy-dataflow suite
@@ -256,5 +257,83 @@ class CopyEngineSpec extends SparkSpec {
     order.foreach { rel =>
       Files.exists(dst2.resolve("root").resolve(rel)) shouldBe true
     }
+  }
+
+  private def mode(p: JPath): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Integer] & 0xfff
+
+  test("copied files and skeleton directories carry Hadoop's umasked default bits") {
+    val srcDir = tmpDir("src"); val dstDir = tmpDir("dst")
+    write(srcDir, "root/a.bin", bytes(10))
+    write(srcDir, "root/sub/b.bin", bytes(20))
+    Files.createDirectories(srcDir.resolve("root/sub/empty"))
+    Files.createDirectories(srcDir.resolve("root/empty"))
+    val dst = dstDir.resolve("mirror")
+    engine.copyPath(conf, srcDir.resolve("root").toString, dst.toString, None)
+      .checksumVerified shouldBe true
+    val umask = FsPermission.getUMask(conf)
+    val fileBits = FsPermission.getFileDefault.applyUMask(umask).toShort.toInt
+    val dirBits = FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    Seq("a.bin", "sub/b.bin").foreach { f =>
+      withClue(f) { mode(dst.resolve(f)) shouldBe fileBits }
+    }
+    Seq("", "sub", "sub/empty", "empty").foreach { d =>
+      withClue(s"dir '$d'") { mode(dst.resolve(d)) shouldBe dirBits }
+    }
+    // a single-file copy's created parent directory too
+    val single = dstDir.resolve("one/two/a.bin")
+    engine.copyPath(conf, srcDir.resolve("root/a.bin").toString, single.toString, None)
+    mode(single) shouldBe fileBits
+    mode(single.getParent) shouldBe dirBits
+  }
+
+  test("local destinations go through PosixLocalFileSystem, which applies its conf's umask") {
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    CopyEngine.raw(local) shouldBe a[PosixLocalFileSystem]
+    CopyEngine.raw(local.getRawFileSystem) shouldBe a[PosixLocalFileSystem]
+    // 027 differs from the process umask, so the bits below can only come
+    // from setPermission, not from the OS defaults of open/mkdir
+    val c = new Configuration()
+    c.set(FsPermission.UMASK_LABEL, "027")
+    val fs = new PosixLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), c)
+    val dir = tmpDir("posix")
+    val f = new org.apache.hadoop.fs.Path(dir.resolve("d/e/f.bin").toString)
+    fs.create(f, true).close()
+    mode(dir.resolve("d/e/f.bin")) shouldBe Integer.parseInt("640", 8)
+    mode(dir.resolve("d/e")) shouldBe Integer.parseInt("750", 8)
+    mode(dir.resolve("d")) shouldBe Integer.parseInt("750", 8)
+    fs.setPermission(f, new FsPermission(Integer.parseInt("604", 8).toShort))
+    mode(dir.resolve("d/e/f.bin")) shouldBe Integer.parseInt("604", 8)
+  }
+
+  test("a sticky-bit permission falls back to RawLocalFileSystem.setPermission") {
+    // NIO's PosixFilePermission has no sticky bit: the bit can only be
+    // there if the inherited (chmod / NativeIO) path ran
+    val dir = tmpDir("sticky").resolve("d")
+    Files.createDirectories(dir)
+    val fs = PosixLocalFileSystem.get(conf)
+    fs.setPermission(new org.apache.hadoop.fs.Path(dir.toString),
+      new FsPermission(Integer.parseInt("1750", 8).toShort))
+    mode(dir) shouldBe Integer.parseInt("1750", 8)
+  }
+
+  test("a same-length corruption of a copied file is still reported as a mismatch") {
+    val srcDir = tmpDir("src"); val dstDir = tmpDir("dst")
+    write(srcDir, "root/a.bin", bytes(4096))
+    write(srcDir, "root/sub/b.bin", bytes(4096))
+    val flipFirstByte: String => Unit = p => if (p.endsWith("b.bin")) {
+      val f = new java.io.RandomAccessFile(new java.net.URI(
+        if (p.startsWith("file:")) p else s"file://$p").getPath, "rw")
+      try { val b = f.read(); f.seek(0); f.write(b ^ 0xff) } finally f.close()
+    }
+    val tampering = new CopyEngine(spark, postWriteHook = Some(flipFirstByte))
+    val e = intercept[IOException] {
+      tampering.copyPath(conf, srcDir.resolve("root").toString,
+        dstDir.resolve("root").toString, None)
+    }
+    e.getMessage should startWith(s"Checksum mismatch for ")
+    e.getMessage should include("b.bin: source=")
+    Files.size(dstDir.resolve("root/sub/b.bin")) shouldBe 4096L
   }
 }

@@ -202,6 +202,28 @@ class CopyHttpServerSpec extends SparkSpec with Eventually {
     }
   }
 
+  test("sequential keep-alive GETs answer well under the 40 ms delayed-ACK floor") {
+    // With Nagle on, the body segment of each response waits for the
+    // client's delayed ACK of the header segment: ~40 ms per GET on a
+    // reused connection.
+    val keepAlive = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    withServer(new StubApi()) { port =>
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/health"))
+        .GET().build()
+      keepAlive.send(req, HttpResponse.BodyHandlers.ofString()) // connect
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val r = keepAlive.send(req, HttpResponse.BodyHandlers.ofString())
+        r.statusCode() shouldBe 200
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      withClue(s"GET /health ms: ${ms.map(m => f"$m%.1f").mkString(" ")}: ") {
+        (ms(9) + ms(10)) / 2 should be < 20.0
+      }
+    }
+  }
+
   test("GET /health on an empty registry → 200 UP, empty tasks object") {
     withServer(new StubApi()) { port =>
       val r = getPath(port, "/health")
