@@ -2,10 +2,9 @@ package graft.copy
 
 import java.io.IOException
 import java.security.MessageDigest
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -76,7 +75,7 @@ final class CopyEngine(
     val dst = new Path(destPath)
     val dstFs = raw(dst.getFileSystem(conf))
     val parent = dst.getParent
-    if (parent != null && !dstFs.exists(parent) && !dstFs.mkdirs(parent))
+    if (parent != null && !dstFs.mkdirs(parent))
       throw new IOException(s"Failed to create parent directory: $parent")
     val r = copyOne(conf, src.toString, destPath, bw, checksumEnabled, postWriteHook)
     if (r.error != null) throw new IOException(r.error)
@@ -222,7 +221,7 @@ final class CopyEngine(
         val c = sconf.value
         it.flatMap { rootStr =>
           val p = new Path(rootStr)
-          CopyEngine.walk(p.getFileSystem(c), p, rootUri)
+          CopyEngine.walkIterator(p.getFileSystem(c), p, rootUri)
         }
       }
       .collect().toSeq // listing rows only — payload bytes never move
@@ -243,25 +242,36 @@ object CopyEngine {
     * inside executor tasks (distributed listing); must not touch
     * SparkSession. Parents always precede their children in the output.
     */
-  def walk(fs: FileSystem, start: Path, rootUri: String): Seq[FileMeta] = {
-    def rel(p: Path): String =
-      p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-    val out = ArrayBuffer.empty[FileMeta]
-    val stack = scala.collection.mutable.Stack(start)
-    while (stack.nonEmpty) {
-      val dir = stack.pop()
-      fs.listStatus(dir).foreach { st =>
+  def walk(fs: FileSystem, start: Path, rootUri: String): Seq[FileMeta] =
+    walkIterator(fs, start, rootUri).toVector
+
+  /** `walk`, lazily: it holds one directory's listing at a time, so a
+    * caller that only aggregates never keeps a record per file.
+    */
+  def walkIterator(fs: FileSystem, start: Path,
+      rootUri: String): Iterator[FileMeta] =
+    new Iterator[FileMeta] {
+      private def rel(p: Path): String =
+        p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+      private val dirs = scala.collection.mutable.Stack(start)
+      private var listing: Iterator[FileStatus] = Iterator.empty
+      def hasNext: Boolean = {
+        while (!listing.hasNext && dirs.nonEmpty)
+          listing = fs.listStatus(dirs.pop()).iterator
+        listing.hasNext
+      }
+      def next(): FileMeta = {
+        if (!hasNext) throw new NoSuchElementException("walk exhausted")
+        val st = listing.next()
         if (st.isDirectory) {
-          out += FileMeta(st.getPath.toString, rel(st.getPath), isDir = true, 0L)
-          stack.push(st.getPath)
+          dirs.push(st.getPath)
+          FileMeta(st.getPath.toString, rel(st.getPath), isDir = true, 0L)
         } else {
-          out += FileMeta(st.getPath.toString, rel(st.getPath), isDir = false,
+          FileMeta(st.getPath.toString, rel(st.getPath), isDir = false,
             st.getLen)
         }
       }
     }
-    out.toSeq
-  }
 
   /** Unwrap ChecksumFileSystem (e.g. LocalFileSystem's .crc sidecars): the
     * engine does its own end-to-end MD5, and the reference writes raw bytes

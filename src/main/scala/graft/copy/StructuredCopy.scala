@@ -93,35 +93,40 @@ object StructuredCopy {
     require(targetFileBytes > 0,
       s"targetFileBytes must be positive, got $targetFileBytes")
     val conf = spark.sparkContext.hadoopConfiguration
-    val (files, bytes) = visibleFiles(conf, srcPath)
+    // Hidden-ness of the input applies to every path COMPONENT, not just
+    // the leaf: a streaming sink's _spark_metadata/ holds files named "0",
+    // "1", "19.compact" whose leaf names look like data — counting them
+    // inflates bytesBefore (and thus the output file count) with metadata
+    // the parquet read never includes.
+    val (files, bytes) = countFiles(conf, srcPath,
+      _.split("/").forall(!hidden(_)))
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val res = run(spark, Spec(srcPath, format, dstPath, format,
       transform = _.repartition(nOut)))
     // report files ACTUALLY written — empty partitions and writer-side
     // file splits make the planned nOut a lie at the edges
-    val (written, _) = visibleFiles(conf, dstPath)
+    val (written, _) = countFiles(conf, dstPath,
+      rel => !hidden(rel.substring(rel.lastIndexOf('/') + 1)))
     CompactResult(files, bytes, written, res.digestMatch)
   }
 
-  /** Count and total length of the files under `path`, skipping any whose
-    * path below it has a hidden component. Hidden-ness applies to every
-    * path COMPONENT, not just the leaf: a streaming sink's _spark_metadata/
-    * holds files named "0", "1", "19.compact" whose leaf names look like
-    * data — counting them inflates bytesBefore (and thus the output file
-    * count) with metadata the parquet read never includes. Walks
-    * listStatus (CopyEngine.walk), not listFiles: each LocatedFileStatus
-    * loads its file's permission, which on a local filesystem without
-    * libhadoop forks an `ls -ld` per file.
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** Count and total length of the files under `path` whose path relative
+    * to it passes `keep`. Walks listStatus (CopyEngine.walkIterator),
+    * not listFiles: each LocatedFileStatus loads its file's permission,
+    * which on a local filesystem without libhadoop forks an `ls -ld` per
+    * file.
     */
-  private def visibleFiles(conf: Configuration, path: String): (Int, Long) = {
+  private def countFiles(conf: Configuration, path: String,
+      keep: String => Boolean): (Int, Long) = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val root = fs.makeQualified(p)
-    val visible = CopyEngine.walk(fs, root, root.toUri.getPath).filter { m =>
-      !m.isDir && m.relPath.split("/").forall(seg =>
-        !seg.startsWith("_") && !seg.startsWith("."))
-    }
-    (visible.size, visible.map(_.length).sum)
+    CopyEngine.walkIterator(fs, root, root.toUri.getPath)
+      .filter(m => !m.isDir && keep(m.relPath))
+      .foldLeft((0, 0L)) { case ((n, b), m) => (n + 1, b + m.length) }
   }
 
   /** Surgical partition backfill — how late or corrected data lands in a

@@ -189,23 +189,30 @@ class CopyEngineSpec extends SparkSpec {
   }
 
   test("directory with one bad file fails the whole item") {
-    val srcDir = tmpDir("src"); val dstDir = tmpDir("dst")
-    write(srcDir, "root/ok.bin", bytes(100))
-    write(srcDir, "root/bad.bin", bytes(100))
-    val tampering = new CopyEngine(spark, checksumEnabled = true,
-      postWriteHook = Some(p => {
-        if (p.endsWith("bad.bin")) {
-          val f = new java.io.File(new java.net.URI(
-            if (p.startsWith("file:")) p else s"file://$p").getPath)
-          val out = new java.io.FileOutputStream(f, true)
-          out.write(0x42); out.close()
-        }
-      }))
-    val e = intercept[IOException] {
-      tampering.copyPath(conf, srcDir.resolve("root").toString,
-        dstDir.resolve("root").toString, None)
+    // an appended byte, and a same-length flip of the first byte (which
+    // no length check would catch)
+    val corruptions: Seq[java.io.RandomAccessFile => Unit] = Seq(
+      f => { f.seek(f.length()); f.write(0x42) },
+      f => { val b = f.read(); f.seek(0); f.write(b ^ 0xff) })
+    corruptions.foreach { corrupt =>
+      val srcDir = tmpDir("src"); val dstDir = tmpDir("dst")
+      write(srcDir, "root/ok.bin", bytes(100))
+      write(srcDir, "root/bad.bin", bytes(100))
+      val tampering = new CopyEngine(spark, checksumEnabled = true,
+        postWriteHook = Some(p => {
+          if (p.endsWith("bad.bin")) {
+            val f = new java.io.RandomAccessFile(new java.net.URI(
+              if (p.startsWith("file:")) p else s"file://$p").getPath, "rw")
+            try corrupt(f) finally f.close()
+          }
+        }))
+      val e = intercept[IOException] {
+        tampering.copyPath(conf, srcDir.resolve("root").toString,
+          dstDir.resolve("root").toString, None)
+      }
+      e.getMessage should include("Checksum mismatch for")
+      e.getMessage should include("bad.bin: source=")
     }
-    e.getMessage should include("Checksum mismatch for")
   }
 
   test("strictItemParity: sequential copy aborts at the first bad file, later files stay uncopied") {
@@ -316,24 +323,5 @@ class CopyEngineSpec extends SparkSpec {
     fs.setPermission(new org.apache.hadoop.fs.Path(dir.toString),
       new FsPermission(Integer.parseInt("1750", 8).toShort))
     mode(dir) shouldBe Integer.parseInt("1750", 8)
-  }
-
-  test("a same-length corruption of a copied file is still reported as a mismatch") {
-    val srcDir = tmpDir("src"); val dstDir = tmpDir("dst")
-    write(srcDir, "root/a.bin", bytes(4096))
-    write(srcDir, "root/sub/b.bin", bytes(4096))
-    val flipFirstByte: String => Unit = p => if (p.endsWith("b.bin")) {
-      val f = new java.io.RandomAccessFile(new java.net.URI(
-        if (p.startsWith("file:")) p else s"file://$p").getPath, "rw")
-      try { val b = f.read(); f.seek(0); f.write(b ^ 0xff) } finally f.close()
-    }
-    val tampering = new CopyEngine(spark, postWriteHook = Some(flipFirstByte))
-    val e = intercept[IOException] {
-      tampering.copyPath(conf, srcDir.resolve("root").toString,
-        dstDir.resolve("root").toString, None)
-    }
-    e.getMessage should startWith(s"Checksum mismatch for ")
-    e.getMessage should include("b.bin: source=")
-    Files.size(dstDir.resolve("root/sub/b.bin")) shouldBe 4096L
   }
 }

@@ -164,10 +164,15 @@ def bench_leg(fixture, out_path):
             return j
         print(f"[skew-gate] stale leg dump {out_path} "
               f"(sf/queries/lint mismatch) — re-running")
+    # the printed metric line is the headline; the per-query byte/spill
+    # counters live in Bench's per-query artifact — SPARK_GRAFT_BENCH_FULL
+    # makes Bench write it straight to this leg's dump
+    out_abs = os.path.abspath(out_path)
     env = {
         "SPARK_GRAFT_SF_DIR": fixture,
         "SPARK_GRAFT_BENCH_PASSES": "1",
         "SPARK_GRAFT_EXTRA_CONF": "spark.graft.scalelint=fail",
+        "SPARK_GRAFT_BENCH_FULL": out_abs,
     }
     r = run(["sbt", "-batch", "runMain graft.Bench " + " ".join(SKEW_QUERIES)],
             env=env, capture=True)
@@ -175,15 +180,10 @@ def bench_leg(fixture, out_path):
         print(r.stdout[-4000:])
         print(f"GATE-ERR: bench leg {fixture} failed")
         sys.exit(1)
-    # the printed metric line is the headline; the per-query byte/spill
-    # counters live in bench_full.json — capture it per leg before the
-    # next leg overwrites it
-    j = json.load(open(os.path.join(REPO, "bench_full.json")))
+    j = json.load(open(out_abs))
     if j.get("sf") != fixture:
-        print(f"GATE-ERR: bench_full.json sf={j.get('sf')} != {fixture}")
+        print(f"GATE-ERR: {out_path} sf={j.get('sf')} != {fixture}")
         sys.exit(1)
-    with open(out_path, "w") as f:
-        json.dump(j, f, indent=1)
     return j
 
 
