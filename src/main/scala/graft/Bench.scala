@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLongArray
 
@@ -12,10 +13,13 @@ import java.util.concurrent.atomic.AtomicLongArray
   * if a query's bytes are flat across passes/rounds while wall-clock
   * drifts, the drift is environment; if bytes grow, the plan (or an
   * accumulated artifact) changed. The 2x gate is adjudicable from CPU
-  * time alone, from a single contended run.
+  * time alone, from a single contended run. A snapshot also carries the
+  * JVM's count of Janino compiles of generated code, so a pass that
+  * misses Spark's codegen cache shows as compiles, not only as CPU.
   */
 private[graft] final class TaskMetricsTap extends SparkListener {
   // idx: 0=cpuNs 1=runMs 2=shufReadB 3=shufWriteB 4=inputB 5=spillB 6=tasks
+  // and, in a snapshot only, 7=compiles
   private val acc = new AtomicLongArray(7)
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val m = te.taskMetrics
@@ -29,7 +33,8 @@ private[graft] final class TaskMetricsTap extends SparkListener {
       acc.addAndGet(6, 1L)
     }
   }
-  def snapshot(): Array[Long] = Array.tabulate(7)(acc.get)
+  def snapshot(): Array[Long] =
+    Array.tabulate(7)(acc.get) :+ CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
 
 object Bench {
@@ -64,6 +69,34 @@ object Bench {
       env: Map[String, String]): String =
     env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       if (subset) "bench_subset.json" else "bench_full.json")
+
+  // Locale.ROOT: the f-interpolator honors the default locale, and a
+  // comma decimal separator would make the line unparseable JSON —
+  // regenerating the exact driver-parse failure this format exists to fix
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** One query's raw per-pass trace in the full artifact, from tap
+    * snapshot deltas: shuffle-read and input bytes (plan-pure, so a
+    * non-flat trace means the plan changed) and Janino compiles (a warm
+    * pass that still compiles is missing Spark's codegen cache).
+    */
+  private[graft] def rawPassesJson(name: String, perPass: Seq[Array[Long]]): String =
+    s""""$name":{"shr_b":[${perPass.map(_(2)).mkString(",")}],""" +
+      s""""inp_b":[${perPass.map(_(4)).mkString(",")}],""" +
+      s""""compiles":[${perPass.map(_(7)).mkString(",")}]}"""
+
+  /** Run totals on both the headline and the full artifact: executor CPU
+    * and spill over the per-query medians, Janino compiles over every
+    * timed pass. A written "zero spills" claim must be mechanical, not
+    * hand-derived (the r14 claim was contradicted by its own artifact's
+    * q_profile_columns row); so must a "no recompiles" one.
+    */
+  private[graft] def totalsJson(medians: Seq[Array[Long]],
+      perPass: Seq[Seq[Array[Long]]]): String =
+    s""""cpu_total_sec":${fmt(medians.map(_(0)).sum / 1e9)},""" +
+      s""""spill_total_b":${medians.map(_(5)).sum},""" +
+      s""""compiles_total":${perPass.flatten.map(_(7)).sum}"""
 
   /** Per-query anchors (cpu seconds + shuffle-read bytes) for in-run
     * adjudication — a flat TSV (`name cpu_sec shr_b`, regenerated from
@@ -244,7 +277,7 @@ object Bench {
       // pass the same way wall medians do; byte fields are plan-pure and
       // should be identical across passes — raw arrays are kept so a
       // non-flat byte trace is visible in the artifact itself.
-      val med = Array.tabulate(7)(i =>
+      val med = Array.tabulate(passData.head._2.length)(i =>
         passData.map(_._2(i)).sorted.apply(passes / 2))
       (name, ts.sorted.apply(ts.size / 2), ts, med, passData.map(_._2))
     }
@@ -375,11 +408,6 @@ object Bench {
         (name, w, c)
       }
     }
-    // Locale.ROOT: the f-interpolator honors the default locale, and a
-    // comma decimal separator would make the line unparseable JSON —
-    // regenerating the exact driver-parse failure this format exists to fix
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // Full per-query timings go to a file: the driver captures only the
     // last ~2000 chars of output, and a 124-query JSON line (~3 KB) gets
     // its head truncated there, so the driver's parse fails (BENCH_r01 and
@@ -388,11 +416,7 @@ object Bench {
     // bench_full.json for the complete map (medians + raw per-pass arrays).
     val skippedJson = excluded.map { case (n, _) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
-    val totalCpu = timed.map(_._4(0)).sum / 1e9
-    // total spill bytes across the registry, on the HEADLINE: a written
-    // "zero spills" claim must be mechanical, not hand-derived (the r14
-    // claim was contradicted by its own artifact's q_profile_columns row)
-    val spillTotal = timed.map(_._4(5)).sum
+    val totals = totalsJson(timed.map(_._4), timed.map(_._5))
     val fullJson = {
       val meds = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")
       val raw = timed.map { case (k, _, ts, _, _) =>
@@ -411,8 +435,7 @@ object Bench {
           s""""spill_b":${m(5)},"tasks":${m(6)}}"""
       }.mkString(",")
       val rawBytes = timed.map { case (k, _, _, _, perPass) =>
-        s""""$k":{"shr_b":[${perPass.map(_(2)).mkString(",")}],""" +
-          s""""inp_b":[${perPass.map(_(4)).mkString(",")}]}"""
+        rawPassesJson(k, perPass)
       }.mkString(",")
       val errJson = errors.map { case (k, v) =>
         "\"" + k + "\":\"" + jsonEscape(v) + "\""
@@ -439,7 +462,7 @@ object Bench {
         "\"" + k + "\":" + fmt(s)
       }.mkString(",")
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
-        s""""cpu_total_sec":$totalCpu,"spill_total_b":$spillTotal,""" +
+        s"""$totals,""" +
         s""""prestaged":{$prestageJson},""" +
         s""""cpus":$cpus,"sf":"$sfDir","mode":"median$passes",""" +
         // the gate's leg-reuse check needs the EFFECTIVE lint mode (r17
@@ -463,7 +486,7 @@ object Bench {
     java.nio.file.Files.write(fullPath,
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val budget = 1500 // chars for the whole line; tail capture is 2000
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_total_sec":${fmt(totalCpu)},"spill_total_b":$spillTotal,"n":${results.size},"mode":"median$passes","skipped":${excluded.size},"errors":${errors.size},"solo":${solo.size},"byte_drift":${byteDrift.size},"prev_median":${fmt(prevMedian)},"prev_total":${fmt(prevTotal)},"prev2x":${prevRatios.count(_._2 > 2.0)},"full":"$fullName","sf":"$sfDir","queries":{"""
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$totals,"n":${results.size},"mode":"median$passes","skipped":${excluded.size},"errors":${errors.size},"solo":${solo.size},"byte_drift":${byteDrift.size},"prev_median":${fmt(prevMedian)},"prev_total":${fmt(prevTotal)},"prev2x":${prevRatios.count(_._2 > 2.0)},"full":"$fullName","sf":"$sfDir","queries":{"""
     val slowestFirst = results.sortBy(-_._2)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + 2 // closing "}}"

@@ -13,8 +13,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Functions: float_vec_dot(a,b), simhash64(tokens),
   * minhash_sig(shingles, k), word_shingles(text, k),
   * lsh_buckets(vec, nBits, seed...).
+  *
+  * Constructing it also sizes Spark's codegen cache, see
+  * `GraftExtensions.defaultCodegenCache`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  GraftExtensions.defaultCodegenCache()
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     // any graft session gets the WindowExec-warning demotion: the two
     // deliberate bounded global passes otherwise spam every log while
@@ -35,6 +40,29 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  private[graft] val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Spark keeps compiled generated classes in one JVM-wide LRU cache whose
+    * size it reads once, from the conf of the first session that generates
+    * code; the default, 100, is smaller than the ~330 classes one pass of
+    * the 22 tpch registry queries cycles through, so every pass missed and
+    * recompiled them all. 384 holds that working set: the cache is a Guava
+    * cache of 4 segments, so each holds 96 entries against ~83 hashed into
+    * it (320 left a full segment thrashing, ~67 compiles a pass). Keep it
+    * no larger: each entry keeps ~20 KB of heap (source, bytecode, class
+    * loader), and entries are keyed to the executor class loader of their
+    * SparkContext, so room beyond the working set only keeps classes of
+    * stopped contexts that can never hit again.
+    *
+    * Set as a JVM system property, which every later `new SparkConf()`
+    * reads, so a builder must construct the extension before
+    * `getOrCreate` builds the first context (`withExtensions`; the
+    * `spark.sql.extensions` route constructs it too late). A value already
+    * set, as a system property or through the builder's `.config`, wins.
+    */
+  private[graft] def defaultCodegenCache(): Unit =
+    System.getProperties.putIfAbsent(CodegenCacheKey, "384")
 
   private def intLit(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v

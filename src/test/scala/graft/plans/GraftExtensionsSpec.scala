@@ -13,6 +13,9 @@ import graft.SparkSpec
   * `builder.withExtensions(new GraftExtensions)` route (same class, same
   * hooks; only the class-name parsing is Spark's own machinery) and
   * restores the shared session afterwards.
+  *
+  * Constructing the extension sizes Spark's JVM-wide codegen cache (a
+  * system property read by every new SparkConf) unless a size was set.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -90,6 +93,49 @@ class GraftExtensionsSpec extends SparkSpec {
         .takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse(""))
         .mkString("\n")
       msgs should include("global window")
+    }
+  }
+
+  private val cacheKey = GraftExtensions.CodegenCacheKey
+
+  /** Runs `f` with the cache-size property set to `v` (None: unset) and
+    * restores what the JVM had afterwards.
+    */
+  private def withCacheProperty[A](v: Option[String])(f: => A): A = {
+    val saved = Option(System.getProperty(cacheKey))
+    def put(p: Option[String]): Unit =
+      p.fold(System.clearProperty(cacheKey))(System.setProperty(cacheKey, _))
+    put(v)
+    try f finally put(saved)
+  }
+
+  test("constructing the extension sizes the codegen cache when no size is set") {
+    withCacheProperty(None) {
+      new GraftExtensions
+      System.getProperty(cacheKey) shouldBe "384"
+    }
+  }
+
+  test("constructing the extension leaves a user-set codegen cache size alone") {
+    withCacheProperty(Some("1000")) {
+      new GraftExtensions
+      System.getProperty(cacheKey) shouldBe "1000"
+    }
+  }
+
+  test("a fresh context built withExtensions gets the cache size; a builder .config wins") {
+    def fresh(conf: (String, String)*): String = {
+      val b = SparkSession.builder()
+        .master("local[2]")
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new GraftExtensions)
+      val s = conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
+      try s.conf.get(cacheKey) finally s.stop()
+    }
+    withCacheProperty(None) {
+      spark.stop() // the size is a static conf, read when a context starts
+      fresh() shouldBe "384"
+      fresh(cacheKey -> "200") shouldBe "200"
     }
   }
 }
