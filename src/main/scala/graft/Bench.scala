@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLongArray
@@ -143,7 +142,7 @@ object Bench {
     // layer of the same fix).
     graft.plans.LogHygiene.suppressBoundedWindowWarn()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus(4)
     // In-driver median-of-N (default 3): single-pass per-query numbers on
     // this box swing up to 10x on identical code (BASELINE.md r6 protocol),
     // so the emitted per-query values are per-query MEDIANS over N
@@ -151,35 +150,21 @@ object Bench {
     // without driver-side multi-pass orchestration. PASSES=1 restores the
     // old single-pass mode for quick local smoke.
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    // The lint rides every bench in WARN mode: plan-shape violations
-    // (global windows, accidental cartesians, float payloads on
-    // exchanges) print instead of failing the run. This is what makes a
-    // scaled-fixture bench surface flips the fixture scale hides — the
-    // f30 broadcast→shuffle flip on the LSH verify re-attach was
-    // invisible until measured (SCALE.md §stress); in warn mode the
-    // physical lint names it at plan time.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // lint=fail by default (r19 task 6): the sf10 legs and the skew
-      // gate have run fail-mode since r17, the registry has been
-      // lint-clean for two rounds, and a new scale-killer plan shape
-      // should abort the bench loudly rather than ride a warn line
-      // nobody reads. SPARK_GRAFT_EXTRA_CONF can still demote per run.
-      .config("spark.graft.scalelint", "fail")
-      .withExtensions(new graft.plans.GraftExtensions)
-    // Stress-run conf pass-through (e.g. spark.graft.lsh.bits=7 at a
-    // scaled fixture): comma-separated k=v pairs, applied in order.
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+    // The lint rides every bench in FAIL mode: the sf10 legs and the skew
+    // gate have run fail-mode since r17, the registry is lint-clean, and a
+    // new scale-killer plan shape (global windows, accidental cartesians,
+    // float payloads on exchanges) should abort the bench loudly rather
+    // than ride a warn line nobody reads. A scaled-fixture bench is what
+    // surfaces flips the fixture scale hides — the f30 broadcast→shuffle
+    // flip on the LSH verify re-attach was invisible until measured
+    // (SCALE.md §stress). SPARK_GRAFT_EXTRA_CONF can still demote per run:
+    // comma-separated k=v session confs (e.g. spark.graft.lsh.bits=7 at a
+    // scaled fixture), applied in order after the lint mode.
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(',')).filter(_.contains('='))
-      .foldLeft(builder) { (b, kv) =>
-        val i = kv.indexOf('='); b.config(kv.take(i), kv.drop(i + 1))
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
+    val spark = GraftSession.create("graft-bench", cpus,
+      (graft.plans.ScaleLint.ConfKey -> "fail") +: extraConf: _*)
     val tap = new TaskMetricsTap
     spark.sparkContext.addSparkListener(tap)
     // Listener delivery is async; drain the bus around each timed region
@@ -467,7 +452,7 @@ object Bench {
         s""""cpus":$cpus,"sf":"$sfDir","mode":"median$passes",""" +
         // the gate's leg-reuse check needs the EFFECTIVE lint mode (r17
         // ADVICE: a stale lint-off dump must not pass as gate evidence)
-        s""""lint_mode":"${spark.conf.get("spark.graft.scalelint", "warn")}",""" +
+        s""""lint_mode":"${graft.plans.ScaleLint.mode(spark)}",""" +
         s""""anchors":"${if (anchors.isEmpty) "" else anchorsPath}",""" +
         s""""prev_anchors":"${if (prevAnchors.isEmpty) "" else prevPath}",""" +
         s""""prev_median":$prevMedian,"prev_total":$prevTotal,""" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.DedupClusters
@@ -34,17 +33,7 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_pipeline_out")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.LogHygiene.suppressBoundedWindowWarn()
+    val spark = GraftSession.create("graft-pipeline", GraftSession.cpus(8))
     // session-ready to summary-line wall clock: the pipeline bench anchor
     // (BASELINE.md) reads this, so it excludes sbt/JVM/session startup
     val tStart = System.nanoTime()

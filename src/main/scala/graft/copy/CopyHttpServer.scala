@@ -176,12 +176,7 @@ object CopyHttpServer {
 object CopyServerMain {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.flatMap(_.toIntOption).getOrElse(8080)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-copy-server")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-copy-server", graft.GraftSession.cpus(4))
     val svc = new CopyTaskService(new CopyEngine(spark),
       new FsFactory(sys.env.getOrElse("GRAFT_CONF_BASEDIR", "/etc/hadoop-namespaces")))
     val http = new CopyHttpServer(svc, port)

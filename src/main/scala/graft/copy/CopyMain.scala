@@ -1,7 +1,5 @@
 package graft.copy
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI surface for the copy engine — the analog of the reference's REST
   * API (submit → 202 id → poll → final task state), as a runnable main:
   *
@@ -55,12 +53,7 @@ object CopyMain {
   }
 
   private def run(req: CopyRequest): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-copy")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-copy", graft.GraftSession.cpus(4))
 
     val svc = new CopyTaskService(new CopyEngine(spark),
       new FsFactory(sys.env.getOrElse("GRAFT_CONF_BASEDIR", "/etc/hadoop-namespaces")))

@@ -5,10 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions registration for the engine's native expressions,
-  * so they are first-class SQL functions:
-  *
-  *   spark.sql.extensions=graft.plans.GraftExtensions      (config route)
-  *   GraftExtensions.register(spark)                        (live session)
+  * so they are first-class SQL functions in every session built through
+  * `graft.GraftSession` (`withExtensions`), or configured with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Functions: float_vec_dot(a,b), simhash64(tokens),
   * minhash_sig(shingles, k), word_shingles(text, k),
@@ -87,11 +86,4 @@ object GraftExtensions {
       new ExpressionInfo(classOf[LshBuckets].getName, "lsh_buckets"),
       (args: Seq[Expression]) => LshBuckets(args(0), intLit(args(1), "nBits"),
         args.drop(2).map(intLit(_, "seed")).toArray)))
-
-  /** Register into an already-running session's function registry. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    registrations.foreach { case (name, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(FunctionIdentifier(name), info, builder)
-    }
 }

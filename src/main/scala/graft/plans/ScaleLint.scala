@@ -27,19 +27,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * free. The rule never rewrites anything — read-only inspection.
   */
 case class ScaleLintRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def mode: String =
-    spark.conf.get(ScaleLint.ConfKey, "off").toLowerCase
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val m = mode
-    if (m == "warn" || m == "fail") {
-      val findings = ScaleLint.findings(plan)
-      findings.foreach { f =>
-        if (m == "fail") throw new ScaleLint.ScaleLintViolation(f)
-        else logWarning(s"[scalelint] $f")
-      }
-    }
+    ScaleLint.report(spark, logWarning(_))(ScaleLint.findings(plan))
     plan
   }
 }
@@ -56,19 +45,9 @@ case class ScaleLintRule(spark: SparkSession) extends Rule[LogicalPlan] {
   */
 case class ScaleLintShuffleRule(spark: SparkSession)
     extends Rule[org.apache.spark.sql.execution.SparkPlan] {
-
-  private def mode: String =
-    spark.conf.get(ScaleLint.ConfKey, "off").toLowerCase
-
   override def apply(plan: org.apache.spark.sql.execution.SparkPlan)
       : org.apache.spark.sql.execution.SparkPlan = {
-    val m = mode
-    if (m == "warn" || m == "fail") {
-      ScaleLint.shuffleFindings(plan).foreach { f =>
-        if (m == "fail") throw new ScaleLint.ScaleLintViolation(f)
-        else logWarning(s"[scalelint] $f")
-      }
-    }
+    ScaleLint.report(spark, logWarning(_))(ScaleLint.shuffleFindings(plan))
     plan
   }
 }
@@ -121,6 +100,28 @@ object ScaleLint {
 
   final class ScaleLintViolation(msg: String) extends RuntimeException(
     s"$msg (set $ConfKey=warn to log instead, or off to disable)")
+
+  /** The session's lint mode: `off` (the default), `warn` or `fail`. */
+  def mode(spark: SparkSession): String =
+    spark.conf.get(ConfKey, "off").toLowerCase
+
+  /** Acts on `findings` by the session's mode: `fail` throws the first,
+    * `warn` logs each through `warn`, and `off` does not inspect at all.
+    */
+  private[plans] def report(spark: SparkSession, warn: String => Unit)(
+      findings: => Seq[String]): Unit =
+    mode(spark) match {
+      case "fail" => findings.headOption.foreach(f => throw new ScaleLintViolation(f))
+      case "warn" => findings.foreach(f => warn(s"[scalelint] $f"))
+      case _ =>
+    }
+
+  private def expandFinding(columns: Int, projections: Int): String =
+    s"multi-distinct Expand replicates an unbounded $columns-column input " +
+      s"${projections}x map-side before the shuffle: plan one single-distinct " +
+      "pass per column and union the 1-row results (the q_profile_columns " +
+      "rewrite), or stamp ScaleLint.expandExempt on an input column if the " +
+      "replication is bounded by construction"
 
   /** The window's input with row-preserving unary nodes peeled off —
     * "directly over a bounded producer" must mean the direct producer
@@ -204,12 +205,7 @@ object ScaleLint {
           distinctGroupTag(e.output, e.projections) &&
           !bounded(producer(e.child)) &&
           !e.child.output.exists(_.metadata.contains(ExpandExemptKey)) =>
-        out += (s"multi-distinct Expand replicates an unbounded " +
-          s"${e.child.output.length}-column input ${e.projections.length}x " +
-          "map-side before the shuffle: plan one single-distinct pass per " +
-          "column and union the 1-row results (the q_profile_columns " +
-          "rewrite), or stamp ScaleLint.expandExempt on an input column " +
-          "if the replication is bounded by construction")
+        out += expandFinding(e.child.output.length, e.projections.length)
       case _ =>
     }
     out.result()
@@ -258,12 +254,7 @@ object ScaleLint {
             distinctGroupTag(e.output, e.projections) &&
             !physBounded(physProducer(e.child)) &&
             !e.child.output.exists(_.metadata.contains(ExpandExemptKey)) =>
-        Seq(s"multi-distinct Expand replicates an unbounded " +
-          s"${e.child.output.length}-column input ${e.projections.length}x " +
-          "map-side before the shuffle: plan one single-distinct pass per " +
-          "column and union the 1-row results (the q_profile_columns " +
-          "rewrite), or stamp ScaleLint.expandExempt on an input column " +
-          "if the replication is bounded by construction")
+        Seq(expandFinding(e.child.output.length, e.projections.length))
       case s: ShuffleExchangeLike =>
         val vecs = s.output.filter(_.dataType match {
           case ArrayType(FloatType, _) => true

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable streaming surface: replays the events fixture through a file
@@ -131,16 +130,10 @@ object StreamMain {
       if (kvArgs.contains("bytes")) ("maxBytesPerTrigger", kvArgs("bytes"))
       else ("maxFilesPerTrigger", kvArgs.getOrElse("files", "1"))
     val op = kvArgs.getOrElse("op", "window")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.LogHygiene.suppressBoundedWindowWarn()
+    // a streaming checkpoint records its shuffle partition count, so it
+    // stays 8 whatever the core count
+    val spark = graft.GraftSession.create("graft-stream",
+      graft.GraftSession.cpus(4), "spark.sql.shuffle.partitions" -> "8")
 
     // The streaming file source needs a DIRECTORY; the fixture is a single
     // parquet file — stage it into a DETERMINISTIC dir derived from the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.copy._
 
 /** Copy-throughput benchmark, comparable to the reference's doc numbers
@@ -25,12 +24,7 @@ object CopyBench {
     }
     require(rangedMiB.isEmpty || nFiles == 1, "ranged= needs nFiles=1")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-copy-bench")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-copy-bench", graft.GraftSession.cpus(32))
 
     val src = Files.createTempDirectory("cbsrc")
     val dst = Files.createTempDirectory("cbdst").resolve("out")

@@ -1,33 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Write FULL `.explain("formatted")` output for named queries to
+/** Write FULL `.explain("formatted")` output for the named queries, or
+  * for every registry query when none are named, to
   * `plans/<round>/<query>_<suffix>.txt` — the optimization-round evidence
-  * files (the judge checks plan claims against these, so unlike the
-  * console `Explain` tool nothing is truncated). Env:
+  * files (plan claims are checked against these, so nothing is
+  * truncated). Env:
   *   SPARK_GRAFT_SF_DIR   fixture (default sf0.1 — the bench fixture, so
   *                        AQE/broadcast decisions match the bench's)
   *   SPARK_GRAFT_PLAN_DIR output dir (default plans/r19)
   *   SPARK_GRAFT_PLAN_SUFFIX  file suffix (default "before")
-  * Args: query names (required — plans are captured per touched query).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.cpus(32)
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r19")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create("graft-explain", cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    args.foreach { n =>
+    val names =
+      if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { n =>
       try {
         val df = graft.SparkEntry.queries(n)(spark, d)
         val plan = df.queryExecution.explainString(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.wordShingles
@@ -200,16 +200,7 @@ object IndexMain {
     def dbl(key: String, dflt: Double): Double =
       kv.get(key).map(_.toDouble).getOrElse(dflt)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.LogHygiene.suppressBoundedWindowWarn()
+    val spark = graft.GraftSession.create("graft-index", graft.GraftSession.cpus(8))
 
     def withSplit(df: DataFrame, id: String, dflt: String): DataFrame =
       kv.getOrElse("split", dflt) match {

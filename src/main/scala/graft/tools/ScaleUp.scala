@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scale-up for stress passes (SCALE.md §stress).
@@ -78,16 +77,8 @@ object ScaleUp {
     val mode = if (args.length == 4) args(3) else "shard"
     require(mode == "shard" || mode == "permute" || mode == "skew",
       s"unknown mode '$mode': use shard | permute | skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.LogHygiene.suppressBoundedWindowWarn()
+    val cpus = graft.GraftSession.cpus(32)
+    val spark = graft.GraftSession.create("graft-scale-up", cpus)
 
     // Dimensions stay fixed (the realistic fact-growth-at-fixed-dims
     // shape: new orders/events arrive, the customer/part/supplier
@@ -112,7 +103,7 @@ object ScaleUp {
           else col(c)
         }: _*)
       }.reduce(_.unionByName(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
     replicateFacts("orders", Map("o_orderkey" -> true))
@@ -179,7 +170,7 @@ object ScaleUp {
           .withColumn("n_chars", length(col("text")).cast("int"))
       }
     docsOut
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
@@ -204,7 +195,7 @@ object ScaleUp {
             .otherwise(col("embedding")))
       }
     embOut
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
     val nd = spark.read.parquet(s"$out/documents.parquet").count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew probe for the hot-key classes the planted-skew stress targets
@@ -21,16 +20,7 @@ object SkewStats {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: SkewStats <sfDir>")
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.LogHygiene.suppressBoundedWindowWarn()
+    val spark = graft.GraftSession.create("graft-skew-stats", graft.GraftSession.cpus(32))
 
     def hashStats(hashed: org.apache.spark.sql.DataFrame, bands: Int)
         : (Long, Long, Long) = {

@@ -4,24 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local SparkSession for all specs (one JVM, forked by sbt); a
-  * spec that stops it gets a new one on the next call.
+/** Shared local SparkSession for all specs (one JVM, forked by sbt), built
+  * like every main's; a spec that stops it gets a new one on the next call.
   */
 object SparkTestSession {
   private var session: SparkSession = _
 
   def spark: SparkSession = synchronized {
     if (session == null || session.sparkContext.isStopped) {
-      session = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      session.sparkContext.setLogLevel("WARN")
-      graft.plans.LogHygiene.suppressBoundedWindowWarn()
+      // a fixed 4 cores, not SPARK_GRAFT_CPUS: specs pin plan shapes and
+      // partition counts that must not follow the machine's core count
+      session = GraftSession.create("graft-test", 4)
     }
     session
   }
@@ -30,6 +23,21 @@ object SparkTestSession {
 trait SparkSpec extends AnyFunSuite with Matchers {
   def spark: SparkSession = SparkTestSession.spark
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Runs `f` on a new session from `GraftSession.create` that shares the
+    * running context (the shared session's runtime conf stays untouched),
+    * then restores the shared session.
+    */
+  def withNewSession[A](conf: (String, String)*)(f: SparkSession => A): A = {
+    val shared = spark // force-init the shared session (and its context)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try f(GraftSession.create("graft-test-new", 4, conf: _*))
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
 
   def tmpDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)

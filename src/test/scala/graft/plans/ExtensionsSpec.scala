@@ -3,13 +3,12 @@ package graft.plans
 import graft.SparkSpec
 
 /** The native expressions are registered as SQL functions via
-  * SparkSessionExtensions (config route) or GraftExtensions.register (live
-  * session). Both paths share `registrations`.
+  * SparkSessionExtensions, which every `GraftSession` (the shared test
+  * session too) injects from `registrations`.
   */
 class ExtensionsSpec extends SparkSpec {
 
   test("native functions callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  float_vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),

@@ -6,42 +6,21 @@ import graft.SparkSpec
 
 /** End-to-end test of the PRODUCTION injection route: a SparkSession built
   * through `GraftExtensions` must get the native SQL functions and all
-  * three ScaleLint hooks without any explicit register() call. The config
+  * three ScaleLint hooks without any explicit registration. The config
   * form (`spark.sql.extensions=graft.plans.GraftExtensions`) is a STATIC
   * conf read at SparkContext creation, which a shared-context test JVM
-  * cannot exercise — so this spec uses the equivalent public
+  * cannot exercise — so this spec builds its sessions through
+  * `GraftSession.create`, which takes the equivalent public
   * `builder.withExtensions(new GraftExtensions)` route (same class, same
-  * hooks; only the class-name parsing is Spark's own machinery) and
-  * restores the shared session afterwards.
+  * hooks; only the class-name parsing is Spark's own machinery).
   *
   * Constructing the extension sizes Spark's JVM-wide codegen cache (a
   * system property read by every new SparkConf) unless a size was set.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
-  private def withExtensionSession[A](extraConf: (String, String)*)(
-      f: SparkSession => A): A = {
-    val shared = spark // force-init the shared session (and its context)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = {
-      val b = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      extraConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-        .getOrCreate()
-    }
-    try f(s)
-    finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
-
   test("spark.sql.extensions route registers the native SQL functions") {
-    withExtensionSession() { s =>
+    withNewSession() { s =>
       val r = s.sql(
         """SELECT float_vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
                                 array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
@@ -62,7 +41,7 @@ class GraftExtensionsSpec extends SparkSpec {
         .repartition(2, col("vec_id")) // embedding rides the exchange
     }
     for (aqe <- Seq("true", "false"))
-      withExtensionSession(
+      withNewSession(
         "spark.sql.adaptive.enabled" -> aqe,
         ScaleLint.ConfKey -> "fail") { s =>
         val ex = intercept[Exception] { offender(s).collect() }
@@ -83,7 +62,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("injected logical lint flags a global window at plan time") {
-    withExtensionSession(ScaleLint.ConfKey -> "fail") { s =>
+    withNewSession(ScaleLint.ConfKey -> "fail") { s =>
       import s.implicits._
       val df = (1 to 100).map(i => (i.toLong, i * 1.0)).toDF("id", "v")
       val bad = df.select(org.apache.spark.sql.functions.ntile(4)
@@ -125,11 +104,7 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("a fresh context built withExtensions gets the cache size; a builder .config wins") {
     def fresh(conf: (String, String)*): String = {
-      val b = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-      val s = conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
+      val s = graft.GraftSession.create("graft-test-fresh", 2, conf: _*)
       try s.conf.get(cacheKey) finally s.stop()
     }
     withCacheProperty(None) {
