@@ -12,7 +12,7 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
 
   /** A `local[cpus]` session with one shuffle partition per core, UTC
-    * session time, `events.parquet`'s TIMESTAMP(NANOS) read as Long
+    * session time, a TIMESTAMP(NANOS) parquet column read as Long
     * (`Tables.events` converts it), no UI, and the native SQL functions,
     * ScaleLint hooks and codegen-cache size of [[plans.GraftExtensions]].
     * Each `conf` pair is applied after the policy, so it wins.

@@ -32,10 +32,11 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val df = DatasetBridge.cachedRelation(spark,
       md5Hex(sourceIdentity(spark, path)), spark.read.parquet(path))
-    // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads as a
-    // raw Long (spark.sql.legacy.parquet.nanosAsLong — set in every session
-    // we build). Normalize to TimestampType (µs, floor) right at the scan
-    // so the whole engine sees one timestamp type.
+    // An events.ts stored as TIMESTAMP(NANOS) parquet reads only as a raw
+    // Long (spark.sql.legacy.parquet.nanosAsLong — set in every session we
+    // build); normalize it to TimestampType (µs, floor) right at the scan.
+    // The fixtures store microseconds without a zone, which Spark reads as
+    // TIMESTAMP_NTZ and which passes through unchanged.
     if (name == "events") normalizeNanosTs(df) else df
   }
 

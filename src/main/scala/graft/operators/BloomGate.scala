@@ -139,11 +139,9 @@ object BloomGate {
   // Layout under `dir`:
   //   keys/    (id LONG, key <keyType>)  — the exact-confirm side
   //   filter/  one row (filter BINARY)   — the serialized Bloom filter
-  //   meta/    (rows, expected_items, fpp, num_bits)  — written LAST, so
-  //            its _SUCCESS is the commit marker (ArtifactPaths.exists)
-  //   appends/<key>/keys/  — committed keyed appends (streaming
-  //            maintenance; each subtree's _SUCCESS is its own commit
-  //            marker, torn ones are invisible to load)
+  //   meta/    (rows, expected_items, fpp, num_bits)  — written LAST
+  //   appends/<key>/keys/  — keyed appends (streaming maintenance)
+  // committed, rebuilt and replayed by the ArtifactPaths protocol
   //
   // Takedown posture: a Bloom filter admits NO deletes — a tombstoned id
   // stays set in the filter until the next rebuild/compact. That is a
@@ -161,9 +159,8 @@ object BloomGate {
       rows: Long, expectedItems: Long, fpp: Double)
 
   /** Build + persist: corpus keys, their Bloom filter, meta-last.
-    * `expectedItems < 0` sizes from the stored key count. Rebuild
-    * semantics: clears tombstones (the input already excludes removed
-    * rows — stale tombstones must not suppress fresh ids).
+    * `expectedItems < 0` sizes from the stored key count. A rebuild
+    * starts with [[ArtifactPaths.rebuild]].
     */
   // --- Single-writer enforcement (maintenance writes) -------------------
   // append/appendKeyed are a read-modify-write on the shared filter bits:
@@ -282,10 +279,7 @@ object BloomGate {
       expectedItems: Long = -1L, fpp: Double = 0.01): Unit = withWriterLease(dir) {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Tombstones.clear(dir)
-    // rebuild compaction: the fresh base holds every live key, so stale
-    // keyed-append subtrees must not survive to double-count them
-    clearKeyedAppends(dir)
+    ArtifactPaths.rebuild(dir)
     corpus.select(col(idName).cast("long").as("id"), col(keyName).as("key"))
       .write.mode("overwrite").parquet(s"$dir/keys")
     val keys = spark.read.parquet(s"$dir/keys")
@@ -304,34 +298,16 @@ object BloomGate {
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     val filter = spark.read.parquet(s"$dir/filter")
       .collect()(0).getAs[Array[Byte]]("filter")
-    // base keys + committed keyed appends (keys/_SUCCESS as the commit
-    // marker — a torn appendKeyed is invisible, the loadBandIndex rule).
+    // base keys + committed keyed appends (ArtifactPaths.committedAppends).
     // `excludeAppend` carves out ONE append subtree: the streaming sink
     // probes with its own batch key excluded, so a replayed batch sees
     // exactly the pre-batch corpus and rewrites identical output.
-    val keyDirs = s"$dir/keys" +: committedAppendKeys(dir)
-      .filterNot(excludeAppend.contains).map(k => s"$dir/appends/$k/keys")
+    val keyDirs = s"$dir/keys" +: ArtifactPaths.committedAppends(dir, "keys",
+      excludeAppend).map(k => s"$dir/appends/$k/keys")
     LoadedBloom(filter,
       Tombstones.exclude(spark.read.parquet(keyDirs: _*), spark, dir, "id"),
       meta.getAs[Long]("rows"), meta.getAs[Long]("expected_items"),
       meta.getAs[Double]("fpp"))
-  }
-
-  /** Keys of committed keyed appends, in stable order. */
-  private def committedAppendKeys(dir: String): Seq[String] = {
-    val d = new java.io.File(s"$dir/appends")
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq
-      .filter(k => new java.io.File(k, "keys/_SUCCESS").isFile)
-      .map(_.getName).sorted
-  }
-
-  private def clearKeyedAppends(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      if (f.exists()) f.delete(): Unit
-    }
-    rm(new java.io.File(s"$dir/appends"))
   }
 
   /** Probe-only gate against a persisted artifact: same exact-anti-join
@@ -392,10 +368,9 @@ object BloomGate {
   }
 
   /** Idempotent keyed append — the streaming-maintenance twin of
-    * [[append]] (NearDup.appendToBandIndexKeyed's layout rule): new keys
-    * land in a per-key overwrite subtree `appends/<key>/keys` whose
-    * `_SUCCESS` is the commit marker, so a replayed micro-batch REWRITES
-    * its own subtree instead of double-appending. Write order is
+    * [[append]]: new keys land in the keyed subtree `appends/<key>/keys`
+    * (the [[ArtifactPaths]] protocol: a replayed micro-batch writes
+    * nothing, a colliding one is refused). Write order is
     * crash-shaped and deliberately filter-FIRST: a key set in the filter
     * but absent from the keys table just rides the maybe path and
     * confirms new (over-containment is harmless), while the reverse
@@ -407,37 +382,21 @@ object BloomGate {
     */
   def appendKeyed(spark: SparkSession, dir: String, batch: DataFrame,
       idName: String, keyName: String, key: String): Unit = withWriterLease(dir) {
-    require(key.nonEmpty && key.forall(c => c.isLetterOrDigit || c == '_' ||
-      c == '-' || c == '='), s"append key '$key' must be a filesystem-safe token")
-    val idx = load(spark, dir, excludeAppend = Some(key))
+    val subtree = ArtifactPaths.appendSubtree(dir, key, "keys")
     val add = batch.select(col(idName).cast("long").as("id"),
       col(keyName).as("key"))
-      .localCheckpoint() // feeds the filter build AND the keys write
-    // Overwrite guard: a replayed micro-batch legitimately rewrites its
-    // own subtree with the SAME rows (idempotence), but a committed
-    // subtree holding a DIFFERENT key set means two distinct jobs collided
-    // on one append key (e.g. a shared jobKey after a checkpoint wipe) —
-    // overwriting would permanently drop the earlier job's keys from the
-    // exact-confirm side while their bits stay set in the filter, so their
-    // future duplicates would be admitted forever. Refuse loudly instead.
-    val subtree = s"$dir/appends/$key/keys"
-    if (new java.io.File(s"$subtree/_SUCCESS").isFile) {
-      val existing = spark.read.parquet(subtree)
-      val differs = existing.exceptAll(add).head(1).nonEmpty ||
-        add.exceptAll(existing).head(1).nonEmpty
-      if (differs) throw new IllegalStateException(
-        s"appendKeyed: committed append subtree '$key' under $dir holds a " +
-          "different key set than the incoming batch — two jobs are " +
-          "colliding on one append key (distinct jobKey per job, stable " +
-          "across restarts of the same checkpointed query). Overwriting " +
-          "would drop the earlier job's keys from the confirm side.")
+      .localCheckpoint() // feeds the guard, the filter build AND the keys write
+    // a committed replay already merged its keys into the filter (filter
+    // first), so it writes nothing
+    if (!ArtifactPaths.replayed(subtree, add, "key set")) {
+      val idx = load(spark, dir, excludeAppend = Some(key))
+      val addBytes = buildBloom(add, col("key"), idx.expectedItems, idx.fpp)
+      val merged = orMerge(idx.filter, addBytes)
+      import spark.implicits._
+      Seq(Tuple1(merged)).toDF("filter")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/filter")
+      add.write.mode("overwrite").parquet(subtree)
     }
-    val addBytes = buildBloom(add, col("key"), idx.expectedItems, idx.fpp)
-    val merged = orMerge(idx.filter, addBytes)
-    import spark.implicits._
-    Seq(Tuple1(merged)).toDF("filter")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/filter")
-    add.write.mode("overwrite").parquet(s"$dir/appends/$key/keys")
   }
 
   /** Observed-fpp report for a probe batch — the rebuild-cadence

@@ -29,7 +29,7 @@ object IvfIndex {
   def save(path: String, cents: DataFrame, indexed: DataFrame): Unit = {
     val spark = indexed.sparkSession
     import spark.implicits._
-    Tombstones.clear(path) // rebuild compacts deletes (see Tombstones)
+    ArtifactPaths.rebuild(path)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     indexed.select(col("vec_id"), col("cell"), col("n2"))
       .write.mode("overwrite").parquet(s"$path/cells")

@@ -630,17 +630,12 @@ object Multimodal {
   def hashMedia(media: Dataset[MediaRow]): DataFrame =
     phashHashes(media).toDF("media_id", "ph")
 
-  /** Persisted phash index (ArtifactPaths meta-last convention): the
-    * corpus's (media_id, dHash) pairs — 16 bytes per image, the ONLY
-    * state an incremental image-dedup service needs. A 100 TB image
-    * corpus indexes to ~GBs of hashes: the daily job never re-decodes
-    * the corpus, it probes today's batch against this table.
-    *
-    * Rebuild semantics match every other artifact kind: tombstones and
-    * keyed appends clear (the fresh base already holds every live image),
-    * and the meta directory is DELETED FIRST so a crash mid-rebuild
-    * leaves a torn index invisible to ArtifactPaths.exists — the
-    * meta-last commit point holds for rebuilds, not just first writes.
+  /** Persisted phash index (the [[ArtifactPaths]] commit protocol,
+    * rebuild included): the corpus's (media_id, dHash) pairs — 16 bytes
+    * per image, the ONLY state an incremental image-dedup service needs.
+    * A 100 TB image corpus indexes to ~GBs of hashes: the daily job
+    * never re-decodes the corpus, it probes today's batch against this
+    * table.
     */
   def savePhashIndex(media: Dataset[MediaRow], path: String,
       keyArity: Int = 1, bands: Int = PhashBands): Unit =
@@ -664,9 +659,7 @@ object Multimodal {
       s"bands must divide 64 (2..32), got $bands")
     require(keyArity >= 1 && keyArity <= bands - 1,
       s"keyArity must be in [1, ${bands - 1}], got $keyArity")
-    rmTree(new java.io.File(s"$path/meta")) // invalidate before touching data
-    Tombstones.clear(path)
-    rmTree(new java.io.File(s"$path/appends"))
+    ArtifactPaths.rebuild(path)
     hashes.select(col("media_id"), col("ph"))
       .write.mode("overwrite").parquet(s"$path/hashes")
     Seq((bands, keyArity)).toDF("bands", "keyArity")
@@ -674,43 +667,18 @@ object Multimodal {
       .write.mode("overwrite").parquet(s"$path/meta") // meta-last = commit
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    if (f.exists()) f.delete(): Unit
-  }
-
-  /** Idempotent keyed append — the daily-ingest growth path (the
-    * appendToBandIndexKeyed crash shape): the batch's hashes land under
-    * `appends/<key>/hashes`, committed by that subtree's own `_SUCCESS`;
-    * a replayed batch rewrites its own subtree byte-identically, a torn
-    * append is invisible to load. A committed subtree holding DIFFERENT
-    * rows means two jobs collided on one key — refused loudly (silent
-    * overwrite would drop the earlier batch's images from the index).
+  /** Idempotent keyed append — the daily-ingest growth path: the
+    * batch's hashes land under `appends/<key>/hashes` (the
+    * [[ArtifactPaths]] protocol — a replayed batch writes nothing, a
+    * colliding one is refused, a torn append is invisible to load).
     */
   def appendPhashIndexKeyed(batch: Dataset[MediaRow],
       spark: SparkSession, path: String, key: String): Unit = {
-    require(key.nonEmpty && key.forall(c => c.isLetterOrDigit || c == '_' ||
-      c == '-' || c == '='), s"append key '$key' must be a filesystem-safe token")
+    val subtree = ArtifactPaths.appendSubtree(path, key, "hashes")
     require(ArtifactPaths.exists(path), s"no committed phash index at $path")
     val hashes = phashHashes(batch).toDF("media_id", "ph").localCheckpoint()
-    val subtree = s"$path/appends/$key/hashes"
-    if (new java.io.File(s"$subtree/_SUCCESS").isFile) {
-      val existing = spark.read.parquet(subtree)
-      val differs = existing.exceptAll(hashes).head(1).nonEmpty ||
-        hashes.exceptAll(existing).head(1).nonEmpty
-      if (differs) throw new IllegalStateException(
-        s"appendPhashIndexKeyed: committed append subtree '$key' under " +
-          s"$path holds different hashes than the incoming batch — two " +
-          "jobs are colliding on one append key (distinct key per job, " +
-          "stable across restarts of the same checkpointed query).")
-      // byte-identical replay: the committed subtree already holds
-      // exactly these rows, so return WITHOUT rewriting — mode-overwrite
-      // deletes before it writes, and a crash mid-rewrite would tear a
-      // previously COMMITTED append (its images silently vanish from
-      // loadPhashHashes until the next replay) (r16 ADVICE)
-      return
-    }
-    hashes.write.mode("overwrite").parquet(subtree)
+    if (!ArtifactPaths.replayed(subtree, hashes, "set of hashes"))
+      hashes.write.mode("overwrite").parquet(subtree)
   }
 
   /** The live corpus hash table: base + every COMMITTED keyed append,
@@ -720,12 +688,7 @@ object Multimodal {
     */
   def loadPhashHashes(spark: SparkSession, path: String): DataFrame = {
     require(ArtifactPaths.exists(path), s"no committed phash index at $path")
-    val d = new java.io.File(s"$path/appends")
-    val keyed =
-      if (!d.isDirectory) Seq.empty[String]
-      else d.listFiles().toSeq
-        .filter(k => new java.io.File(k, "hashes/_SUCCESS").isFile)
-        .map(_.getName).sorted
+    val keyed = ArtifactPaths.committedAppends(path, "hashes")
     val all = spark.read.parquet(
       (s"$path/hashes" +: keyed.map(k => s"$path/appends/$k/hashes")): _*)
     Tombstones.exclude(all, spark, path, "media_id")
@@ -815,12 +778,7 @@ object Multimodal {
       maxBandDf: Int = HammingBands.DefaultMaxBandDf): PhashStats = {
     val (bands, keyArity) = loadPhashBanding(spark, path)
     val base = spark.read.parquet(s"$path/hashes").count()
-    val d = new java.io.File(s"$path/appends")
-    val keyed =
-      if (!d.isDirectory) Seq.empty[String]
-      else d.listFiles().toSeq
-        .filter(k => new java.io.File(k, "hashes/_SUCCESS").isFile)
-        .map(_.getName).sorted
+    val keyed = ArtifactPaths.committedAppends(path, "hashes")
     val appended =
       if (keyed.isEmpty) 0L
       else spark.read.parquet(keyed.map(k => s"$path/appends/$k/hashes"): _*)

@@ -610,8 +610,7 @@ object NearDup {
       maxBandDf: Int = DefaultBandMaxDf): Unit = {
     val spark = staticDocs.sparkSession
     import spark.implicits._
-    Tombstones.clear(path) // rebuild compacts deletes (see Tombstones)
-    clearKeyedAppends(path) // ...and folds keyed appends into the base
+    ArtifactPaths.rebuild(path)
     val s0 = staticDocs.filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck"))
       .localCheckpoint()
@@ -648,10 +647,8 @@ object NearDup {
     import spark.implicits._
     val meta = spark.read.parquet(s"$path/meta").collect()(0)
     // the loaded scan = base dirs + every COMMITTED keyed append
-    // (appendToBandIndexKeyed): an append whose docs/_SUCCESS marker is
-    // missing was interrupted mid-write and is invisible here, exactly
-    // like a half-written save is invisible to ArtifactPaths.exists
-    val keyed = committedAppendKeys(path)
+    // (appendToBandIndexKeyed; a torn one is invisible, see ArtifactPaths)
+    val keyed = ArtifactPaths.committedAppends(path, "docs")
     def half(name: String) = spark.read.parquet(
       (s"$path/$name" +: keyed.map(k => s"$path/appends/$k/$name")): _*)
     val emptyDocs = Seq.empty[(Long, Seq[String])].toDF("doc_id", "sh")
@@ -681,31 +678,6 @@ object NearDup {
       appendDocs, members, repBase.unionByName(appendDocs),
       meta.getAs[Int]("numHashes"), meta.getAs[Int]("bands"),
       meta.getAs[Int]("rowsPerBand"))
-  }
-
-  /** Keys of committed keyed appends, in stable order. `leaf` is the
-    * subtree whose `_SUCCESS` marker commits the append (docs for the
-    * band index, wins for the span index).
-    */
-  private def committedAppendKeys(path: String,
-      leaf: String = "docs"): Seq[String] = {
-    val d = new java.io.File(s"$path/appends")
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq
-      .filter(k => new java.io.File(k, s"$leaf/_SUCCESS").isFile)
-      .map(_.getName).sorted
-  }
-
-  /** Rebuild-time compaction of keyed appends (saveBandIndex): the fresh
-    * base already contains every live doc, so stale append subtrees must
-    * not survive to double-count them.
-    */
-  private def clearKeyedAppends(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      if (f.exists()) f.delete(): Unit
-    }
-    rm(new java.io.File(s"$path/appends"))
   }
 
   /** docs must have (doc_id, sh: array<string> of distinct shingles).
@@ -1039,7 +1011,7 @@ object NearDup {
       threshold: Double = DefaultThreshold): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Tombstones.clear(path) // rebuild compacts deletes (see Tombstones)
+    ArtifactPaths.rebuild(path)
     val tau = threshold - 0.0001 // rounded-jaccard guard, as in jaccardPairs
     val c0 = corpus.filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"), size(col("sh")).as("n"),
@@ -1060,7 +1032,9 @@ object NearDup {
     ids.write.mode("overwrite").parquet(s"$path/ids")
     c.write.mode("overwrite").parquet(s"$path/docs")
     cC.members.write.mode("overwrite").parquet(s"$path/members")
-    clearJaccardAppends(path) // rebuild folds appended docs into the base
+    // the fresh base holds every live doc, so stale appended docs must
+    // not survive to double-count them
+    ArtifactPaths.delete(new java.io.File(s"$path/docs_appends"))
     Seq((threshold, JaccardLayout)).toDF("threshold", "layout")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -1080,18 +1054,6 @@ object NearDup {
         s"'$JaccardLayout'; migrate it with `IndexMain compact-jaccard " +
         "<sfDir> <indexDir> dest=<dir>` (NearDup.compactJaccardIndex)")
     meta.getAs[Double]("threshold")
-  }
-
-  /** Rebuild-time compaction of non-keyed jaccard appends: a fresh save's
-    * base already contains every live doc, so stale appended docs must
-    * not survive to double-count them (mirror of clearKeyedAppends).
-    */
-  private def clearJaccardAppends(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      if (f.exists()) f.delete(): Unit
-    }
-    rm(new java.io.File(s"$path/docs_appends"))
   }
 
   /** Incremental index maintenance: append `newDocs` (doc_id, sh) to a
@@ -1308,7 +1270,7 @@ object NearDup {
     // appends/<key>/docs; jaccard kind: docs_appends) into both sides,
     // mirroring loadBandIndex/loadedProbeCandidates' members assembly.
     import spark.implicits._
-    val bandKeys = committedAppendKeys(path)
+    val bandKeys = ArtifactPaths.committedAppends(path, "docs")
     val appendIds: DataFrame = {
       val parts =
         bandKeys.map(k => s"$path/appends/$k/docs") ++
@@ -1438,27 +1400,24 @@ object NearDup {
 
   /** IDEMPOTENT keyed append — the form a streaming maintainer needs
     * (StreamingOps.nearDupMaintainingSink): batch `key`'s rows land under
-    * `$path/appends/$key/{banded,docs}` with OVERWRITE semantics, so an
-    * at-least-once replay of the same micro-batch REWRITES its own
-    * subtree instead of double-appending rows (the index-maintenance
-    * analog of idempotentParquetSink — plain appendToBandIndex would
-    * duplicate every replayed doc, and duplicated docs rows multiply
-    * verified match rows through the re-attach join). `docs` is written
-    * LAST: its parquet _SUCCESS marker is the append's commit point, and
-    * loadBandIndex ignores uncommitted append subtrees, so a crash
-    * mid-append leaves the artifact readable at its previous state.
-    * Same frozen-parameters contract as appendToBandIndex; caller owns
-    * doc_id uniqueness ACROSS keys (within a key, replay overwrites).
+    * `$path/appends/$key/{banded,docs}`, `docs` last as the commit leaf
+    * (the [[ArtifactPaths]] protocol), so an at-least-once replay of the
+    * same micro-batch writes nothing instead of double-appending rows
+    * (plain appendToBandIndex would duplicate every replayed doc, and
+    * duplicated docs rows multiply verified match rows through the
+    * re-attach join), and a different batch under a committed key is
+    * refused. Same frozen-parameters contract as appendToBandIndex;
+    * caller owns doc_id uniqueness ACROSS keys.
     */
   def appendToBandIndexKeyed(newDocs: DataFrame,
       spark: org.apache.spark.sql.SparkSession, path: String,
       key: String, maxBandDf: Int = DefaultBandMaxDf): Unit = {
-    require(key.nonEmpty && key.forall(c => c.isLetterOrDigit || c == '_' ||
-      c == '-' || c == '='), s"append key '$key' must be a filesystem-safe token")
-    val meta = spark.read.parquet(s"$path/meta").collect()(0)
+    val docs = ArtifactPaths.appendSubtree(path, key, "docs")
     val s = newDocs.filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"))
-      .localCheckpoint() // feeds both the banding pass and the docs write
+      .localCheckpoint() // feeds the guard, the banding pass and the docs write
+    if (ArtifactPaths.replayed(docs, s, "set of docs")) return
+    val meta = spark.read.parquet(s"$path/meta").collect()(0)
     val banded = withBandKeys(s, meta.getAs[Int]("numHashes"),
         meta.getAs[Int]("bands"), meta.getAs[Int]("rowsPerBand"))
       .select(col("bandKey"), col("doc_id"))
@@ -1471,12 +1430,12 @@ object NearDup {
     // this batch's banded rows for any key whose ACCUMULATED df (base +
     // OTHER committed appends + this batch) exceeds the cap. Cost per
     // batch: one bandKey-column scan of the standing halves, restricted
-    // by a broadcast semi-join to the batch's own keys. Replay safety:
-    // the key's own prior subtree is excluded, so an at-least-once
-    // replay counts itself once. Same declared trim semantics as the
-    // build cap — a doc whose every colliding band is trimmed is matched
-    // through its other bands or not at all.
-    val others = committedAppendKeys(path).filterNot(_ == key)
+    // by a broadcast semi-join to the batch's own keys. A committed
+    // replay returned above, so this batch is never counted twice. Same
+    // declared trim semantics as the build cap — a doc whose every
+    // colliding band is trimmed is matched through its other bands or
+    // not at all.
+    val others = ArtifactPaths.committedAppends(path, "docs")
     val standing = spark.read.parquet(
         (s"$path/banded" +: others.map(k => s"$path/appends/$k/banded")): _*)
       .select(col("bandKey"))
@@ -1491,7 +1450,7 @@ object NearDup {
       .select(col("bandKey"))
     banded.join(broadcast(over), Seq("bandKey"), "left_anti")
       .write.mode("overwrite").parquet(s"$path/appends/$key/banded")
-    s.write.mode("overwrite").parquet(s"$path/appends/$key/docs")
+    s.write.mode("overwrite").parquet(docs)
   }
 
   /** Asymmetric containment near-dup: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|,
@@ -1756,8 +1715,8 @@ object NearDup {
   // batch operator's posture.
   //
   // Layout under `path`: wins/ (doc_id, wh) base; appends/<key>/wins/
-  // keyed subtrees (committed by their own _SUCCESS); meta/ (spanTokens)
-  // written LAST as the commit marker.
+  // keyed subtrees; meta/ (spanTokens) written LAST (the ArtifactPaths
+  // commit protocol).
   // ---------------------------------------------------------------------
 
   /** (doc_id, wh) window keys under the [[tokenSpanPairs]] hash scheme —
@@ -1776,8 +1735,7 @@ object NearDup {
       spanTokens: Int = DefaultSpanTokens): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    Tombstones.clear(path)
-    clearKeyedAppends(path)
+    ArtifactPaths.rebuild(path)
     spanWindowKeys(docs.select(col("doc_id"), col("text")), spanTokens)
       .write.mode("overwrite").parquet(s"$path/wins")
     Seq(Tuple1(spanTokens)).toDF("spanTokens")
@@ -1793,8 +1751,7 @@ object NearDup {
       excludeKey: Option[String] = None): (DataFrame, Int) = {
     val spanTokens = spark.read.parquet(s"$path/meta")
       .collect()(0).getAs[Int]("spanTokens")
-    val keyed = committedAppendKeys(path, leaf = "wins")
-      .filterNot(excludeKey.contains)
+    val keyed = ArtifactPaths.committedAppends(path, "wins", excludeKey)
     val wins = spark.read.parquet(
       (s"$path/wins" +: keyed.map(k => s"$path/appends/$k/wins")): _*)
     (Tombstones.exclude(wins, spark, path, "doc_id"), spanTokens)
@@ -1834,45 +1791,26 @@ object NearDup {
       src: String, dest: String): Unit = {
     import spark.implicits._
     val (wins, spanTokens) = loadSpanIndex(spark, src)
-    Tombstones.clear(dest)
-    clearKeyedAppends(dest)
+    ArtifactPaths.rebuild(dest)
     wins.write.mode("overwrite").parquet(s"$dest/wins")
     Seq(Tuple1(spanTokens)).toDF("spanTokens")
       .coalesce(1).write.mode("overwrite").parquet(s"$dest/meta")
   }
 
-  /** Idempotent keyed append (the appendToBandIndexKeyed crash shape):
-    * the batch's window keys land under `appends/<key>/wins`, committed
-    * by that subtree's own `_SUCCESS`; a replayed batch overwrites its
-    * own subtree byte-identically, a torn append is invisible to load.
+  /** Idempotent keyed append: the batch's window keys land under
+    * `appends/<key>/wins` (the [[ArtifactPaths]] protocol — a replayed
+    * batch writes nothing, a colliding one is refused, a torn append is
+    * invisible to load).
     */
   def appendToSpanIndexKeyed(batch: DataFrame,
       spark: org.apache.spark.sql.SparkSession, path: String,
       key: String): Unit = {
-    require(key.nonEmpty && key.forall(c => c.isLetterOrDigit || c == '_' ||
-      c == '-' || c == '='), s"append key '$key' must be a filesystem-safe token")
+    val subtree = ArtifactPaths.appendSubtree(path, key, "wins")
     val spanTokens = spark.read.parquet(s"$path/meta")
       .collect()(0).getAs[Int]("spanTokens")
     val wins = spanWindowKeys(batch.select(col("doc_id"), col("text")),
       spanTokens).localCheckpoint() // feeds the guard compare AND the write
-    // Overwrite guard (the BloomGate.appendKeyed rule): a replayed
-    // micro-batch legitimately rewrites its own subtree with the SAME
-    // rows, but a committed subtree holding DIFFERENT rows means two
-    // jobs collided on one append key — overwriting would silently drop
-    // the earlier job's docs from the index, so their future span
-    // duplicates would be admitted forever. Refuse loudly instead.
-    val subtree = s"$path/appends/$key/wins"
-    if (new java.io.File(s"$subtree/_SUCCESS").isFile) {
-      val existing = spark.read.parquet(subtree)
-      val differs = existing.exceptAll(wins).head(1).nonEmpty ||
-        wins.exceptAll(existing).head(1).nonEmpty
-      if (differs) throw new IllegalStateException(
-        s"appendToSpanIndexKeyed: committed append subtree '$key' under " +
-          s"$path holds different window keys than the incoming batch — " +
-          "two jobs are colliding on one append key (distinct jobKey per " +
-          "job, stable across restarts of the same checkpointed query). " +
-          "Overwriting would drop the earlier job's docs from the index.")
-    }
-    wins.write.mode("overwrite").parquet(subtree)
+    if (!ArtifactPaths.replayed(subtree, wins, "set of window keys"))
+      wins.write.mode("overwrite").parquet(subtree)
   }
 }

@@ -39,17 +39,16 @@ object PqIndex {
   /** Persist a trained index under `path`: `codebooks` (m·k tiny rows),
     * `codes` = `encoded` projected to (vec_id, n2, code[, cell]) — the
     * ADC scan side, no float payload — and, for IVF-PQ, the `centroids`
-    * table. The `meta` table is written LAST so its `_SUCCESS` marker is
-    * the artifact's commit point (ArtifactPaths.exists). This is the
-    * train-once → save → probe-many production shape: at query time the
-    * ADC pass reads this artifact and the float corpus is touched only to
-    * re-attach pool survivors.
+    * table. The `meta` table is written LAST (the ArtifactPaths commit
+    * protocol). This is the train-once → save → probe-many production
+    * shape: at query time the ADC pass reads this artifact and the float
+    * corpus is touched only to re-attach pool survivors.
     */
   def save(path: String, books: Array[Array[Array[Float]]],
       encoded: DataFrame, cents: Option[DataFrame] = None): Unit = {
     val spark = encoded.sparkSession
     import spark.implicits._
-    Tombstones.clear(path) // rebuild compacts deletes (see Tombstones)
+    ArtifactPaths.rebuild(path)
     val m = books.length
     val kWords = books(0).length
     books.zipWithIndex.flatMap { case (words, s) =>

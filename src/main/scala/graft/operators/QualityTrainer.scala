@@ -216,7 +216,7 @@ object QualityTrainer {
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("v_") &&
         !keep(f.getName))
-      .foreach(deleteRecursively)
+      .foreach(ArtifactPaths.delete)
   }
 
   private def currentVersion(dir: String): Option[String] = {
@@ -225,11 +225,6 @@ object QualityTrainer {
     else Some(new String(
       java.nio.file.Files.readAllBytes(cur.toPath), "UTF-8").trim)
       .filter(_.nonEmpty)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Root of the committed live version: the CURRENT pointer's target,

@@ -181,14 +181,14 @@ object SemDedup {
   // drift as the corpus grows costs RECALL (retrain cadence), never
   // correctness: every emitted pair is still exact-cosine verified.
   //
-  // Artifact layout under `path` (meta written LAST is the
-  // ArtifactPaths.exists commit marker, the PqIndex/IvfIndex contract):
+  // Artifact layout under `path` (meta written LAST — the ArtifactPaths
+  // commit protocol):
   //   centroids/ (cell, cvec, cn2)          — k tiny rows, frozen
   //   grid/      (pos, lo, step)            — frozen SQ8 grid
   //   assign/    (vec_id, cell, bcode, an2) — soft top-p corpus rows
   //   meta/      (k, n_probe, dim)
   //   appends/<key>/{floats,assign}/        — STREAMED keyed appends
-  //     ([[appendBatchKeyed]]; assign/_SUCCESS commits, floats first)
+  //     ([[appendBatchKeyed]]; assign is the commit leaf, floats first)
   //   floats/                               — compact-folded stream floats
   // ---------------------------------------------------------------------
 
@@ -222,17 +222,7 @@ object SemDedup {
       indexVectors: DataFrame, k: Int, nProbe: Int): Unit = {
     val spark = trainVectors.sparkSession
     import spark.implicits._
-    // Rebuild over a COMMITTED artifact: delete meta first, so a crash
-    // mid-rebuild leaves a torn index invisible to ArtifactPaths.exists
-    // instead of an old commit marker over half-rewritten data — the
-    // meta-last commit point holds for rebuilds, not just first writes.
-    def rmMeta(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmMeta)
-      if (f.exists()) f.delete(): Unit
-    }
-    rmMeta(new java.io.File(s"$path/meta"))
-    Tombstones.clear(path) // rebuild compacts deletes (see Tombstones)
-    clearKeyedAppends(path) // ...and folds keyed appends into the base
+    ArtifactPaths.rebuild(path)
     val cents = IvfIndex.centroids(spark, trainVectors, k)
     val grid = Sq8Index.train(trainVectors)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
@@ -248,26 +238,6 @@ object SemDedup {
       .write.mode("overwrite").parquet(s"$path/assign")
     Seq((k, nProbe, grid.lo.length)).toDF("k", "n_probe", "dim")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Keys of committed keyed appends (the NearDup/BloomGate shape): an
-    * append is committed by its `assign/_SUCCESS`; floats are written
-    * BEFORE assign, so a committed append always has its float side.
-    */
-  private def committedAppendKeys(path: String): Seq[String] = {
-    val d = new java.io.File(s"$path/appends")
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq
-      .filter(k => new java.io.File(k, "assign/_SUCCESS").isFile)
-      .map(_.getName).sorted
-  }
-
-  private def clearKeyedAppends(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      if (f.exists()) f.delete(): Unit
-    }
-    rm(new java.io.File(s"$path/appends"))
   }
 
   final case class LoadedModel(cents: DataFrame, grid: Sq8Index.Grid,
@@ -286,7 +256,7 @@ object SemDedup {
     // tombstoned ids drop out (the shared takedown contract,
     // operators/Tombstones): a deleted vector can never pair with a
     // probe batch again, without a rebuild
-    val keyed = committedAppendKeys(path).filterNot(excludeAppend.contains)
+    val keyed = ArtifactPaths.committedAppends(path, "assign", excludeAppend)
     val assign = spark.read.parquet(
       (s"$path/assign" +: keyed.map(k => s"$path/appends/$k/assign")): _*)
     LoadedModel(spark.read.parquet(s"$path/centroids"), grid, nProbe,
@@ -304,7 +274,9 @@ object SemDedup {
     val base =
       if (new java.io.File(s"$path/floats").isDirectory) Seq(s"$path/floats")
       else Seq.empty
-    val keyed = committedAppendKeys(path).filterNot(excludeAppend.contains)
+    // floats are written BEFORE assign, so a committed append always has
+    // its float side
+    val keyed = ArtifactPaths.committedAppends(path, "assign", excludeAppend)
       .filter(k => new java.io.File(s"$path/appends/$k/floats").isDirectory)
       .map(k => s"$path/appends/$k/floats")
     val dirs = base ++ keyed
@@ -327,7 +299,7 @@ object SemDedup {
       appendedFloatRows: Long)
 
   def appendStats(spark: SparkSession, path: String): AppendStats = {
-    val keys = committedAppendKeys(path)
+    val keys = ArtifactPaths.committedAppends(path, "assign")
     def cnt(p: String): Long =
       if (new java.io.File(p).isDirectory) spark.read.parquet(p).count()
       else 0L
@@ -351,16 +323,7 @@ object SemDedup {
     // excludes tombstones, so dest's BASE holds everything live
     val m = load(spark, src)
     val meta = spark.read.parquet(s"$src/meta").collect().head
-    // compacting ONTO a previously committed dest: same meta-first
-    // invalidation as saveWith, so a crash never leaves dest half-new
-    // under an old commit marker
-    def rmMeta(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmMeta)
-      if (f.exists()) f.delete(): Unit
-    }
-    rmMeta(new java.io.File(s"$dest/meta"))
-    Tombstones.clear(dest)
-    clearKeyedAppends(dest)
+    ArtifactPaths.rebuild(dest)
     m.cents.coalesce(1).write.mode("overwrite").parquet(s"$dest/centroids")
     m.grid.lo.indices.map(i => (i, m.grid.lo(i), m.grid.step(i)))
       .toDF("pos", "lo", "step")
@@ -406,15 +369,13 @@ object SemDedup {
   }
 
   /** Streaming twin of [[appendBatch]] — the KEYED idempotent ingest
-    * step (the BloomGate.appendKeyed / span-index crash shape): the
-    * probe excludes the batch's OWN append subtree (a replayed batch
-    * sees exactly the pre-batch corpus and re-emits identical pairs),
-    * the batch's floats land under `appends/<key>/floats` BEFORE its
-    * assignment (whose `_SUCCESS` is the commit marker — a committed
-    * append always has its float side), and a committed subtree holding
-    * a DIFFERENT batch refuses loudly (jobKey collision — overwriting
-    * would drop the earlier job's vectors from the standing side).
-    * Exact verification re-attaches floats from
+    * step (the [[ArtifactPaths]] protocol): the probe excludes the
+    * batch's OWN append subtree (a replayed batch sees exactly the
+    * pre-batch corpus, re-emits identical pairs and writes nothing), the
+    * batch's floats land under `appends/<key>/floats` BEFORE its
+    * assignment (the commit leaf — a committed append always has its
+    * float side), and a different batch under a committed key is
+    * refused. Exact verification re-attaches floats from
     * `baseFloats ∪ storedFloats ∪ batch` — streamed vectors' floats come
     * from the artifact, so later batches can pair against them. One
     * artifact, one ingest discipline: don't mix plain [[appendBatch]]
@@ -422,23 +383,12 @@ object SemDedup {
     */
   def appendBatchKeyed(spark: SparkSession, path: String, batch: DataFrame,
       baseFloats: DataFrame, threshold: Double, key: String): DataFrame = {
-    require(key.nonEmpty && key.forall(c => c.isLetterOrDigit || c == '_' ||
-      c == '-' || c == '='), s"append key '$key' must be a filesystem-safe token")
+    val subtree = ArtifactPaths.appendSubtree(path, key, "assign")
     val m = load(spark, path, excludeAppend = Some(key))
     val batchAssign = assignWithCodes(batch, m.cents, m.grid, m.nProbe)
       .localCheckpoint() // feeds the guard compare, the probe, AND the write
-    val subtree = s"$path/appends/$key/assign"
-    if (new java.io.File(s"$subtree/_SUCCESS").isFile) {
-      val existing = spark.read.parquet(subtree)
-      val differs = existing.exceptAll(batchAssign).head(1).nonEmpty ||
-        batchAssign.exceptAll(existing).head(1).nonEmpty
-      if (differs) throw new IllegalStateException(
-        s"appendBatchKeyed: committed append subtree '$key' under $path " +
-          "holds a different batch — two jobs are colliding on one append " +
-          "key (distinct jobKey per job, stable across restarts of the " +
-          "same checkpointed query). Overwriting would drop the earlier " +
-          "job's vectors from the standing side.")
-    }
+    val replay = ArtifactPaths.replayed(subtree, batchAssign,
+      "batch of vectors")
     val bFloats = batch.select(col("vec_id"), col("embedding"), col("n2"))
     val floats = storedFloats(spark, path, excludeAppend = Some(key))
       .map(sf => baseFloats.select(col("vec_id"), col("embedding"),
@@ -448,8 +398,11 @@ object SemDedup {
       .unionAll(bFloats)
     val result = batchPairs(m, batchAssign, floats, threshold)
       .localCheckpoint()
-    bFloats.write.mode("overwrite").parquet(s"$path/appends/$key/floats")
-    batchAssign.write.mode("overwrite").parquet(subtree)
+    if (!replay) {
+      bFloats.write.mode("overwrite")
+        .parquet(ArtifactPaths.appendSubtree(path, key, "floats"))
+      batchAssign.write.mode("overwrite").parquet(subtree)
+    }
     result
   }
 

@@ -74,7 +74,7 @@ object Sq8Index {
   def save(path: String, grid: Grid, codes: DataFrame): Unit = {
     val spark = codes.sparkSession
     import spark.implicits._
-    Tombstones.clear(path) // rebuild compacts deletes (see Tombstones)
+    ArtifactPaths.rebuild(path)
     grid.lo.indices.map(i => (i, grid.lo(i), grid.step(i)))
       .toDF("pos", "lo", "step")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/grid")

@@ -72,15 +72,10 @@ object Tombstones {
     * deleted docs, so the tombstone table resets with it.
     */
   def clear(path: String): Unit =
-    delete(new java.io.File(s"$path/tombstones"))
+    ArtifactPaths.delete(new java.io.File(s"$path/tombstones"))
 
   private def exists(path: String): Boolean = {
     val d = new java.io.File(s"$path/tombstones")
     d.isDirectory && d.listFiles().exists(_.getName.endsWith(".parquet"))
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    if (f.exists()) f.delete(): Unit
   }
 }

@@ -158,8 +158,10 @@ object StreamMain {
       } else eventsDir
     }
 
-    // File-source replay. The events fixture stores ts as ns (read as Long
-    // under nanosAsLong) — normalize to TimestampType like Tables.events.
+    // File-source replay. The events fixtures store ts as microseconds
+    // without a zone (pyarrow timestamp[us]), which Spark reads as
+    // TIMESTAMP_NTZ; a TIMESTAMP(NANOS) file reads as a Long under
+    // nanosAsLong and is normalized like Tables.events.
     val schema = spark.read.parquet(srcDir).schema
     val raw = spark.readStream
       .schema(schema)
@@ -168,8 +170,11 @@ object StreamMain {
 
     val out = op match {
       case "window" =>
-        StreamingOps.windowedCounts(
-          graft.Tables.normalizeNanosTs(raw), "10 minutes", "10 minutes")
+        // the watermark takes TIMESTAMP only; the session zone is UTC, so
+        // the cast keeps an NTZ wall-clock value
+        StreamingOps.windowedCounts(graft.Tables.normalizeNanosTs(raw)
+            .withColumn("ts", col("ts").cast("timestamp")),
+          "10 minutes", "10 minutes")
       case "neardup" =>
         import graft.functions.TextFunctions.wordShingles
         // documents carry no event time — synthesize a CONSTANT one. A

@@ -152,10 +152,13 @@ object StreamingOps {
     * via the KEYED idempotent append (`NearDup.appendToBandIndexKeyed`,
     * key = batchId) so the index the next batch probes includes this one.
     *
-    * Crash-safety composes from the parts: a replayed batch rewrites both
-    * its match output and its own append subtree; an append that crashed
-    * mid-write has no commit marker and is invisible to the reload, so
-    * the probe side never sees a torn index. Per-batch reload costs a
+    * Crash-safety composes from the parts: a replayed batch rewrites its
+    * match output and leaves its committed append as it is; an append
+    * that crashed mid-write is invisible to the reload, so the probe side
+    * never sees a torn index (the ArtifactPaths protocol). Appends are
+    * keyed by batch id alone, so a second job (a fresh checkpoint) on the
+    * same index fails loudly at its first batch id whose committed append
+    * holds different docs. Per-batch reload costs a
     * parquet listing + meta read (the banded/docs scans stay lazy), which
     * is the price of making intra-run self-reference exact; a job that
     * only needs matches against a FROZEN corpus should keep using
@@ -266,8 +269,8 @@ object StreamingOps {
     * artifact (definitely-new rows bypass the confirm join — the
     * codegen'd literal probe), lands the surviving first-seen rows
     * under `batch=N` (overwrite = idempotent), and appends their keys
-    * via the crash-shaped keyed append (filter first, keys subtree
-    * with its own `_SUCCESS` commit marker).
+    * via the crash-shaped keyed append (filter first, then the keys
+    * subtree of the ArtifactPaths protocol).
     *
     * Replay exactness: the probe EXCLUDES the batch's own append
     * subtree, so a replayed batch — even one whose append committed

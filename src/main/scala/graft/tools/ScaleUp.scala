@@ -63,11 +63,6 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   private val IdStride = 100000000L // replica id namespace; >> any fixture
 
-  private def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteTree)
-    if (f.exists()) f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4,
       "usage: ScaleUp <srcSfDir> <outDir> <factor> [shard|permute|skew]")
@@ -120,7 +115,8 @@ object ScaleUp {
           when(pmod(col("l_orderkey"), lit(10)) === 7, lit(1L))
             .otherwise(col("l_partkey")))
         .write.mode("overwrite").parquet(s"$out/lineitem_skew.parquet")
-      deleteTree(new java.io.File(s"$out/lineitem.parquet"))
+      graft.operators.ArtifactPaths.delete(
+        new java.io.File(s"$out/lineitem.parquet"))
       // renameTo reports failure by Boolean only — a dropped rename here
       // would leave the fixture with NO lineitem.parquet (r16 ADVICE)
       require(new java.io.File(s"$out/lineitem_skew.parquet")

@@ -248,7 +248,7 @@ class BloomGateSpec extends SparkSpec {
     graveyard.exists() shouldBe false
   }
 
-  test("appendKeyed: identical replay rewrites; a DIFFERENT key set on a " +
+  test("appendKeyed: identical replay is accepted; a DIFFERENT key set on a " +
       "committed subtree is refused (jobKey collision)") {
     val sp = spark; import sp.implicits._
     val base = Seq((1L, "a")).toDF("id", "k")

@@ -1295,5 +1295,32 @@ class StreamingSpec extends SparkSpec {
     rows(spark.read.parquet(s"$out/batch=0")) shouldBe streamed
   }
 
+  test("StreamMain op=window replays the events fixture: its timestamp[us] " +
+      "ts (read as TIMESTAMP_NTZ) feeds the watermark") {
+    import org.apache.spark.sql.functions.{count, lit, max, window}
+    val events = s"$sfDir/events.parquet"
+    val out = tmpDir("graft_stream_window").toString + "/out"
+    StreamMain.main(Array(events, out, "files=1")) // stops its session
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("w_start"), col("w_end"), col("event_type"), col("n"))
+        .collect().map(r => (r.getTimestamp(0), r.getTimestamp(1),
+          r.getString(2), r.getLong(3))).toSet
+    val streamed = rows(spark.read.parquet(s"$out/data"))
+    // the closed windows: end at or before the final watermark (max event
+    // time minus the 10-minute delay)
+    val ev = spark.read.parquet(events)
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val watermark = new Timestamp(
+      ev.agg(max(col("ts"))).head().getTimestamp(0).getTime - 10 * 60 * 1000)
+    val closed = ev.groupBy(window(col("ts"), "10 minutes").as("w"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("w.end") <= lit(watermark))
+      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
+        col("event_type"), col("n"))
+    streamed should not be empty
+    streamed shouldBe rows(closed)
+  }
+
   private def col(n: String) = org.apache.spark.sql.functions.col(n)
 }
