@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerFlush
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.DedupClusters
@@ -28,6 +29,12 @@ import graft.operators.DedupClusters
   * Prints one JSON line of per-stage counts. Nothing collects to the
   * driver except those counters; every stage is the scale-shaped variant
   * (see SCALE.md).
+  *
+  * The session stays alive when `main` returns: the next run in the same
+  * JVM reuses its SparkContext through [[GraftSession.create]] and with it
+  * the generated code of the same plans. A standalone run's context stops
+  * at JVM exit, through Spark's shutdown hook. Before returning, `main`
+  * drains the listener bus, so a listener has seen every job of the run.
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
@@ -200,6 +207,7 @@ object PipelineMain {
       s""""pack_files_after":${compacted.filesAfter},""" +
       s""""elapsed_sec":${math.rint((System.nanoTime() - tStart) / 1e7) / 100},""" +
       s""""out":$outJson}""")
-    spark.stop()
+    try ListenerFlush.waitUntilEmpty(spark.sparkContext, 30000)
+    catch { case _: java.util.concurrent.TimeoutException => () }
   }
 }

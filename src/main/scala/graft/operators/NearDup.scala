@@ -640,15 +640,16 @@ object NearDup {
 
   /** Load a saved band index; banding parameters come from the artifact's
     * meta, so the probe side always signs with the parameters the index
-    * was built with.
+    * was built with. `excludeAppend` leaves out that keyed append: a
+    * replayed batch probes without its own docs.
     */
   def loadBandIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): BandIndex = {
+      path: String, excludeAppend: Option[String] = None): BandIndex = {
     import spark.implicits._
     val meta = spark.read.parquet(s"$path/meta").collect()(0)
     // the loaded scan = base dirs + every COMMITTED keyed append
     // (appendToBandIndexKeyed; a torn one is invisible, see ArtifactPaths)
-    val keyed = ArtifactPaths.committedAppends(path, "docs")
+    val keyed = ArtifactPaths.committedAppends(path, "docs", excludeAppend)
     def half(name: String) = spark.read.parquet(
       (s"$path/$name" +: keyed.map(k => s"$path/appends/$k/$name")): _*)
     val emptyDocs = Seq.empty[(Long, Seq[String])].toDF("doc_id", "sh")

@@ -255,7 +255,8 @@ object StreamingOps {
     val b = batch.select(col("doc_id"), col("sh"))
       .filter(size(col("sh")) > 0)
       .localCheckpoint() // feeds the match join AND the append
-    val idx = NearDup.loadBandIndex(spark, indexPath)
+    // without the batch's own append: a replay probes the pre-batch index
+    val idx = NearDup.loadBandIndex(spark, indexPath, Some(batchId.toString))
     NearDup.matchAgainstBandIndex(b, idx, threshold)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     NearDup.appendToBandIndexKeyed(b, spark, indexPath, batchId.toString)

@@ -1,7 +1,21 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.SparkListener
+
+/** A listener installed through `spark.extraListeners`; counts the contexts
+  * that started with it.
+  */
+class GraftSessionSpecListener extends SparkListener {
+  GraftSessionSpecListener.started.incrementAndGet()
+}
+
+object GraftSessionSpecListener {
+  val started = new AtomicInteger
+}
 
 /** `GraftSession.create` is the one session policy every main runs under. */
 class GraftSessionSpec extends SparkSpec {
@@ -26,6 +40,58 @@ class GraftSessionSpec extends SparkSpec {
       plans.ScaleLint.mode(s) shouldBe "fail"
     }
     spark.conf.get("spark.sql.shuffle.partitions") shouldBe "4"
+  }
+
+  test("matching static settings reuse the running context") {
+    val sc = spark.sparkContext
+    withNewSession() { s =>
+      s.sparkContext should be theSameInstanceAs sc
+    }
+    GraftSession.create("graft-test-other-app", 4).sparkContext should be theSameInstanceAs sc
+    sc.isStopped shouldBe false
+  }
+
+  test("a different master starts a new context and stops the old one") {
+    val old = spark.sparkContext
+    val s = GraftSession.create("graft-test-master", 2)
+    try {
+      s.sparkContext should not be theSameInstanceAs(old)
+      s.sparkContext.master shouldBe "local[2]"
+      old.isStopped shouldBe true
+    } finally s.stop()
+  }
+
+  test("a spark.extraListeners system property starts a context that carries it; " +
+      "clearing it starts another") {
+    val key = "spark.extraListeners"
+    val old = spark.sparkContext
+    val before = GraftSessionSpecListener.started.get
+    System.setProperty(key, classOf[GraftSessionSpecListener].getName)
+    val traced = try GraftSession.create("graft-test", 4).sparkContext
+    finally System.clearProperty(key)
+    traced should not be theSameInstanceAs(old)
+    old.isStopped shouldBe true
+    traced.getConf.get(key) shouldBe classOf[GraftSessionSpecListener].getName
+    GraftSessionSpecListener.started.get shouldBe before + 1
+    // without the property the traced context is not what a new one would
+    // start with: the next session gets a context without the listener
+    spark.sparkContext should not be theSameInstanceAs(traced)
+    traced.isStopped shouldBe true
+    spark.sparkContext.getConf.getOption(key) shouldBe None
+    GraftSessionSpecListener.started.get shouldBe before + 1
+  }
+
+  test("a runtime conf keeps the context and applies to the new session") {
+    val sc = spark.sparkContext
+    withNewSession("spark.sql.shuffle.partitions" -> "7",
+        plans.ScaleLint.ConfKey -> "warn") { s =>
+      s.sparkContext should be theSameInstanceAs sc
+      s.conf.get("spark.sql.shuffle.partitions") shouldBe "7"
+      plans.ScaleLint.mode(s) shouldBe "warn"
+    }
+    sc.isStopped shouldBe false
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe "4"
+    plans.ScaleLint.mode(spark) shouldBe "off"
   }
 
   test("no main builds its own session: only GraftSession calls SparkSession.builder") {
