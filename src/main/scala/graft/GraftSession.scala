@@ -37,7 +37,9 @@ object GraftSession {
     * ([[ContextBridge.isRuntime]]). A running context this object started
     * is reused only if it was started with exactly these; one started
     * elsewhere only if its conf holds all of them. Runtime pairs apply to
-    * the returned session, as Spark's `getOrCreate` applies them.
+    * the returned session, as Spark's `getOrCreate` applies them; on a kept
+    * context they are all the builder gets, as its static settings already
+    * match (any more makes Spark warn that they may not take effect).
     */
   def create(app: String, cpus: Int, conf: (String, String)*): SparkSession =
     synchronized {
@@ -53,10 +55,11 @@ object GraftSession {
       val live = ContextBridge.active
       val kept = live.filter(reusable(_, static(settings)))
       if (kept.isEmpty) live.foreach(_.stop())
-      val spark = settings
-        .foldLeft(SparkSession.builder().appName(app).withExtensions(extensions)) {
-          case (b, (k, v)) => b.config(k, v)
-        }
+      val (base, pairs) =
+        if (kept.isEmpty) (SparkSession.builder().appName(app), settings)
+        else (SparkSession.builder(), settings.filter(p => runtime(p._1)))
+      val spark = pairs
+        .foldLeft(base.withExtensions(extensions)) { case (b, (k, v)) => b.config(k, v) }
         .getOrCreate()
       // classified after the start: core confs register as Spark loads them
       if (kept.isEmpty) started = Some(spark.sparkContext -> static(settings))
@@ -69,8 +72,11 @@ object GraftSession {
     * a new SparkConf loads, overridden by the static `settings`.
     */
   private def static(settings: Seq[(String, String)]): Map[String, String] =
-    sys.props.toMap.filter(_._1.startsWith("spark.")) ++
-      settings.filter { case (k, _) => k == "spark.master" || !ContextBridge.isRuntime(k) }
+    sys.props.toMap.filter(_._1.startsWith("spark.")) ++ settings.filterNot(p => runtime(p._1))
+
+  /** True when a session takes `key` at runtime. */
+  private def runtime(key: String): Boolean =
+    key != "spark.master" && ContextBridge.isRuntime(key)
 
   private def reusable(live: SparkContext, wanted: Map[String, String]): Boolean =
     started match {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.graft.ListenerFlush
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
-import graft.operators.DedupClusters
+import graft.operators.{DedupClusters, Pin}
 
 /** End-to-end LLM training-data pipeline over a documents table — the
   * engine's flagship composition, runnable:
@@ -28,7 +28,9 @@ import graft.operators.DedupClusters
   *
   * Prints one JSON line of per-stage counts. Nothing collects to the
   * driver except those counters; every stage is the scale-shaped variant
-  * (see SCALE.md).
+  * (see SCALE.md). Each stage boundary is a [[Pin]]: the stage's count
+  * rides its pin job, and every later query plans over the pinned blocks,
+  * not the whole upstream pipeline.
   *
   * The session stays alive when `main` returns: the next run in the same
   * JVM reuses its SparkContext through [[GraftSession.create]] and with it
@@ -62,16 +64,17 @@ object PipelineMain {
       s"input fails the expectations gate: ${gate.getLong(1)} empty docs, " +
         s"${gate.getLong(2)} duplicate doc_ids")
 
-    // 1. exact dedup (only the digest + id shuffle). Persisted: the stage
-    // output feeds the count, the shingle pipeline, the anti-join and the
-    // write — without persist the groupBy+join lineage would re-execute
-    // for each.
+    // 1. exact dedup (only the digest + id shuffle). Pinned: the stage
+    // output feeds the shingle pipeline, the anti-join and the write —
+    // without the pin the groupBy+join lineage would re-execute for each.
     val exactKeep = docs
       .groupBy(sha2(col("text").cast("binary"), 256).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    val afterExact = exactKeep.join(docs, "doc_id").persist()
-    val nExact = afterExact.count()
+    val exactPin = Pin(exactKeep.join(docs, "doc_id"), "PipelineMain.exact",
+      Seq(count(lit(1)).as("n")))
+    val afterExact = exactPin.frame
+    val nExact = exactPin.long("n")
 
     // 2. near-dup dedup: the shared MinHash/LSH + Jaccard pipeline
     //    (operators.NearDup — same parameters as q_dedup_minhash_lsh) →
@@ -91,9 +94,10 @@ object PipelineMain {
     val dropNearDups = labels
       .join(keepers, labels("doc_id") === keepers("keeper"), "left_anti")
       .select(col("doc_id"))
-    val afterNear = afterExact.join(dropNearDups, Seq("doc_id"), "left_anti")
-      .persist()
-    val nNear = afterNear.count()
+    val nearPin = Pin(afterExact.join(dropNearDups, Seq("doc_id"), "left_anti"),
+      "PipelineMain.near", Seq(count(lit(1)).as("n")))
+    val afterNear = nearPin.frame
+    val nNear = nearPin.long("n")
 
     // 3. quality filter — the same predicates as q_quality_score
     val q = afterNear.filter(qualityOk(col("text"), col("n_chars")))
@@ -106,16 +110,17 @@ object PipelineMain {
     // split (not dedup/quality survivors): an eval doc dropped upstream —
     // exact dedup keeps the min doc_id, which may be a TRAIN duplicate —
     // must still contribute its shingles, or its text leaks into training
-    // via that surviving duplicate. Persisted: the flagged-join subtree
-    // feeds both the count and the enrichment/write lineage.
+    // via that surviving duplicate. Pinned: the flagged-join subtree
+    // feeds the enrichment/write lineage; its count rides the pin.
     val contaminated = graft.operators.Decontaminate.flagged(
       q.filter(col("doc_id") % 50 =!= 0),
       docs.filter(col("doc_id") % 50 === 0), k = 3)
       .select("doc_id")
-    val train = q.filter(col("doc_id") % 50 =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .persist()
-    val nDecontam = train.count()
+    val trainPin = Pin(q.filter(col("doc_id") % 50 =!= 0)
+      .join(contaminated, Seq("doc_id"), "left_anti"),
+      "PipelineMain.decontam", Seq(count(lit(1)).as("n")))
+    val train = trainPin.frame
+    val nDecontam = trainPin.long("n")
 
     // 4. enrichment projections (no shuffle). Scrub FIRST (withColumn, so
     // downstream refs see the scrubbed text — inside a single select the
@@ -129,18 +134,22 @@ object PipelineMain {
     // lm_nll: corpus-trained unigram NLL (operators.LmScore, the same
     // impl as q_lm_score) — trained on the POST-dedup/quality/scrub
     // corpus, which is the distribution the signal should describe.
-    // Left join: token-less docs simply carry null.
+    // Left join: token-less docs simply carry null. The corpus mean rides
+    // the pin; it is NULL when no doc has a score (an empty corpus).
     val nllByDoc = graft.operators.LmScore.nll(
       scrubbed.select(col("doc_id"), tokens(lower(col("text"))).as("toks")))
       .select(col("doc_id"), col("nll").as("lm_nll"))
-    val enriched = scrubbed.select(
+    val enrichPin = Pin(scrubbed.select(
       col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"),
       tokenCount(col("text")).as("n_tokens"),
       bpeishTokenCount(col("text")).cast("long").as("n_bpeish"),
       langIdHeuristic(col("text")).as("lang_pred"),
       fingerprint(col("text")).as("fp"))
-      .join(nllByDoc, Seq("doc_id"), "left_outer")
-      .persist()
+      .join(nllByDoc, Seq("doc_id"), "left_outer"),
+      "PipelineMain.enrich", Seq(round(avg(col("lm_nll")), 4).as("mean_lm_nll")))
+    val enriched = enrichPin.frame
+    val meanNll = Option(enrichPin.metrics.getAs[java.lang.Double]("mean_lm_nll"))
+      .fold("null")(_.toString)
 
     // 5. sequence packing: doc→pack manifest at a 512-token budget
     val packs = graft.operators.SeqPack.pack(
@@ -183,9 +192,6 @@ object PipelineMain {
       enriched.schema.filterNot(_.name == "lang") :+ enriched.schema("lang"))
     val written = spark.read.schema(docsSchema).parquet(s"$outDir/docs")
       .count()
-    val meanNll = enriched.agg(round(avg(col("lm_nll")), 4)).head().getDouble(0)
-    afterExact.unpersist(); afterNear.unpersist(); train.unpersist()
-    enriched.unpersist()
 
     // 7. maintenance: compact the pack manifest (a per-partition write
     // leaves one file per task — the small-file aftermath §SCALE.md) to

@@ -50,15 +50,13 @@ object DedupClusters {
     // edge materialization itself and the standalone pin job disappears.
     // the edge count rides the materialization job via observe (r20) —
     // the r19 shape ran a separate count() job over the pinned blocks
-    val edgeObs = org.apache.spark.sql.Observation()
-    val edgesRaw = pairs
+    val edgePin = Pin(pairs
       .select(explode(array(
         struct(col("id_a").as("u"), col("id_b").as("v")),
         struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct()
-      .observe(edgeObs, count(lit(1)).as("n"))
-      .localCheckpoint() // materialize once; iterations re-join it
+      .distinct(), "DedupClusters.components", Seq(count(lit(1)).as("n")))
+    val edgesRaw = edgePin.frame // materialized once; iterations re-join it
     // NOTE on unpersist() here and below: a localCheckpoint's blocks are
     // NOT freed synchronously by Dataset.unpersist (CacheManager has
     // nothing cached for them) — they are reclaimed by the ContextCleaner
@@ -74,8 +72,7 @@ object DedupClusters {
     // rows through 32-partition shuffles × 3 joins × k iterations makes
     // fixed per-shuffle overhead the dominant cost. The count rode the
     // materialization job above.
-    val nEdges =
-      Observed.metric[Long](edgeObs, "DedupClusters.components", "n")
+    val nEdges = edgePin.long("n")
     // SINGLE-TASK union-find fast path (r19 opt, guide §1.2 "the
     // distributed algorithm"): dup-pair graphs are a sliver of the
     // corpus, and below MaxLocalEdges (16 MB of long pairs) the entire
@@ -167,25 +164,22 @@ object DedupClusters {
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
         .repartition(parts, col("label"))
       // (b) pointer jump: label := label's label (labels only decrease)
-      val obs = org.apache.spark.sql.Observation(s"dedupClustersChanged_$i")
-      val next = stepped.alias("s")
+      // eager: the observed metric is final once the pin returns; `prev`
+      // is read by the metric, not stored
+      val next = Pin(stepped.alias("s")
         .join(stepped.select(col("doc_id").as("l2"), col("label").as("ll"))
           .repartition(parts, col("l2")).alias("t"),
           col("s.label") === col("l2"), "left_outer")
         .select(col("s.doc_id").as("doc_id"), col("s.prev").as("prev"),
           least(col("s.label"), coalesce(col("ll"), col("s.label")))
-            .as("label"))
-        .observe(obs,
-          count(when(col("label") =!= col("prev"), lit(1))).as("changed"))
-        .select(col("doc_id"), col("label"))
-        .repartition(parts, col("doc_id"))
-        .localCheckpoint() // eager: the observed metric is final once this returns
+            .as("label")), "DedupClusters.components",
+        Seq(count(when(col("label") =!= col("prev"), lit(1))).as("changed")),
+        _.select(col("doc_id"), col("label")).repartition(parts, col("doc_id")))
       // labels only decrease, so label == prev everywhere is a fixed
       // point forever
-      converged = Observed.metric[Long](obs, "DedupClusters.components",
-        "changed") == 0L
+      converged = next.long("changed") == 0L
       labels.unpersist() // superseded generation
-      labels = next
+      labels = next.frame
       i += 1
     }
     edges.unpersist()

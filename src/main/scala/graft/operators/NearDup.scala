@@ -250,15 +250,13 @@ object NearDup {
     // micro-batch) sums to NULL and the r18 .getLong crashed the
     // streaming sink on every replay of that poison-pill batch (r18
     // ADVICE); coalesce folds it to the trivial collapse instead.
-    val obs = org.apache.spark.sql.Observation()
-    val classes = d0.select(col("doc_id"), col("ck"))
+    val census = Pin(d0.select(col("doc_id"), col("ck"))
       .groupBy(col("ck"))
-      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m"))
-      .observe(obs,
-        coalesce(sum(col("m")) - count(lit(1)), lit(0L)).as("dupExtra"))
-      .localCheckpoint()
-    val dupExtra =
-      Observed.metric[Long](obs, "NearDup.exactSetMembers", "dupExtra")
+      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m")),
+      "NearDup.exactSetMembers",
+      Seq(coalesce(sum(col("m")) - count(lit(1)), lit(0L)).as("dupExtra")))
+    val classes = census.frame
+    val dupExtra = census.long("dupExtra")
     val reps0 = d0.drop("ck")
     if (dupExtra == 0)
       SetCollapse(

@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.SparkListener
 
 /** A listener installed through `spark.extraListeners`; counts the contexts
@@ -49,6 +54,24 @@ class GraftSessionSpec extends SparkSpec {
     }
     GraftSession.create("graft-test-other-app", 4).sparkContext should be theSameInstanceAs sc
     sc.isStopped shouldBe false
+  }
+
+  test("a reused context gets no warning that its settings may not take effect") {
+    val sc = spark.sparkContext
+    val warnings = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-session-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(s"${e.getLevel} ${e.getLoggerName}: " +
+          e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try GraftSession.create("graft-test-reuse", 4).sparkContext should
+      be theSameInstanceAs sc
+    finally { root.removeAppender(capture); capture.stop() }
+    warnings.asScala.filter(_.contains("Using an existing Spark session")) shouldBe empty
   }
 
   test("a different master starts a new context and stops the old one") {

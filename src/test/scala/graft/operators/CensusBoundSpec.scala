@@ -125,12 +125,12 @@ class CensusBoundSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     val obs = org.apache.spark.sql.Observation("neverRan")
     Seq(1L, 2L).toDF("x").observe(obs, count(lit(1)).as("n")) // no action
-    val e = intercept[IllegalStateException](Observed.metric[Long](obs,
-      "CensusBoundSpec", "n", scala.concurrent.duration.Duration(200, "ms")))
+    val e = intercept[IllegalStateException](Observed.row(obs,
+      "CensusBoundSpec", scala.concurrent.duration.Duration(200, "ms")))
     e.getMessage should (include("CensusBoundSpec") and include("neverRan"))
     // the same read after an action returns the metric
     val ran = org.apache.spark.sql.Observation("ran")
     Seq(1L, 2L).toDF("x").observe(ran, count(lit(1)).as("n")).collect()
-    Observed.metric[Long](ran, "CensusBoundSpec", "n") shouldBe 2L
+    Observed.row(ran, "CensusBoundSpec").getAs[Long]("n") shouldBe 2L
   }
 }
