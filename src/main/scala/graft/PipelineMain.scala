@@ -86,7 +86,7 @@ object PipelineMain {
       .select(col("doc_id"), wordShingles(col("text"), 3).as("sh"))
     val verified = graft.operators.NearDup.verifiedPairs(withShingles)
       .select("id_a", "id_b")
-    val labels = DedupClusters.components(verified).localCheckpoint()
+    val labels = Pin(DedupClusters.components(verified))
     val keepers = DedupClusters.keepersByLabels(labels,
         afterExact.select(col("doc_id"),
           qualityScore(col("text"), col("n_chars")).as("score")))
@@ -94,14 +94,17 @@ object PipelineMain {
     val dropNearDups = labels
       .join(keepers, labels("doc_id") === keepers("keeper"), "left_anti")
       .select(col("doc_id"))
+    // the near pin also counts the survivors of stage 3's filter
+    val quality = qualityOk(col("text"), col("n_chars"))
     val nearPin = Pin(afterExact.join(dropNearDups, Seq("doc_id"), "left_anti"),
-      "PipelineMain.near", Seq(count(lit(1)).as("n")))
+      "PipelineMain.near",
+      Seq(count(lit(1)).as("n"), count(when(quality, 1)).as("quality")))
     val afterNear = nearPin.frame
     val nNear = nearPin.long("n")
 
     // 3. quality filter — the same predicates as q_quality_score
-    val q = afterNear.filter(qualityOk(col("text"), col("n_chars")))
-    val nQuality = q.count()
+    val q = afterNear.filter(quality)
+    val nQuality = nearPin.long("quality")
 
     // 3.5 eval-split decontamination — the shared operator behind
     // q_decontaminate: the held-out split (doc_id % 50 == 0) never enters

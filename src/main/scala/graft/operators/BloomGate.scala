@@ -383,9 +383,8 @@ object BloomGate {
   def appendKeyed(spark: SparkSession, dir: String, batch: DataFrame,
       idName: String, keyName: String, key: String): Unit = withWriterLease(dir) {
     val subtree = ArtifactPaths.appendSubtree(dir, key, "keys")
-    val add = batch.select(col(idName).cast("long").as("id"),
-      col(keyName).as("key"))
-      .localCheckpoint() // feeds the guard, the filter build AND the keys write
+    val add = Pin(batch.select(col(idName).cast("long").as("id"),
+      col(keyName).as("key"))) // feeds the guard, the filter build AND the keys write
     // a committed replay already merged its keys into the filter (filter
     // first), so it writes nothing
     if (!ArtifactPaths.replayed(subtree, add, "key set")) {

@@ -90,10 +90,9 @@ object BpeTrainer {
     * learned merges in order. Stops early when no pair remains.
     */
   def train(words: DataFrame, k: Int): Seq[Merge] = {
-    var syms = words
-      .select(col("freq"), split(col("word"), "").as("seq"))
-      .localCheckpoint(true)
-    var stats = pairCounts(syms).localCheckpoint(true)
+    var syms = Pin(words
+      .select(col("freq"), split(col("word"), "").as("seq")))
+    var stats = Pin(pairCounts(syms))
     val merges = Seq.newBuilder[Merge]
     var step = 0
     var done = false
@@ -117,19 +116,17 @@ object BpeTrainer {
         // hasAdjacent, since the greedy rewrite changes a sequence iff
         // the pair occurs. Old pair counts subtract from the SAME
         // pinned rows the new ones add from.
-        val merged = syms.select(col("freq"), col("seq"),
-            mergeSeq(col("seq"), a, b).as("seq2"))
-          .localCheckpoint(true)
+        val merged = Pin(syms.select(col("freq"), col("seq"),
+            mergeSeq(col("seq"), a, b).as("seq2")))
         val changed = merged.filter(!(col("seq2") === col("seq")))
         val delta = pairCounts(changed.select(col("freq"), col("seq2").as("seq")))
           .union(pairCounts(changed.select(col("freq"), col("seq")))
             .withColumn("pair_freq", -col("pair_freq")))
         syms = merged.select(col("freq"), col("seq2").as("seq"))
-        stats = stats.union(delta)
+        stats = Pin(stats.union(delta)
           .groupBy(col("lhs"), col("rhs"))
           .agg(sum(col("pair_freq")).as("pair_freq"))
-          .filter(col("pair_freq") > 0)
-          .localCheckpoint(true)
+          .filter(col("pair_freq") > 0))
       }
     }
     merges.result()

@@ -119,7 +119,7 @@ object DedupClusters {
     val parts = math.max(1L, math.min(
       edgesRaw.sparkSession.sparkContext.defaultParallelism.toLong,
       nEdges / 50000 + 1)).toInt
-    val edges = edgesRaw.repartition(parts, col("v")).localCheckpoint()
+    val edges = Pin(edgesRaw.repartition(parts, col("v")))
     edgesRaw.unpersist()
     // label = current component candidate (min id seen so far).
     // localCheckpoint (eager) per iteration truncates lineage — without it
@@ -127,10 +127,9 @@ object DedupClusters {
     // Each labels generation is checkpointed hash-partitioned on doc_id,
     // so the three per-iteration uses (neighbor join on v2, stepped join,
     // convergence count) all reuse that layout via alias propagation.
-    var labels = edges.repartition(parts, col("u"))
+    var labels = Pin(edges.repartition(parts, col("u"))
       .groupBy(col("u").as("doc_id"))
-      .agg(least(min(col("v")), first(col("u"))).as("label"))
-      .localCheckpoint()
+      .agg(least(min(col("v")), first(col("u"))).as("label")))
     var converged = false
     var i = 0
     // Convergence check (r19 opt, r20 form): each generation CARRIES its

@@ -84,35 +84,6 @@ object HammingBands {
     */
   val DefaultKeyArity = 1
 
-  /** Materialize a frame that feeds multiple consumers — but DON'T
-    * re-copy one that is already a pinned RDD scan (modulo row-preserving
-    * projections): the streaming image-dedup sink passes the SAME
-    * localCheckpoint'd corpus hash table into [[probePairs]] every
-    * micro-batch, and unconditionally re-checkpointing it would copy the
-    * whole table once per trigger (GBs at a 10¹⁰-image corpus) for zero
-    * benefit.
-    */
-  @annotation.tailrec
-  private def alreadyPinned(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    p match {
-      // only DETERMINISTIC projections peel: a non-deterministic
-      // expression (monotonically_increasing_id, rand) over a pinned
-      // scan can still evaluate differently in each consuming subtree —
-      // exactly the unstable-expression class pinning exists to prevent
-      // (r16 ADVICE)
-      case n: org.apache.spark.sql.catalyst.plans.logical.Project
-          if n.projectList.forall(_.deterministic) =>
-        alreadyPinned(n.child)
-      case n: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        alreadyPinned(n.child)
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _ => false
-    }
-
-  private[operators] def pin(df: DataFrame): DataFrame =
-    if (alreadyPinned(df.queryExecution.analyzed)) df else df.localCheckpoint()
-
   /** Hard ceiling on C(bands, keyArity) — the per-hash banding fan-out.
     * Every legal (bands ≤ 32) arity the remedy path suggests stays far
     * below it (bands=8 peaks at C(8,4)=70); without the ceiling a legal-
@@ -307,7 +278,7 @@ object HammingBands {
     checkParams(maxHamming, bands, maxBandDf, keyArity)
     // one materialization; feeds the distinct-hash set, the exact-dup
     // self-join, and the two cross-class expansion joins
-    val t = pin(hashed.select(col("id"), col("h")))
+    val t = Pin(hashed.select(col("id"), col("h")))
     val hp = distinctHashPairs(t.select(col("h")).distinct(),
       maxHamming, bands, maxBandDf, keyArity)
     // exact-hash members: equal hashes are pairs at hamming 0 by
@@ -353,11 +324,10 @@ object HammingBands {
       maxIter: Int = DefaultClusterIters,
       keyArity: Int = DefaultKeyArity): DataFrame = {
     checkParams(maxHamming, bands, maxBandDf, keyArity)
-    val t = pin(hashed.select(col("id"), col("h")))
+    val t = Pin(hashed.select(col("id"), col("h")))
     // one representative + class size per distinct hash
-    val classes = t.groupBy(col("h"))
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("m"))
-      .localCheckpoint()
+    val classes = Pin(t.groupBy(col("h"))
+      .agg(min(col("id")).as("rep"), count(lit(1)).as("m")))
     val hp = distinctHashPairs(classes.select(col("h")),
       maxHamming, bands, maxBandDf, keyArity)
     val repEdges = hp
@@ -409,8 +379,8 @@ object HammingBands {
       maxBandDf: Int = DefaultMaxBandDf,
       keyArity: Int = DefaultKeyArity): DataFrame = {
     checkParams(maxHamming, bands, maxBandDf, keyArity)
-    val p = pin(probe.select(col("id"), col("h")))
-    val c = pin(corpus.select(col("id"), col("h")))
+    val p = Pin(probe.select(col("id"), col("h")))
+    val c = Pin(corpus.select(col("id"), col("h")))
     val exact = p.select(col("h"), col("id"))
       .join(c.select(col("h").as("h2"), col("id").as("matched_id")),
         col("h") === col("h2"))

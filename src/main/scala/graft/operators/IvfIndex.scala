@@ -232,7 +232,7 @@ object IvfIndex {
       else {
         // materialize once (ids only, O(candidates)·16 B) so the gate and
         // the scoring join don't recompute the candidate generation
-        val pinned = pairIds.localCheckpoint()
+        val pinned = Pin(pairIds)
         val missing = pinned.select(col("nid")).distinct()
           .join(codes.select(col("vec_id").as("nid")), Seq("nid"), "left_anti")
           .limit(1).collect()

@@ -47,10 +47,9 @@ object LmScore {
     // (doc_id, token) aggregate is computed first, pinned, and the vocab
     // table + totals fold over ITS compact rows instead of re-exploding
     // every document a second time.
-    val tf = docs.select(col("doc_id"), explode(col("toks")).as("token"))
+    val tf = Pin(docs.select(col("doc_id"), explode(col("toks")).as("token"))
       .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("tf")))
     val freq = tf.groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
     val totals = freq.agg(sum(col("cnt")).as("t"), count(lit(1)).as("v"))
     val contrib = tf.join(freq, "token").crossJoin(broadcast(totals))

@@ -676,7 +676,7 @@ object Multimodal {
       spark: SparkSession, path: String, key: String): Unit = {
     val subtree = ArtifactPaths.appendSubtree(path, key, "hashes")
     require(ArtifactPaths.exists(path), s"no committed phash index at $path")
-    val hashes = phashHashes(batch).toDF("media_id", "ph").localCheckpoint()
+    val hashes = Pin(phashHashes(batch).toDF("media_id", "ph"))
     if (!ArtifactPaths.replayed(subtree, hashes, "set of hashes"))
       hashes.write.mode("overwrite").parquet(subtree)
   }
@@ -785,7 +785,7 @@ object Multimodal {
         .count()
     // hashes feed three aggregations (classes, current-banding over-cap,
     // remedy-banding hottest df) — pin the load once
-    val live = loadPhashHashes(spark, path).localCheckpoint()
+    val live = Pin(loadPhashHashes(spark, path))
     val classes = live.groupBy(col("ph")).agg(count(lit(1)).as("m"))
       .agg(count(lit(1)).as("distinct"), max(col("m")).as("maxm"))
       .collect()(0)
@@ -853,7 +853,7 @@ object Multimodal {
     */
   def rebuildPhashIndex(spark: SparkSession, path: String, bands: Int,
       keyArity: Int): Unit = {
-    val live = loadPhashHashes(spark, path).localCheckpoint()
+    val live = Pin(loadPhashHashes(spark, path))
     savePhashIndexFromHashes(live, path, keyArity, bands)
   }
 

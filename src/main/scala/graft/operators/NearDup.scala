@@ -64,12 +64,11 @@ object NearDup {
       numHashes: Int = DefaultNumHashes, bands: Int = DefaultBands,
       rowsPerBand: Int = DefaultRowsPerBand,
       maxBandDf: Int = DefaultBandMaxDf): (Long, Long, Double) = {
-    val d0 = docs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck"))
-      .localCheckpoint()
-    val repIds = d0.select(col("doc_id"), col("ck"))
-      .groupBy(col("ck")).agg(min(col("doc_id")).as("doc_id"))
-      .localCheckpoint() // feeds the rep count AND the banded restriction
+    val d0 = Pin(docs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck")))
+    // feeds the rep count AND the banded restriction
+    val repIds = Pin(d0.select(col("doc_id"), col("ck"))
+      .groupBy(col("ck")).agg(min(col("doc_id")).as("doc_id")))
     val n = repIds.count()
     val row = withBandKeys(d0, numHashes, bands, rowsPerBand)
       .select(col("bandKey"), col("doc_id"))
@@ -158,8 +157,8 @@ object NearDup {
   }
 
   // (r19: exactSetClasses — the unconditional keyed-pin + repsOf
-  // collapse the self-join kernels used — is gone; jaccardPairs and
-  // containmentPairs run the measured-dup-mass census collapse
+  // collapse the self-join kernels used — is gone; verifiedPairs,
+  // jaccardPairs and containmentPairs run the measured-dup-mass census collapse
   // (exactSetMembers) like every cross-set kernel, so a duplicate-free
   // corpus skips collapse and expansion outright and the small-dup
   // regime never shuffles a shingle array for the collapse.)
@@ -176,10 +175,9 @@ object NearDup {
     */
   private def repsOf(d: DataFrame): DataFrame = {
     val others = d.columns.filter(c => c != "doc_id" && c != "ck")
-    d.groupBy(col("ck"))
+    Pin(d.groupBy(col("ck"))
       .agg(min(col("doc_id")).as("doc_id"),
-        others.map(c => first(col(c)).as(c)): _*)
-      .localCheckpoint()
+        others.map(c => first(col(c)).as(c)): _*))
   }
 
   /** Ceiling on the duplicate-member id set the collapse will broadcast
@@ -232,7 +230,7 @@ object NearDup {
   private def exactSetMembers(d: DataFrame): SetCollapse = {
     // ONE evaluation of shingles + class key (no re-copy when the caller
     // already pinned — buildBandIndex shares its pin with the docs view)
-    val d0 = HammingBands.pin(d)
+    val d0 = Pin(d)
     // COUNT-ONLY class census (r20 — the r19 verdict's q_decontaminate_
     // fuzzy regression was exactly this kernel's fixed cost): ONE
     // fixed-width aggregate over the slim (doc_id, ck) projection of the
@@ -274,12 +272,11 @@ object NearDup {
       val dupClasses = classes.filter(col("m") > 1)
         .select(col("ck"), col("rep_id"))
       val small = dupExtra <= MaxBroadcastDupIds
-      val members = d0.select(col("doc_id"), col("ck"))
+      val members = Pin(d0.select(col("doc_id"), col("ck"))
         .join(if (small) broadcast(dupClasses) else dupClasses,
           Seq("ck"), "left")
         .select(coalesce(col("rep_id"), col("doc_id")).as("rep_id"),
-          col("doc_id"))
-        .localCheckpoint()
+          col("doc_id")))
       val reps =
         if (small)
           reps0.join(broadcast(
@@ -332,36 +329,14 @@ object NearDup {
       col("c_member").as("matched_id") +: valueCols.map(col): _*)
   }
 
-  /** Expand verified REP pairs back to member pairs (symmetric-value
-    * functions — jaccard): within-class pairs carry `withinValue`
-    * (identical sets: exactly 1.0) via an ids-only self-join on the
-    * class key — the m²/2 rows of a giant class are its TRUE output and
-    * now ship 24 B/row instead of re-attached shingle arrays; cross-class
-    * pairs fan out by four linear equi-joins on ids.
-    */
-  private def expandSetPairs(repPairs: DataFrame, keyed: DataFrame,
-      valueCol: String, withinValue: Column): DataFrame = {
-    val within = keyed.select(col("ck"), col("doc_id").as("id_a"))
-      .join(keyed.select(col("ck").as("ck2"), col("doc_id").as("id_b")),
-        col("ck") === col("ck2") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), withinValue.as(valueCol))
-    val cross = repPairs
-      .join(keyed.select(col("doc_id").as("id_a"), col("ck").as("ck_a")), "id_a")
-      .join(keyed.select(col("doc_id").as("id_b"), col("ck").as("ck_b")), "id_b")
-      .select(col("ck_a"), col("ck_b"), col(valueCol))
-      .join(keyed.select(col("ck").as("ck_a"), col("doc_id").as("ma")), "ck_a")
-      .join(keyed.select(col("ck").as("ck_b"), col("doc_id").as("mb")), "ck_b")
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col(valueCol))
-    within.unionByName(cross)
-  }
-
   /** Expand verified REP pairs to member pairs through a MEMBERS map
-    * (rep_id, doc_id) — the [[exactSetMembers]] twin of
-    * [[expandSetPairs]] (r19): two equi-joins on LONG rep ids replace
-    * the four-join ck-struct chain, within-class pairs self-join the
-    * member map, and a trivial collapse (duplicate-free corpus) skips
-    * expansion outright — rep pairs ARE the member pairs there.
+    * (rep_id, doc_id) of [[exactSetMembers]] (symmetric-value functions —
+    * jaccard): within-class pairs carry `withinValue` (identical sets:
+    * exactly 1.0) by an ids-only self-join of the member map — the m²/2
+    * rows of a giant class are its TRUE output and ship 24 B/row instead
+    * of re-attached shingle arrays — and cross-class pairs fan out by two
+    * equi-joins on LONG rep ids. A trivial collapse (duplicate-free
+    * corpus) skips expansion outright: rep pairs ARE the member pairs.
     */
   private def expandSetPairsM(repPairs: DataFrame, members: DataFrame,
       trivial: Boolean, valueCol: String, withinValue: Column): DataFrame = {
@@ -403,9 +378,8 @@ object NearDup {
     * unrepresentable — NearDupIndexSpec pins the returned plan shape).
     */
   private[operators] def dictFromShingles(distinctShingles: DataFrame): DataFrame =
-    distinctShingles.select(col("shingle"))
-      .withColumn("tok", monotonically_increasing_id())
-      .localCheckpoint()
+    Pin(distinctShingles.select(col("shingle"))
+      .withColumn("tok", monotonically_increasing_id()))
 
   /** ORDER-PRESERVING dictionary over a (shingle, df) frame (r20): tok
     * increases with (df ASC, shingle ASC) — the canonical prefix order
@@ -422,10 +396,9 @@ object NearDup {
     * must evaluate exactly once).
     */
   private[operators] def dictFromShinglesOrdered(shingleDf: DataFrame): DataFrame =
-    shingleDf.orderBy(col("df"), col("shingle"))
+    Pin(shingleDf.orderBy(col("df"), col("shingle"))
       .select(col("shingle"))
-      .withColumn("tok", monotonically_increasing_id())
-      .localCheckpoint()
+      .withColumn("tok", monotonically_increasing_id()))
 
   /** [[encodeDocs]] with the token array sorted ascending — the form the
     * tok-prefix kernels consume (prefix = slice(ids, 1, p) needs the
@@ -456,7 +429,7 @@ object NearDup {
     val dv = docs.join(candIds, Seq("doc_id"), "left_semi")
     val dict = dictFromShingles(
       dv.select(explode(col("sh")).as("shingle")).distinct())
-    encodeDocs(dv, dict).localCheckpoint()
+    Pin(encodeDocs(dv, dict))
   }
 
   /** Encode (doc_id, sh) docs against a dictionary: (doc_id, n, ids) with
@@ -567,20 +540,18 @@ object NearDup {
       bands: Int = DefaultBands,
       rowsPerBand: Int = DefaultRowsPerBand,
       maxBandDf: Int = DefaultBandMaxDf): BandIndex = {
-    val s0 = staticDocs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck"))
-      .localCheckpoint()
+    val s0 = Pin(staticDocs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck")))
     val sC = exactSetMembers(s0)
     val members = sC.members
     val s = sC.reps // pinned inside exactSetMembers
     // corpus-side band-key df cap (r18, the verifiedPairs trim rule): an
     // over-cap key in the STANDING half would fan out df_batch·df rows
     // on every probe, forever
-    val banded = capBanded(
+    val banded = Pin(capBanded(
         withBandKeys(s, numHashes, bands, rowsPerBand)
           .select(col("bandKey"), col("doc_id")),
-        maxBandDf)
-      .localCheckpoint()
+        maxBandDf))
     // PROBE-TIME LAZY ENCODE (r20, the r19 verdict's lead): the eager
     // build paid a full-corpus vocabulary distinct + a full-corpus encode
     // checkpoint here, but the only consumer of the encoded halves is
@@ -609,9 +580,8 @@ object NearDup {
     val spark = staticDocs.sparkSession
     import spark.implicits._
     ArtifactPaths.rebuild(path)
-    val s0 = staticDocs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck"))
-      .localCheckpoint()
+    val s0 = Pin(staticDocs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck")))
     // corpus-side collapse, once, at save time (r17): banded/docs/ids
     // hold one rep per identical-set class; members expands probe output
     val sC = exactSetMembers(s0)
@@ -691,38 +661,29 @@ object NearDup {
       rowsPerBand: Int = DefaultRowsPerBand,
       threshold: Double = DefaultThreshold,
       maxBandDf: Int = DefaultBandMaxDf): DataFrame = {
-    // One materialization of the shingle projection (the dominant cost):
-    // the input feeds banding PLUS two verification re-attach joins, and
-    // without a checkpoint each consumer would recompute WordShingles
-    // over the full corpus. Blank docs (empty shingle set) are dropped up
-    // front — an empty doc is not a NEAR-duplicate of anything (exact
-    // dedup handles identical blanks), and its degenerate signature would
-    // otherwise flood one bucket per band.
+    // One materialization of the shingle projection (the dominant cost),
+    // inside exactSetMembers: the input feeds the census, banding and the
+    // verification encode, and without a pin each consumer would
+    // recompute WordShingles over the full corpus. Blank docs (empty
+    // shingle set) are dropped up front — an empty doc is not a
+    // NEAR-duplicate of anything (exact dedup handles identical blanks),
+    // and its degenerate signature would otherwise flood one bucket per
+    // band.
     // Exact-set pre-collapse BEFORE signing/banding (SCALE.md §skew: a
     // 2000-member identical class shares ALL band keys, so the
     // un-collapsed self-join re-attached full shingle arrays to
     // bands·m²/2 candidate rows — 8.8 GB of spill from one class).
     // Identical sets have identical signatures, so candidates over reps
     // are EXACTLY the candidates over members; within-class pairs are
-    // jaccard 1.0 by identity and expand ids-only. The class key is
-    // computed INSIDE the pinned projection (one fused sort+hash pass
-    // over the materialization scan — r17 task 4: the separate class-key
-    // pass used to re-sort every shingle set on top of the signing scan).
-    val d0 = docs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck"))
-      .localCheckpoint()
-    val keyed = d0.select(col("doc_id"), col("ck")).localCheckpoint()
-    val repIds = keyed.groupBy(col("ck")).agg(min(col("doc_id")).as("doc_id"))
-    // Sign EVERY doc and restrict the BAND rows to class reps by an
-    // ids-only join (r17 task 4, second cut): identical sets have
-    // identical signatures, so a rep's band rows ARE its class's band
-    // rows and the restriction is exact. Signing members costs one
-    // linear map pass (no worse than the pre-collapse r15 kernel at any
-    // skew), while restricting DOCS to reps first — the first-cut shape
-    // — forced a full shingle-array exchange through the rep aggregate;
-    // here nothing wider than (bandKey, doc_id) ever shuffles for the
-    // collapse. Candidate fan-out stays rep-level, which is the part
-    // that was quadratic in class size.
+    // jaccard 1.0 by identity and expand ids-only. The collapse is the
+    // measured-dup-mass census every other kernel here runs: a
+    // duplicate-free corpus (PipelineMain's, after exact dedup) skips
+    // collapse and expansion outright, and the small-dup regime derives
+    // reps by an ids-only broadcast anti-join — no shingle array
+    // shuffles for the collapse.
+    val sC = exactSetMembers(docs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck")))
+    val d = sC.reps
     // Band-key df cap (r18 — the skew gate's find): a key attracting
     // more than maxBandDf REPS is a sub-threshold moderate-similarity
     // clique (shared boilerplate) colliding in that band, and the
@@ -730,18 +691,16 @@ object NearDup {
     // and fail; trimmed keys carry no ≥τ signal (declared semantics,
     // the HammingBands contract — minhashTrimExposure budgets it)
     val banded = capBanded(
-      withBandKeys(d0, numHashes, bands, rowsPerBand)
-        .select(col("bandKey"), col("doc_id"))
-        .join(repIds, "doc_id"),
+      withBandKeys(d, numHashes, bands, rowsPerBand)
+        .select(col("bandKey"), col("doc_id")),
       maxBandDf)
     val a = banded.select(col("bandKey"), col("doc_id").as("id_a"))
     val b = banded.select(col("bandKey").as("bk2"), col("doc_id").as("id_b"))
     // Candidates pinned: they feed the candidate-doc id set AND the
     // verify join below — unpinned, the banding self-join would run
     // twice (ids-only rows, a sliver of the corpus).
-    val cand = a.join(b, col("bandKey") === col("bk2") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .localCheckpoint()
+    val cand = Pin(a.join(b, col("bandKey") === col("bk2") && col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct())
     // dictionary-encoded verification (r18 — the jaccardPairs discipline:
     // candidate multiplicity amplifies every byte on the two re-attach
     // exchanges, and 8-byte tokens beat 3-gram strings severalfold).
@@ -754,7 +713,7 @@ object NearDup {
     // distinct + encode shuffle shrink from O(corpus) to O(candidate
     // docs) — the fixed per-call cost the r18 verdict flagged on this
     // kernel, removed instead of cached.
-    val dIds = encodeCandidateDocs(cand, d0)
+    val dIds = encodeCandidateDocs(cand, d)
     val repPairs = verifyJaccardIds(
       cand
         .join(dIds.select(col("doc_id").as("id_a"), col("ids").as("ids_a"),
@@ -763,7 +722,7 @@ object NearDup {
           col("n").as("n_b")), "id_b"),
       threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    expandSetPairs(repPairs, keyed, "jaccard", lit(1.0))
+    expandSetPairsM(repPairs, sC.members, sC.trivial, "jaccard", lit(1.0))
   }
 
   /** Exact n-gram Jaccard set-similarity self-join via a PREFIX-FILTERED
@@ -797,10 +756,9 @@ object NearDup {
     // order independent, so computing df over reps (a valid canonical
     // order) changes nothing downstream (the prefix lemma needs only
     // SOME fixed common total order).
-    val d0 = docs.filter(size(col("sh")) > 0)
+    val d0 = Pin(docs.filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"), size(col("sh")).as("n"),
-        setClassKey(col("sh")).as("ck"))
-      .localCheckpoint()
+        setClassKey(col("sh")).as("ck")))
     // r19: the measured-dup-mass census collapse (exactSetMembers — the
     // r18 machinery the cross-set kernels already run) replaces the
     // unconditional repsOf array aggregate: a duplicate-free corpus
@@ -823,7 +781,7 @@ object NearDup {
     // (DedupSpec brute parity). |ids| = n here: the dictionary covers the
     // corpus's own vocabulary by construction.
     val dict = dictFromShinglesOrdered(shingleDf)
-    val dIds = encodeDocsSorted(d, dict).localCheckpoint()
+    val dIds = Pin(encodeDocsSorted(d, dict))
     val prefix = tokPrefix(dIds, tau)
     val a = prefix.select(col("tok"), col("doc_id").as("id_a"), col("n").as("n_a"))
     val b = prefix.select(col("tok").as("tok_b"), col("doc_id").as("id_b"),
@@ -913,8 +871,8 @@ object NearDup {
     // the candidate join runs on longs. Encodes pinned: each feeds its
     // prefix slice AND a verify re-attach join.
     val dict = dictFromShinglesOrdered(shingleDf)
-    val bIds = encodeDocsSorted(b, dict).localCheckpoint()
-    val cIds = encodeDocsSorted(c, dict).localCheckpoint()
+    val bIds = Pin(encodeDocsSorted(b, dict))
+    val cIds = Pin(encodeDocsSorted(c, dict))
     val cand = tokPrefix(bIds, tau)
       .join(tokPrefix(cIds, tau).select(col("tok").as("tok_c"),
           col("doc_id").as("matched_id"), col("n").as("n_c")),
@@ -1024,8 +982,7 @@ object NearDup {
     val dict = dictFromShinglesOrdered(
       c.select(explode(col("sh")).as("shingle"))
         .groupBy(col("shingle")).agg(count(lit(1)).as("df")))
-    val ids = encodeDocsSorted(c, dict)
-      .localCheckpoint() // feeds the prefix write AND the ids write
+    val ids = Pin(encodeDocsSorted(c, dict)) // feeds the prefix write AND the ids write
     dict.write.mode("overwrite").parquet(s"$path/dict")
     tokPrefix(ids, tau).write.mode("overwrite").parquet(s"$path/prefix")
     ids.write.mode("overwrite").parquet(s"$path/ids")
@@ -1073,9 +1030,8 @@ object NearDup {
   def appendToJaccardIndex(newDocs: DataFrame,
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val tauBuild = jaccardThreshold(spark, path) - 0.0001
-    val c = newDocs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"))
-      .localCheckpoint() // feeds both the prefix pass and the docs append
+    val c = Pin(newDocs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh"))) // feeds both the prefix pass and the docs append
     tokPrefix(encodeFrozen(c, spark.read.parquet(s"$path/dict")), tauBuild)
       .write.mode("append").parquet(s"$path/prefix")
     // appended docs land OUTSIDE the base docs dir: the build-time
@@ -1279,12 +1235,11 @@ object NearDup {
       if (parts.isEmpty) Seq.empty[Long].toDF("doc_id")
       else spark.read.parquet(parts: _*).select(col("doc_id"))
     }
-    val allMembers = spark.read.parquet(s"$path/members")
+    val allMembers = Pin(spark.read.parquet(s"$path/members")
       .select(col("rep_id"), col("doc_id"))
       .unionByName(appendIds
-        .select(col("doc_id").as("rep_id"), col("doc_id")))
-      .localCheckpoint()
-    val raw = allMembers.select(col("rep_id")).distinct().localCheckpoint()
+        .select(col("doc_id").as("rep_id"), col("doc_id"))))
+    val raw = Pin(allMembers.select(col("rep_id")).distinct())
     val live = Tombstones.exclude(allMembers, spark, path, "doc_id")
     val phantom = raw
       .join(live.select(col("rep_id")).distinct(), Seq("rep_id"),
@@ -1297,11 +1252,10 @@ object NearDup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       threshold: Double = DefaultThreshold): ProbeStats = {
     val l0 = loadedProbeCandidates(batch, spark, path, threshold)
-    val l = l0.copy(cand = l0.cand.localCheckpoint()) // counted AND verified
-    val repVerified = verifySplit(l.cand,
+    val l = l0.copy(cand = Pin(l0.cand)) // counted AND verified
+    val repVerified = Pin(verifySplit(l.cand,
         l.b.select(col("doc_id"), col("sh")), l.bIds, l.cIds, l.unencoded,
-        threshold)
-      .localCheckpoint() // counted AND expanded
+        threshold)) // counted AND expanded
     val (phantom, totalReps) = phantomRepStats(spark, path)
     ProbeStats(
       batchDocs = l.bMembers.count(),
@@ -1358,7 +1312,7 @@ object NearDup {
         // exact (the encodeCandidateDocs argument, one-sided). Pinned
         // candidates: they feed the corpus/batch restrictions AND the
         // verify join.
-        val candP = cand.localCheckpoint()
+        val candP = Pin(cand)
         // ids-only BROADCAST semi-joins: the restriction sides are
         // candidate ids (8 B each, ≤ |batch|·bands·maxBandDf by the
         // band-df cap — batch-bounded, never corpus-bounded), while the
@@ -1412,15 +1366,15 @@ object NearDup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       key: String, maxBandDf: Int = DefaultBandMaxDf): Unit = {
     val docs = ArtifactPaths.appendSubtree(path, key, "docs")
-    val s = newDocs.filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"))
-      .localCheckpoint() // feeds the guard, the banding pass and the docs write
+    // feeds the guard, the banding pass and the docs write
+    val s = Pin(newDocs.filter(size(col("sh")) > 0)
+      .select(col("doc_id"), col("sh")))
     if (ArtifactPaths.replayed(docs, s, "set of docs")) return
     val meta = spark.read.parquet(s"$path/meta").collect()(0)
-    val banded = withBandKeys(s, meta.getAs[Int]("numHashes"),
+    // feeds its own df count AND the trimmed write
+    val banded = Pin(withBandKeys(s, meta.getAs[Int]("numHashes"),
         meta.getAs[Int]("bands"), meta.getAs[Int]("rowsPerBand"))
-      .select(col("bandKey"), col("doc_id"))
-      .localCheckpoint() // feeds its own df count AND the trimmed write
+      .select(col("bandKey"), col("doc_id")))
     // STANDING-df cap (r19, r18 ADVICE): the build/save-time cap bounds
     // the base, but a moderate-similarity clique arriving THROUGH THE
     // STREAM accumulates exactly the over-cap standing band keys the
@@ -1475,10 +1429,9 @@ object NearDup {
     // cliques (ties), the heaviest re-attach amplifier of the family —
     // collapsed, they expand ids-only; cross-class containment against a
     // rep equals containment against every member (identical sets).
-    val d0 = docs.filter(size(col("sh")) > 0)
+    val d0 = Pin(docs.filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"), size(col("sh")).as("n"),
-        setClassKey(col("sh")).as("ck"))
-      .localCheckpoint()
+        setClassKey(col("sh")).as("ck")))
     // r19: measured-dup-mass census collapse (exactSetMembers — see the
     // jaccardPairs note; trivial corpora skip collapse AND expansion).
     val sC = exactSetMembers(d0)
@@ -1490,7 +1443,7 @@ object NearDup {
     // doc's A-side prefix its tokPrefix, and the FULL inverted-index side
     // is the explode of the same encode; the candidate join runs on longs.
     val dict = dictFromShinglesOrdered(shingleDf)
-    val dIds = encodeDocsSorted(d, dict).localCheckpoint()
+    val dIds = Pin(encodeDocsSorted(d, dict))
     val prefix = tokPrefix(dIds, tau).select(col("doc_id").as("id_a"),
       col("n").as("n_a"), col("tok"))
     val full = dIds.select(col("doc_id").as("id_b"), col("n").as("n_b"),
@@ -1638,10 +1591,9 @@ object NearDup {
       maxDf: Int = 20): (Long, Long, Double) = {
     // one representative doc per exact-text class (the windows of
     // identical texts are identical, so any member stands for the class)
-    val distinctTexts = docs.select(col("text"))
+    val distinctTexts = Pin(docs.select(col("text"))
       .groupBy(xxhash64(col("text")).as("tk"))
-      .agg(first(col("text")).as("text"))
-      .localCheckpoint() // feeds the count AND the window-df pass
+      .agg(first(col("text")).as("text"))) // feeds the count AND the window-df pass
     val n = distinctTexts.count()
     val row = distinctTexts
       .select(explode(graft.functions.TextFunctions
@@ -1688,10 +1640,9 @@ object NearDup {
     // re-split the text and re-built its windows from scratch; the
     // pinned (doc_id, toks) projection feeds every rung's SpanKeys pass
     // and the ≥ w filter reads size(toks) off the same pin.
-    val toksDf = docs
+    val toksDf = Pin(docs
       .select(col("doc_id"),
-        filter(split(col("text"), "\\s+"), t => length(t) > lit(0)).as("toks"))
-      .localCheckpoint()
+        filter(split(col("text"), "\\s+"), t => length(t) > lit(0)).as("toks")))
     val rungs = (0 until levels).map { l =>
       val w = baseTokens << l
       tokenSpanPairs(toksDf.filter(size(col("toks")) >= w), spanTokens = w,
@@ -1807,8 +1758,8 @@ object NearDup {
     val subtree = ArtifactPaths.appendSubtree(path, key, "wins")
     val spanTokens = spark.read.parquet(s"$path/meta")
       .collect()(0).getAs[Int]("spanTokens")
-    val wins = spanWindowKeys(batch.select(col("doc_id"), col("text")),
-      spanTokens).localCheckpoint() // feeds the guard compare AND the write
+    val wins = Pin(spanWindowKeys(batch.select(col("doc_id"), col("text")),
+      spanTokens)) // feeds the guard compare AND the write
     if (!ArtifactPaths.replayed(subtree, wins, "set of window keys"))
       wins.write.mode("overwrite").parquet(subtree)
   }

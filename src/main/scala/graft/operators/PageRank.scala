@@ -53,18 +53,18 @@ object PageRank {
     */
   def run(spark: SparkSession, edges: DataFrame, damping: Double = 0.85,
       eps: Double = 1e-8, maxIter: Int = 40): Result = {
-    val e0 = edges.groupBy(col("src"), col("dst"))
-      .agg(sum(col("w")).as("w")).localCheckpoint()
+    val e0 = Pin(edges.groupBy(col("src"), col("dst"))
+      .agg(sum(col("w")).as("w")))
     val outw = e0.groupBy(col("src"))
       .agg(sum(col("w")).cast("double").as("ow"))
-    val e = e0.join(outw, "src").localCheckpoint()
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val e = Pin(e0.join(outw, "src"))
+    val nodes = Pin(e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct())
     val n = nodes.count().toDouble // O(|nodes|) driver scalar
-    val dangling = nodes.join(outw.withColumnRenamed("src", "node"),
-      Seq("node"), "left_anti").localCheckpoint()
+    val dangling = Pin(nodes.join(outw.withColumnRenamed("src", "node"),
+      Seq("node"), "left_anti"))
 
-    var ranks = nodes.withColumn("r", lit(1.0 / n)).localCheckpoint()
+    var ranks = Pin(nodes.withColumn("r", lit(1.0 / n)))
     var iter = 0
     var delta = Double.MaxValue
     while (iter < maxIter && delta >= eps) {
@@ -78,11 +78,10 @@ object PageRank {
           (col("r") * col("w") / col("ow")).as("c"))
       val inflow = contribs.groupBy(col("dst"))
         .agg(sortedFold(col("src"), col("c")).as("inflow"))
-      val next = nodes.join(inflow, col("node") === col("dst"), "left")
+      val next = Pin(nodes.join(inflow, col("node") === col("dst"), "left")
         .select(col("node"),
           (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("inflow"), lit(0.0)) + lit(dm / n))).as("r"))
-        .localCheckpoint()
+            (coalesce(col("inflow"), lit(0.0)) + lit(dm / n))).as("r")))
       // L∞ delta (max is fold-order-independent): one driver scalar
       delta = next.join(ranks.withColumnRenamed("r", "r0"), "node")
         .agg(max(abs(col("r") - col("r0"))).as("d"))

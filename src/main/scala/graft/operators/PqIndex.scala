@@ -129,11 +129,10 @@ object PqIndex {
       k: Int): Array[Array[Array[Float]]] = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val sample = vectors
+    val sample = Pin(vectors
       .filter(pmod(xxhash64(col("vec_id")), lit(4L)) === 0)
       .orderBy(col("vec_id")).limit(64 * k)
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint()
+      .select(col("vec_id"), col("embedding")))
     // ONE seeds collect + ONE all-subspace mean pass (r19 opt, guide
     // §1.2): every subspace's seed rows are the SAME first-k sample rows
     // by vec_id, sliced — collecting them once and slicing driver-side

@@ -362,8 +362,7 @@ object SemDedup {
     // pin the pair frame BEFORE the append mutates assign/ underneath
     // its standing-table scan (lazy evaluation would otherwise see the
     // batch rows twice on a post-append action)
-    val result = batchPairs(m, batchAssign, floats, threshold)
-      .localCheckpoint()
+    val result = Pin(batchPairs(m, batchAssign, floats, threshold))
     batchAssign.write.mode("append").parquet(s"$path/assign")
     result
   }
@@ -385,8 +384,8 @@ object SemDedup {
       baseFloats: DataFrame, threshold: Double, key: String): DataFrame = {
     val subtree = ArtifactPaths.appendSubtree(path, key, "assign")
     val m = load(spark, path, excludeAppend = Some(key))
-    val batchAssign = assignWithCodes(batch, m.cents, m.grid, m.nProbe)
-      .localCheckpoint() // feeds the guard compare, the probe, AND the write
+    // feeds the guard compare, the probe, AND the write
+    val batchAssign = Pin(assignWithCodes(batch, m.cents, m.grid, m.nProbe))
     val replay = ArtifactPaths.replayed(subtree, batchAssign,
       "batch of vectors")
     val bFloats = batch.select(col("vec_id"), col("embedding"), col("n2"))
@@ -396,8 +395,7 @@ object SemDedup {
       .getOrElse(baseFloats.select(col("vec_id"), col("embedding"),
         col("n2")))
       .unionAll(bFloats)
-    val result = batchPairs(m, batchAssign, floats, threshold)
-      .localCheckpoint()
+    val result = Pin(batchPairs(m, batchAssign, floats, threshold))
     if (!replay) {
       bFloats.write.mode("overwrite")
         .parquet(ArtifactPaths.appendSubtree(path, key, "floats"))

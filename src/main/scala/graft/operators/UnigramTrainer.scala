@@ -96,13 +96,13 @@ object UnigramTrainer {
     import spark.implicits._
     val wf = words.select(col("word"), col("freq").cast("long"))
       .as[(String, Long)]
-    val subCounts = wf.flatMap { case (w, f) =>
+    // feeds the top-k AND the char floor
+    val subCounts = Pin(wf.flatMap { case (w, f) =>
       for {
         i <- 0 until w.length
         l <- 1 to math.min(maxPieceLen, w.length - i)
       } yield (w.substring(i, i + l), f)
-    }.toDF("piece", "f").groupBy(col("piece")).agg(sum(col("f")).as("cnt"))
-      .localCheckpoint(true) // feeds the top-k AND the char floor
+    }.toDF("piece", "f").groupBy(col("piece")).agg(sum(col("f")).as("cnt")))
     val top = subCounts
       .orderBy(col("cnt").desc, col("piece"))
       .limit(math.max(1, seedFactor * targetVocab))
@@ -123,8 +123,8 @@ object UnigramTrainer {
     require(targetVocab > 0 && iters > 0 && maxPieceLen > 0,
       s"bad unigram params: v=$targetVocab iters=$iters len=$maxPieceLen")
     import spark.implicits._
-    val wf = words.select(col("word"), col("freq").cast("long"))
-      .as[(String, Long)].localCheckpoint(true)
+    val wf = Pin(words.select(col("word"), col("freq").cast("long")))
+      .as[(String, Long)]
     var vocab = seedPieces(spark, words, targetVocab, maxPieceLen, seedFactor)
 
     def emCounts(v: Seq[(String, Long)]): Map[String, Long] = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.AsOfJoin
+import graft.operators.{AsOfJoin, Pin}
 
 /** Time-series / event queries over the `events` fixture: tumbling-window
   * aggregation (batch twin of the streaming op), sessionization, as-of
@@ -412,15 +412,14 @@ object EventQueries extends QueryModule {
   private def transitionEdges(s: SparkSession, d: String) = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("tss"), col("event_id"))
-    Tables.events(s, d)
+    Pin(Tables.events(s, d)
       .withColumn("tss", date_trunc("second", col("ts")))
       .select(col("user_id"), col("tss"), col("event_id"), col("event_type"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
       .select(col("event_type").as("src"), col("next_type").as("dst"))
       .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("w")))
   }
 
   private val qPagerank = Q(

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.operators.Pin
 
 /** Text analysis + deduplication over the `documents` fixture — the
   * LLM-training-data pipeline surface (SURVEY.md §2 Part B extensions).
@@ -614,11 +615,10 @@ object TextQueries extends QueryModule {
       // 3× at any scale). The query-term filter runs INSIDE the array
       // before explode, so the generator emits |Q∩doc| rows per doc,
       // not dl.
-      val base = Tables.documents(s, d)
+      val base = Pin(Tables.documents(s, d)
         .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("double").as("dl"),
-          filter(col("toks"), t => t.isInCollection(bm25Terms)).as("hits"))
-        .localCheckpoint()
+          filter(col("toks"), t => t.isInCollection(bm25Terms)).as("hits")))
       val stats = base.agg(
         count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
       val tf = base
@@ -1237,14 +1237,13 @@ object TextQueries extends QueryModule {
       // NARROW (doc_id, lang, b) projection — the feature string never
       // materializes past the bucket hash — and every aggregate below
       // derives from it or from the 1024-row bucket table.
-      val feats = toks.select(col("doc_id"), col("lang"),
+      val feats = Pin(toks.select(col("doc_id"), col("lang"),
           explode(concat(col("t"),
             zip_with(slice(col("t"), lit(1), nm1), slice(col("t"), lit(2), nm1),
               (a, b) => concat_ws(" ", a, b)))).as("f"))
         .select(col("doc_id"), col("lang"),
           pmod(conv(substring(md5(col("f")), 1, 8), 16, 10).cast("long"),
-            lit(B.toLong)).as("b"))
-        .localCheckpoint()
+            lit(B.toLong)).as("b")))
       // per-bucket target/raw counts in ONE aggregate (≤ B rows): the
       // conditional sum equals the old filtered-count + left-join form —
       // a bucket with no target rows gets ct = 0, exactly what

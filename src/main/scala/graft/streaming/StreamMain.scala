@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
+import graft.operators.Pin
 
 /** Runnable streaming surface: replays the events fixture through a file
   * source (`readStream.parquet` with maxFilesPerTrigger — the A7 throttled-
@@ -256,10 +257,9 @@ object StreamMain {
         val idxPath = kvArgs.getOrElse("index",
           { System.err.println("op=ann requires index=<dir>"); sys.exit(2) })
         if (!ArtifactPaths.exists(idxPath)) {
-          val e = spark.read.parquet(srcDir)
+          val e = Pin(spark.read.parquet(srcDir)
             .select(col("vec_id"), col("embedding"),
-              normSq(col("embedding")).as("n2"))
-            .localCheckpoint()
+              normSq(col("embedding")).as("n2")))
           // IVF-PQ (r19): cells ≈ √n so the sink's per-batch ADC pass is
           // nProbe·√n per query instead of O(corpus) — the r18 gate
           // measured the flat artifact at 160–185 CPU-s/batch, ~40×
@@ -319,10 +319,9 @@ object StreamMain {
         val idxPath = kvArgs.getOrElse("index",
           { System.err.println("op=semdedup requires index=<dir>"); sys.exit(2) })
         if (!ArtifactPaths.exists(idxPath)) {
-          val e = spark.read.parquet(srcDir)
+          val e = Pin(spark.read.parquet(srcDir)
             .select(col("vec_id"), col("embedding"),
-              normSq(col("embedding")).as("n2"))
-            .localCheckpoint()
+              normSq(col("embedding")).as("n2")))
           SemDedup.saveModel(idxPath, e, SemDedup.cellsFor(e.count()))
         }
         raw.select(col("vec_id"), col("embedding"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import graft.operators.Pin
 
 /** Structured Streaming surface (SURVEY.md §2 Part B "Streaming").
   *
@@ -234,9 +235,8 @@ object StreamingOps {
           s"phash index at $indexPath banded with bands=$bands at key " +
             s"arity $keyArity only guarantees recall for hamming <= " +
             s"${bands - keyArity}; got $maxHamming")
-        corpus = Multimodal.loadPhashHashes(spark, indexPath)
-          .select(col("media_id").as("id"), col("ph").as("h"))
-          .localCheckpoint()
+        corpus = Pin(Multimodal.loadPhashHashes(spark, indexPath)
+          .select(col("media_id").as("id"), col("ph").as("h")))
       }
       HammingBands.probePairs(
           batch.select(col("media_id").as("id"), col("ph").as("h")),
@@ -252,9 +252,8 @@ object StreamingOps {
       batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.NearDup
     val spark = batch.sparkSession
-    val b = batch.select(col("doc_id"), col("sh"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint() // feeds the match join AND the append
+    val b = Pin(batch.select(col("doc_id"), col("sh"))
+      .filter(size(col("sh")) > 0)) // feeds the match join AND the append
     // without the batch's own append: a replay probes the pre-batch index
     val idx = NearDup.loadBandIndex(spark, indexPath, Some(batchId.toString))
     NearDup.matchAgainstBandIndex(b, idx, threshold)
@@ -310,9 +309,9 @@ object StreamingOps {
         batch.col(idName)).as("__first"))
       .select(cols.map(c => if (c == keyName) col(keyName)
         else col(s"__first.$c").as(c)).toIndexedSeq: _*)
-    val fresh = BloomGate.newRowsAgainstLoaded(firstSeen, keyName, spark,
-        indexPath, excludeAppend = Some(s"$jobKey-$batchId"))
-      .localCheckpoint() // feeds the sink write AND the keyed append
+    // feeds the sink write AND the keyed append
+    val fresh = Pin(BloomGate.newRowsAgainstLoaded(firstSeen, keyName, spark,
+        indexPath, excludeAppend = Some(s"$jobKey-$batchId")))
     fresh.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     BloomGate.appendKeyed(spark, indexPath, fresh, idName, keyName,
       s"$jobKey-$batchId")
@@ -342,8 +341,8 @@ object StreamingOps {
       maxDf: Int = 20)(batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.NearDup
     val spark = batch.sparkSession
-    val b = batch.select(col("doc_id"), col("text"))
-      .localCheckpoint() // feeds the probe join AND the keyed append
+    // feeds the probe join AND the keyed append
+    val b = Pin(batch.select(col("doc_id"), col("text")))
     val key = s"$jobKey-$batchId"
     NearDup.matchAgainstSpanIndex(b, spark, indexPath, maxDf,
         excludeKey = Some(key))
@@ -373,8 +372,8 @@ object StreamingOps {
       batch: DataFrame, batchId: Long): Unit = {
     import graft.operators.SemDedup
     val spark = batch.sparkSession
-    val b = batch.select(col("vec_id"), col("embedding"), col("n2"))
-      .localCheckpoint() // feeds assignment, the probe, and the float write
+    // feeds assignment, the probe, and the float write
+    val b = Pin(batch.select(col("vec_id"), col("embedding"), col("n2")))
     SemDedup.appendBatchKeyed(spark, indexPath, b, baseFloats, threshold,
         s"$jobKey-$batchId")
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
@@ -402,8 +401,7 @@ object StreamingOps {
     import graft.operators.PqIndex
     val spark = batch.sparkSession
     val idx = PqIndex.load(spark, indexPath)
-    val queries = batch.select(col("qid"), col("qv"), col("qn2"))
-      .localCheckpoint()
+    val queries = Pin(batch.select(col("qid"), col("qv"), col("qn2")))
     // IVF-routed when the artifact carries cells (r19 — the r18 verdict's
     // one standing scale-killer: the flat ADC scan is O(corpus) per
     // micro-batch, 160–185 CPU-s/batch at the 10× gate vs <10 for every

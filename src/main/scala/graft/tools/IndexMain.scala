@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.wordShingles
 import graft.functions.VectorFunctions.normSq
-import graft.operators.{ArtifactPaths, BloomGate, BpeTrainer, IvfIndex, NearDup, PqIndex, Tombstones}
+import graft.operators.{ArtifactPaths, BloomGate, BpeTrainer, IvfIndex, NearDup, Pin,
+  PqIndex, Tombstones}
 
 /** CLI surface for the persisted-index lifecycle — the commands a
   * standing pipeline actually runs: build once, append daily, query
@@ -250,16 +251,16 @@ object IndexMain {
     val t0 = System.nanoTime()
     cmd match {
       case "build-pq" =>
-        val e = vectors("mod10gt1").localCheckpoint()
+        val e = Pin(vectors("mod10gt1"))
         val books = PqIndex.train(spark, e, dim = num("dim", 64),
           m = num("m", 8), k = num("k", 16))
         PqIndex.save(dir, books, PqIndex.encode(e, books))
       case "build-ivf" =>
-        val e = vectors("mod10gt1").localCheckpoint()
+        val e = Pin(vectors("mod10gt1"))
         val cents = IvfIndex.centroids(spark, e, num("k", 16))
         IvfIndex.save(dir, cents, IvfIndex.assign(e, cents))
       case "build-ivfpq" =>
-        val e = vectors("mod10gt1").localCheckpoint()
+        val e = Pin(vectors("mod10gt1"))
         val cents = IvfIndex.centroids(spark, e, num("cells", 16))
         val books = PqIndex.train(spark, e, dim = num("dim", 64),
           m = num("m", 8), k = num("k", 16))
@@ -267,7 +268,7 @@ object IndexMain {
           PqIndex.encode(IvfIndex.assign(e, cents), books), Some(cents))
       case "build-sq8" =>
         import graft.operators.Sq8Index
-        val e = vectors("mod10gt1").localCheckpoint()
+        val e = Pin(vectors("mod10gt1"))
         val grid = Sq8Index.train(e)
         Sq8Index.save(dir, grid, Sq8Index.encode(e, grid))
       case "build-jaccard" =>
@@ -279,7 +280,7 @@ object IndexMain {
           fpp = dbl("fpp", 0.01))
       case "build-semdedup" =>
         import graft.operators.SemDedup
-        val e = vectors("mod10gt1").localCheckpoint()
+        val e = Pin(vectors("mod10gt1"))
         SemDedup.save(dir, e, num("k", SemDedup.cellsFor(e.count())),
           num("nprobe", 3))
       case "build-span" =>
@@ -652,7 +653,7 @@ object IndexMain {
         // BpeTrainer) and persist them as the vocab artifact (meta-last)
         val words = withSplit(graft.Tables.documents(spark, sfDir),
           "doc_id", "all")
-        val wf = BpeTrainer.wordFreq(words, col("text")).localCheckpoint()
+        val wf = Pin(BpeTrainer.wordFreq(words, col("text")))
         val n = wf.count()
         val merges = BpeTrainer.train(wf, num("k", 10))
         BpeTrainer.saveVocab(spark, dir, merges, n)

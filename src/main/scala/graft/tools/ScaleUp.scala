@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Pin
 
 /** Deterministic fixture scale-up for stress passes (SCALE.md §stress).
   *
@@ -107,7 +108,7 @@ object ScaleUp {
       // hot join key: 10% of lineitem rows point at supplier 1 / part 1
       // (written after the replicated base so the override covers every
       // replica); deterministic on the orderkey so re-runs are identical
-      val li = spark.read.parquet(s"$out/lineitem.parquet").localCheckpoint()
+      val li = Pin(spark.read.parquet(s"$out/lineitem.parquet"))
       li.withColumn("l_suppkey",
           when(pmod(col("l_orderkey"), lit(10)) === 7, lit(1L))
             .otherwise(col("l_suppkey")))

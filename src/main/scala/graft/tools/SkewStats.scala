@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.Pin
 
 /** Skew probe for the hot-key classes the planted-skew stress targets
   * (SCALE.md §skew): one JSON line of the fixture's ACTUAL skew numbers —
@@ -24,7 +25,7 @@ object SkewStats {
 
     def hashStats(hashed: org.apache.spark.sql.DataFrame, bands: Int)
         : (Long, Long, Long) = {
-      val h = hashed.select(col("h")).localCheckpoint()
+      val h = Pin(hashed.select(col("h")))
       val classes = hashed.groupBy(col("h")).agg(count(lit(1)).as("m"))
         .agg(count(lit(1)), max(col("m"))).collect()(0)
       val width = 64 / bands
@@ -53,17 +54,15 @@ object SkewStats {
       graft.operators.HammingBands.trimExposure(hashed, bands)
 
     val docs = graft.Tables.documents(spark, dir)
-    val simHashed = docs.select(col("doc_id").as("id"),
-      graft.functions.TextFunctions.simHash(col("text")).as("h"))
-      .localCheckpoint()
+    val simHashed = Pin(docs.select(col("doc_id").as("id"),
+      graft.functions.TextFunctions.simHash(col("text")).as("h")))
     val (simDistinct, simMaxClass, simMaxBandDf) = hashStats(simHashed, 4)
     val (simOverKeys, simExposure, simExposureShare) =
       overCapExposure(simHashed, 4)
 
-    val phHashed = graft.operators.Multimodal.hashMedia(
+    val phHashed = Pin(graft.operators.Multimodal.hashMedia(
         graft.operators.Multimodal.pictureTable(spark, dir))
-      .select(col("media_id").as("id"), col("ph").as("h"))
-      .localCheckpoint()
+      .select(col("media_id").as("id"), col("ph").as("h")))
     val (phDistinct, phMaxClass, phMaxBandDf) = hashStats(phHashed,
       graft.operators.Multimodal.PhashBands)
     val (phOverKeys, phExposure, phExposureShare) = overCapExposure(
