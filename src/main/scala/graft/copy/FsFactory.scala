@@ -2,7 +2,7 @@ package graft.copy
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Per-namespace Hadoop configuration factory with memoization
   * (reference/service/HdfsFileSystemFactory.java:22-60 semantics):
@@ -38,10 +38,4 @@ final class FsFactory(confBasedir: String, secure: Boolean = false) {
     }
     conf
   }
-
-  def fileSystem(namespace: String, uri: java.net.URI): FileSystem =
-    FileSystem.get(uri, configuration(namespace))
-
-  def fileSystemFor(namespace: String, path: String): FileSystem =
-    new Path(path).getFileSystem(configuration(namespace))
 }

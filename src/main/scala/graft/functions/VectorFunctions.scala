@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Sequential left-fold sum of an expression over zipped elements. */
-  private def foldSum(zipped: Column): Column =
-    aggregate(zipped, lit(0.0), (acc, x) => acc + x)
-
   /** Dot product via the native codegen'd expression (graft.plans
     * .FloatVecDot): identical semantics to the higher-order fold
     * (sequential double sum), ~100× less per-pair overhead inside
@@ -71,12 +67,6 @@ object VectorFunctions {
     val nn = norm(a) * norm(b)
     when(nn === 0.0, 0.0).otherwise(d / nn)
   }
-
-  def euclideanSq(a: Column, b: Column): Column =
-    foldSum(zip_with(a, b, (x, y) => {
-      val diff = x.cast("double") - y.cast("double")
-      diff * diff
-    }))
 
   /** Deterministic random-hyperplane (SimHash-style) LSH bucket ids for a
     * vector, all hash tables in one native pass (graft.plans.LshBuckets):

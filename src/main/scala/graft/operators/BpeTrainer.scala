@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   * recount at every step). Each iteration `localCheckpoint`s both
   * working tables, truncating lineage so plan depth is O(1) per step
   * rather than O(k) (the q_pagerank pattern). The only driver-side data
-  * movement is the 1-row top-pair collect per iteration.
+  * movement is the top pair, which each stats pin observes on its own
+  * job: the loop runs no query of its own.
   *
   * Greedy-rewrite equivalence: the fold below merges (a,b) whenever the
   * last emitted symbol is exactly `a` and the incoming symbol is
@@ -90,22 +91,22 @@ object BpeTrainer {
     * learned merges in order. Stops early when no pair remains.
     */
   def train(words: DataFrame, k: Int): Seq[Merge] = {
+    // the argmax pair with the (freq DESC, lhs, rhs) tiebreak, observed on
+    // each stats pin; NULL when no pair is left
+    val top = Seq(min_by(struct(col("lhs"), col("rhs"), col("pair_freq")),
+      struct(-col("pair_freq"), col("lhs"), col("rhs"))).as("top"))
     var syms = Pin(words
       .select(col("freq"), split(col("word"), "").as("seq")))
-    var stats = Pin(pairCounts(syms))
+    var stats = Pin(pairCounts(syms), "BpeTrainer.train", top)
     val merges = Seq.newBuilder[Merge]
     var step = 0
     var done = false
     while (step < k && !done) {
-      // 1-row driver collect: the argmax pair, deterministic tiebreak
-      val top = stats
-        .orderBy(col("pair_freq").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.isEmpty) done = true
+      val best = stats.metrics.getStruct(0)
+      if (best == null) done = true
       else {
         step += 1
-        val (a, b, f) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+        val (a, b, f) = (best.getString(0), best.getString(1), best.getLong(2))
         merges += Merge(step, a, b, f)
         // incremental stats: only words containing (a,b) change.
         // r19 opt: ONE rewrite pass — the r18 shape evaluated
@@ -123,10 +124,10 @@ object BpeTrainer {
           .union(pairCounts(changed.select(col("freq"), col("seq")))
             .withColumn("pair_freq", -col("pair_freq")))
         syms = merged.select(col("freq"), col("seq2").as("seq"))
-        stats = Pin(stats.union(delta)
+        stats = Pin(stats.frame.union(delta)
           .groupBy(col("lhs"), col("rhs"))
           .agg(sum(col("pair_freq")).as("pair_freq"))
-          .filter(col("pair_freq") > 0))
+          .filter(col("pair_freq") > 0), "BpeTrainer.train", top)
       }
     }
     merges.result()

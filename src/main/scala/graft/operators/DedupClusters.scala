@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * label graph (label := label of label). The shortcut halves path lengths
   * each round, so convergence is O(log diameter) rather than O(diameter):
   * a 1000-doc near-dup chain resolves in ~10 iterations, not 1000. Each
-  * iteration is a bounded number of shuffles on doc_id, lineage is
-  * truncated per round (localCheckpoint) and superseded generations are
-  * unpersisted. Only the convergence counter touches the driver.
+  * iteration is a bounded number of shuffles on doc_id and lineage is
+  * truncated per round (a pin). Only the convergence counter touches the
+  * driver.
   */
 object DedupClusters {
 
@@ -57,14 +57,6 @@ object DedupClusters {
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct(), "DedupClusters.components", Seq(count(lit(1)).as("n")))
     val edgesRaw = edgePin.frame // materialized once; iterations re-join it
-    // NOTE on unpersist() here and below: a localCheckpoint's blocks are
-    // NOT freed synchronously by Dataset.unpersist (CacheManager has
-    // nothing cached for them) — they are reclaimed by the ContextCleaner
-    // once the checkpointed RDD is garbage-collected, i.e. when the local
-    // `labels` generation reference drops out of scope at the end of
-    // this method / loop iteration. The calls are kept as intent markers
-    // ("this generation is superseded") and to cover any caller-side
-    // cache; actual memory pressure relief is GC-deferred by design.
     // Size the ITERATION parallelism to the materialized edge count, not
     // the session default: dup-pair graphs are usually a sliver of the
     // corpus (a 500-doc fixture yields ~50 edges; even 100 TB of text
@@ -113,14 +105,12 @@ object DedupClusters {
           ks.iterator.map(k => (k, find(k)))
         }
         .toDF("doc_id", "cluster_id")
-      edgesRaw.unpersist()
       return out
     }
     val parts = math.max(1L, math.min(
       edgesRaw.sparkSession.sparkContext.defaultParallelism.toLong,
       nEdges / 50000 + 1)).toInt
     val edges = Pin(edgesRaw.repartition(parts, col("v")))
-    edgesRaw.unpersist()
     // label = current component candidate (min id seen so far).
     // localCheckpoint (eager) per iteration truncates lineage — without it
     // iteration k's plan nests k join plans and planning itself blows up.
@@ -177,11 +167,9 @@ object DedupClusters {
       // labels only decrease, so label == prev everywhere is a fixed
       // point forever
       converged = next.long("changed") == 0L
-      labels.unpersist() // superseded generation
       labels = next.frame
       i += 1
     }
-    edges.unpersist()
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"DedupClusters.components did not converge after $maxIter iterations; " +

@@ -210,27 +210,31 @@ object HammingBands {
       .filter(col("df") > maxBandDf)
 
   /** Trim-exposure budget (the skew gate's recall guardrail): the pair
-    * mass the df cap declines to generate — Σ df·(df−1)/2 over the
-    * over-cap keys — as (overCapKeys, exposurePairs, share of all
-    * distinct-hash pairs). An upper BOUND on recall exposure (a pair
-    * whose every shared band is trimmed can still surface through
-    * another band or the exact path). The pair sum uses integer `div`:
-    * SQL `/` on longs yields DOUBLE and the getLong read would crash on
-    * the first fixture with a non-empty over-cap set — exactly the
-    * regime the budget exists to measure (r17 ADVICE; the planted case
-    * lives in HammingBandsSpec).
+    * mass the df cap declines to generate over distinct-hash band keys, as
+    * [[overCapExposure]] reports it. An upper BOUND on recall exposure (a
+    * pair whose every shared band is trimmed can still surface through
+    * another band or the exact path).
     */
   def trimExposure(hashed: DataFrame, bands: Int = DefaultBands,
       maxBandDf: Int = DefaultMaxBandDf,
-      keyArity: Int = DefaultKeyArity): (Long, Long, Double) = {
-    val n = hashed.select(col("h")).distinct().count()
-    val over = overCapBandKeys(hashed, bands, maxBandDf, keyArity)
-      .agg(count(lit(1)).as("k"),
-        sum(expr("df*(df-1) div 2")).as("exposure")).collect()(0)
-    val keys = over.getLong(0)
-    val exposure = if (over.isNullAt(1)) 0L else over.getLong(1)
+      keyArity: Int = DefaultKeyArity): (Long, Long, Double) =
+    overCapExposure(overCapBandKeys(hashed, bands, maxBandDf, keyArity),
+      hashed.select(col("h")).distinct().count())
+
+  /** The one trim-exposure tail, shared by every capped family: over the
+    * over-cap key rows `overCap` (a `df` column each) of a set of `n`
+    * members, (overCapKeys, Σ df·(df−1)/2, share of all n·(n−1)/2 member
+    * pairs). The pair sum uses integer `div`: SQL `/` on longs yields
+    * DOUBLE and the getLong read would crash on the first fixture with a
+    * non-empty over-cap set — exactly the regime the budget exists to
+    * measure (the planted cases live in HammingBandsSpec and DedupSpec).
+    */
+  def overCapExposure(overCap: DataFrame, n: Long): (Long, Long, Double) = {
+    val row = overCap.agg(count(lit(1)), sum(expr("df*(df-1) div 2")))
+      .collect()(0)
+    val exposure = if (row.isNullAt(1)) 0L else row.getLong(1)
     val totalPairs = n * (n - 1) / 2
-    (keys, exposure,
+    (row.getLong(0), exposure,
       if (totalPairs == 0) 0.0 else exposure.toDouble / totalPairs)
   }
 

@@ -694,13 +694,6 @@ object Multimodal {
     Tombstones.exclude(all, spark, path, "media_id")
   }
 
-  /** Persisted banding parameter, validated against the probe's
-    * maxHamming (a probe asking for more hamming than the artifact's
-    * banding guarantees would silently lose pairs — refused instead).
-    */
-  def loadPhashBands(spark: SparkSession, path: String): Int =
-    loadPhashBanding(spark, path)._1
-
   /** The artifact's full banding contract: (bands, keyArity). A
     * pre-arity artifact (meta without the column) reads as arity 1 —
     * loaded behavior degrades to the r16 kernel, never breaks.

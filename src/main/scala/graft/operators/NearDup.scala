@@ -57,8 +57,7 @@ object NearDup {
     * classes never charge the budget. The share is an UPPER bound twice
     * over: a trimmed pair can still surface through any uncrowded band,
     * and a pair colliding in several over-cap bands counts once per
-    * band. Integer `div` keeps the sums LongType (the r17 SkewStats
-    * crash shape).
+    * band. The tail is [[HammingBands.overCapExposure]].
     */
   def minhashTrimExposure(docs: DataFrame,
       numHashes: Int = DefaultNumHashes, bands: Int = DefaultBands,
@@ -66,22 +65,15 @@ object NearDup {
       maxBandDf: Int = DefaultBandMaxDf): (Long, Long, Double) = {
     val d0 = Pin(docs.filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"), setClassKey(col("sh")).as("ck")))
-    // feeds the rep count AND the banded restriction
+    // the rep count rides the pin that feeds the banded restriction
     val repIds = Pin(d0.select(col("doc_id"), col("ck"))
-      .groupBy(col("ck")).agg(min(col("doc_id")).as("doc_id")))
-    val n = repIds.count()
-    val row = withBandKeys(d0, numHashes, bands, rowsPerBand)
+      .groupBy(col("ck")).agg(min(col("doc_id")).as("doc_id")),
+      "NearDup.minhashTrimExposure", Seq(count(lit(1)).as("n")))
+    HammingBands.overCapExposure(withBandKeys(d0, numHashes, bands, rowsPerBand)
       .select(col("bandKey"), col("doc_id"))
-      .join(repIds.select(col("doc_id")), "doc_id")
+      .join(repIds.frame.select(col("doc_id")), "doc_id")
       .groupBy(col("bandKey")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxBandDf)
-      .agg(count(lit(1)).as("overKeys"),
-        sum(expr("df*(df-1) div 2")).as("exposure")).collect()(0)
-    val keys = row.getLong(0)
-    val exposure = if (row.isNullAt(1)) 0L else row.getLong(1)
-    val totalPairs = n * (n - 1) / 2
-    (keys, exposure,
-      if (totalPairs == 0) 0.0 else exposure.toDouble / totalPairs)
+      .filter(col("df") > maxBandDf), repIds.long("n"))
   }
 
   /** Append exploded LSH band keys to `docs` (requires a `sh` shingle
@@ -1583,9 +1575,8 @@ object NearDup {
     * An upper bound on recall exposure (a pair sharing an over-cap window
     * can still surface through any other shared window ≤ maxDf); the skew
     * gate asserts ≤ 1% on both planted fixtures so a fixture change
-    * cannot silently trade span recall for the cap. Integer `div` keeps
-    * the sums LongType (SQL `/` on longs is DOUBLE — the r17 SkewStats
-    * crash shape).
+    * cannot silently trade span recall for the cap. The tail is
+    * [[HammingBands.overCapExposure]].
     */
   def spanTrimExposure(docs: DataFrame, spanTokens: Int = DefaultSpanTokens,
       maxDf: Int = 20): (Long, Long, Double) = {
@@ -1593,20 +1584,13 @@ object NearDup {
     // identical texts are identical, so any member stands for the class)
     val distinctTexts = Pin(docs.select(col("text"))
       .groupBy(xxhash64(col("text")).as("tk"))
-      .agg(first(col("text")).as("text"))) // feeds the count AND the window-df pass
-    val n = distinctTexts.count()
-    val row = distinctTexts
+      .agg(first(col("text")).as("text")), // the count rides the pin
+      "NearDup.spanTrimExposure", Seq(count(lit(1)).as("n")))
+    HammingBands.overCapExposure(distinctTexts.frame
       .select(explode(graft.functions.TextFunctions
         .spanKeys(col("text"), spanTokens)).as("wh"))
       .groupBy(col("wh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf)
-      .agg(count(lit(1)).as("overKeys"),
-        sum(expr("df*(df-1) div 2")).as("exposure")).collect()(0)
-    val keys = row.getLong(0)
-    val exposure = if (row.isNullAt(1)) 0L else row.getLong(1)
-    val totalPairs = n * (n - 1) / 2
-    (keys, exposure,
-      if (totalPairs == 0) 0.0 else exposure.toDouble / totalPairs)
+      .filter(col("df") > maxDf), distinctTexts.long("n"))
   }
 
   /** MAXIMAL shared-span width per document pair — the other half of Lee

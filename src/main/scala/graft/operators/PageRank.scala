@@ -19,13 +19,15 @@ import org.apache.spark.sql.functions._
   * Scale posture at 100 TB of events: the transition edge table is
   * O(|event types|²) here, but the loop shape is the web-scale one —
   * per iteration ONE edges⋈ranks shuffle on src (ranks is O(|nodes|)
-  * and rides the same hash partitioning every round) plus two O(|nodes|)
-  * aggregates (dangling mass, convergence delta) that reduce to one
-  * driver row each. `localCheckpoint` after every iteration truncates
-  * lineage, so plan depth stays O(1) in the iteration count
-  * (spec-pinned) instead of growing a join tree per round — the
-  * difference between 40 iterations planning in milliseconds vs
-  * Catalyst re-analyzing a 40-deep self-referential plan.
+  * and rides the same hash partitioning every round) and one pin of the
+  * next ranks. The two scalars the loop reads, the next round's dangling
+  * mass and the L∞ delta against the previous generation (carried as
+  * `r0`), are observed on that pin's own job, as is `n` on the nodes pin:
+  * the loop runs no query of its own. The pin truncates lineage, so plan
+  * depth stays O(1) in the iteration count (spec-pinned) instead of
+  * growing a join tree per round — the difference between 40 iterations
+  * planning in milliseconds vs Catalyst re-analyzing a 40-deep
+  * self-referential plan.
   *
   * Determinism (FIXTURES.md recipe): both double folds — per-dst inflow
   * and the dangling-mass sum — run in SORTED key order via the
@@ -41,11 +43,12 @@ object PageRank {
   final case class Result(ranks: DataFrame, iterations: Int,
       finalDelta: Double)
 
-  /** Sorted-key double fold as an aggregate Column — Σ `v` in ascending
-    * `k` order, bit-reproducible across partitionings.
+  /** Sorted-key double fold as an aggregate Column — Σ `v` over the rows
+    * where `keep` holds, in ascending `k` order, bit-reproducible across
+    * partitionings.
     */
-  private def sortedFold(k: Column, v: Column): Column =
-    aggregate(array_sort(collect_list(struct(k.as("k"), v.as("v")))),
+  private def sortedFold(k: Column, v: Column, keep: Column = lit(true)): Column =
+    aggregate(array_sort(collect_list(when(keep, struct(k.as("k"), v.as("v"))))),
       lit(0.0), (acc, x) => acc + x.getField("v"))
 
   /** Run over a weighted edge table (src, dst, w). Returns converged
@@ -58,36 +61,36 @@ object PageRank {
     val outw = e0.groupBy(col("src"))
       .agg(sum(col("w")).cast("double").as("ow"))
     val e = Pin(e0.join(outw, "src"))
-    val nodes = Pin(e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct())
-    val n = nodes.count().toDouble // O(|nodes|) driver scalar
-    val dangling = Pin(nodes.join(outw.withColumnRenamed("src", "node"),
-      Seq("node"), "left_anti"))
-
-    var ranks = Pin(nodes.withColumn("r", lit(1.0 / n)))
+    // a node is dangling iff it is never a src: min(false, true, …)
+    val nodes = Pin(e0.select(col("src").as("node"), lit(false).as("dangling"))
+      .union(e0.select(col("dst").as("node"), lit(true).as("dangling")))
+      .groupBy(col("node")).agg(min(col("dangling")).as("dangling")),
+      "PageRank.run", Seq(count(lit(1)).as("n")))
+    val n = nodes.long("n").toDouble
+    // each ranks pin observes the dangling mass the next round reads
+    val dmFold = sortedFold(col("node"), col("r"), col("dangling")).as("dm")
+    var ranks = Pin(nodes.frame.withColumn("r", lit(1.0 / n)),
+      "PageRank.run", Seq(dmFold))
     var iter = 0
     var delta = Double.MaxValue
     while (iter < maxIter && delta >= eps) {
       iter += 1
-      // dangling mass this round: one-row sorted fold → driver scalar
-      val dm = dangling.join(ranks, "node")
-        .agg(sortedFold(col("node"), col("r")).as("dm"))
-        .collect()(0).getDouble(0)
-      val contribs = e.join(ranks, col("src") === col("node"))
+      val dm = ranks.metrics.getAs[Double]("dm")
+      val contribs = e.join(ranks.frame, col("src") === col("node"))
         .select(col("dst"), col("src"),
           (col("r") * col("w") / col("ow")).as("c"))
       val inflow = contribs.groupBy(col("dst"))
         .agg(sortedFold(col("src"), col("c")).as("inflow"))
-      val next = Pin(nodes.join(inflow, col("node") === col("dst"), "left")
-        .select(col("node"),
+      // L∞ delta (max is fold-order-independent) against `r0`, which the
+      // metrics read and the pin does not store
+      ranks = Pin(ranks.frame.join(inflow, col("node") === col("dst"), "left")
+        .select(col("node"), col("dangling"), col("r").as("r0"),
           (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("inflow"), lit(0.0)) + lit(dm / n))).as("r")))
-      // L∞ delta (max is fold-order-independent): one driver scalar
-      delta = next.join(ranks.withColumnRenamed("r", "r0"), "node")
-        .agg(max(abs(col("r") - col("r0"))).as("d"))
-        .collect()(0).getDouble(0)
-      ranks = next
+            (coalesce(col("inflow"), lit(0.0)) + lit(dm / n))).as("r")),
+        "PageRank.run", Seq(dmFold, max(abs(col("r") - col("r0"))).as("d")),
+        _.drop("r0"))
+      delta = ranks.metrics.getAs[Double]("d")
     }
-    Result(ranks, iter, delta)
+    Result(ranks.frame.select(col("node"), col("r")), iter, delta)
   }
 }

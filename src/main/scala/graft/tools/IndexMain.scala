@@ -653,9 +653,10 @@ object IndexMain {
         // BpeTrainer) and persist them as the vocab artifact (meta-last)
         val words = withSplit(graft.Tables.documents(spark, sfDir),
           "doc_id", "all")
-        val wf = Pin(BpeTrainer.wordFreq(words, col("text")))
-        val n = wf.count()
-        val merges = BpeTrainer.train(wf, num("k", 10))
+        val wf = Pin(BpeTrainer.wordFreq(words, col("text")), "train-bpe",
+          Seq(count(lit(1)).as("n")))
+        val n = wf.long("n")
+        val merges = BpeTrainer.train(wf.frame, num("k", 10))
         BpeTrainer.saveVocab(spark, dir, merges, n)
         println(s"""{"merges":${merges.size},"words":$n}""")
 

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.operators.Pin
+import graft.operators.{HammingBands, Pin}
 
 /** Skew probe for the hot-key classes the planted-skew stress targets
   * (SCALE.md §skew): one JSON line of the fixture's ACTUAL skew numbers —
@@ -25,47 +25,31 @@ object SkewStats {
 
     def hashStats(hashed: org.apache.spark.sql.DataFrame, bands: Int)
         : (Long, Long, Long) = {
-      val h = Pin(hashed.select(col("h")))
       val classes = hashed.groupBy(col("h")).agg(count(lit(1)).as("m"))
         .agg(count(lit(1)), max(col("m"))).collect()(0)
-      val width = 64 / bands
-      val mask = (1L << width) - 1L
-      val banded = h.distinct().select(col("h"),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("h"), b * width).bitwiseAND(lit(mask)).as("key"))): _*))
-          .as("bk"))
-      val maxDf = banded.groupBy(col("bk.band"), col("bk.key"))
-        .agg(count(lit(1)).as("df")).agg(max(col("df"))).collect()(0)
+      val maxDf = HammingBands.overCapBandKeys(hashed, bands, 0, 1)
+        .agg(max(col("df"))).collect()(0)
       (classes.getLong(0), classes.getLong(1),
         if (maxDf.isNullAt(0)) 0L else maxDf.getLong(0))
     }
-
-    // Trim-exposure budget (r17 task 7): the pair mass the df cap
-    // declines to generate, as a share of all distinct-hash pairs — the
-    // gate asserts it stays below a declared fraction so a fixture
-    // change cannot silently trade recall for the cap. Lives in
-    // HammingBands.trimExposure (r18 — the in-main copy crashed on a
-    // non-empty over-cap set: long `/` is DOUBLE in Spark SQL; the
-    // shared kernel uses integer `div` and is spec-pinned on a
-    // saturated fixture).
-    def overCapExposure(hashed: org.apache.spark.sql.DataFrame,
-        bands: Int): (Long, Long, Double) =
-      graft.operators.HammingBands.trimExposure(hashed, bands)
 
     val docs = graft.Tables.documents(spark, dir)
     val simHashed = Pin(docs.select(col("doc_id").as("id"),
       graft.functions.TextFunctions.simHash(col("text")).as("h")))
     val (simDistinct, simMaxClass, simMaxBandDf) = hashStats(simHashed, 4)
+    // Trim-exposure budget: the pair mass the df cap declines to
+    // generate, as a share of all distinct-hash pairs — the gate asserts
+    // it stays below a declared fraction so a fixture change cannot
+    // silently trade recall for the cap.
     val (simOverKeys, simExposure, simExposureShare) =
-      overCapExposure(simHashed, 4)
+      HammingBands.trimExposure(simHashed, 4)
 
     val phHashed = Pin(graft.operators.Multimodal.hashMedia(
         graft.operators.Multimodal.pictureTable(spark, dir))
       .select(col("media_id").as("id"), col("ph").as("h")))
     val (phDistinct, phMaxClass, phMaxBandDf) = hashStats(phHashed,
       graft.operators.Multimodal.PhashBands)
-    val (phOverKeys, phExposure, phExposureShare) = overCapExposure(
+    val (phOverKeys, phExposure, phExposureShare) = HammingBands.trimExposure(
       phHashed, graft.operators.Multimodal.PhashBands)
 
     val spanMaxDf = docs

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.graft.ListenerFlush
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -37,6 +40,27 @@ trait SparkSpec extends AnyFunSuite with Matchers {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
     }
+  }
+
+  /** `body`'s result and the number of query executions that finished
+    * while it ran, counted by a `QueryExecutionListener` on the shared
+    * session.
+    */
+  def queryExecutionsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val tap = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        n.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        n.incrementAndGet()
+    }
+    ListenerFlush.waitUntilEmpty(spark.sparkContext, 60000)
+    spark.listenerManager.register(tap)
+    try {
+      val r = body
+      ListenerFlush.waitUntilEmpty(spark.sparkContext, 60000)
+      (r, n.get)
+    } finally spark.listenerManager.unregister(tap)
   }
 
   def tmpDir(prefix: String): java.nio.file.Path = {

@@ -29,6 +29,13 @@ class BpeTrainerSpec extends SparkSpec {
       Merge(1, "e", "s", 9L), Merge(2, "es", "t", 9L), Merge(3, "l", "o", 7L))
   }
 
+  test("the top pair rides the stats pin: k merges record at most " +
+      "2k + 3 query executions") {
+    val (merges, qes) = queryExecutionsDuring(BpeTrainer.train(sennrich, 3))
+    merges should have size 3
+    qes should be <= 2 * 3 + 3
+  }
+
   test("greedy rewrite is left-to-right non-overlapping") {
     // aaaa under merge (a,a) → [aa][aa]; aaa → [aa][a]
     BpeTrainer.train(words("aaaa" -> 1L, "aaa" -> 1L), 2) shouldBe Seq(

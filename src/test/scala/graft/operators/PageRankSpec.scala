@@ -88,6 +88,17 @@ class PageRankSpec extends SparkSpec {
     planNodes should be < 10
   }
 
+  test("the loop's scalars ride its pins: a converged run records at " +
+      "most iterations + 5 query executions") {
+    val edges = edgesDf(fixture: _*)
+    val (res, qes) = queryExecutionsDuring(
+      PageRank.run(spark, edges, eps = 1e-12, maxIter = 100))
+    val (_, expIter, expDelta) = reference(fixture, 0.85, 1e-12, 100)
+    res.iterations shouldBe expIter
+    res.finalDelta shouldBe expDelta
+    qes should be <= res.iterations + 5
+  }
+
   test("dangling-node graph: isolated sink still gets (1-d)/n + d*dm/n") {
     // star into a sink: all mass flows to b, then redistributes
     val res = PageRank.run(spark,
